@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.model import (
@@ -131,12 +131,14 @@ def with_partition_cols(enriched: DataFrame) -> DataFrame:
     (jq ``strftime "%Y"/"%m"/"%d"/"%H"`` — kinesis-stack.ts:153-154).
     """
     ts = F.to_timestamp(F.from_unixtime(F.col("timestamp")))
-    return (
-        enriched.withColumn("tenant", F.col("TenantId"))
-        .withColumn("year", F.date_format(ts, "yyyy"))
-        .withColumn("month", F.date_format(ts, "MM"))
-        .withColumn("day", F.date_format(ts, "dd"))
-        .withColumn("hour", F.date_format(ts, "HH"))
+    return enriched.withColumns(
+        {
+            "tenant": F.col("TenantId"),
+            "year": F.date_format(ts, "yyyy"),
+            "month": F.date_format(ts, "MM"),
+            "day": F.date_format(ts, "dd"),
+            "hour": F.date_format(ts, "HH"),
+        }
     )
 
 
@@ -146,12 +148,20 @@ def ingest_batch(
     json_col: str = "raw",
     ingest_ts: int | None = None,
     strict_types: bool = True,
+    observation: Observation | None = None,
 ) -> IngestResult:
     """Full batch ingest: validate (A8) → split (A5) → enrich (A2) → partition cols (A4).
 
     Works on a batch or streaming DataFrame of raw JSON strings.
+
+    ``observation`` (batch frames only) counts the rows routed to
+    quarantine as ``n_quarantined`` while the first action on either
+    output runs, so a caller that writes ``valid`` first learns whether
+    the quarantine is empty without scanning it.
     """
     checked = validate_raw(raw, json_col=json_col, strict_types=strict_types)
+    if observation is not None:
+        checked = checked.observe(observation, F.count_if(~F.col("_valid")).alias("n_quarantined"))
     # carry the (server-side) tenant identity into quarantine when present:
     # without it dead-lettered records can never be re-attributed on a
     # reprocess (lake.reprocess_quarantine) — the reference's error/ dir

@@ -139,21 +139,20 @@ def write_lake_overwrite_partitions(
     """Idempotent batch re-run: dynamically overwrite ONLY the partitions
     present in ``df`` (sibling partitions untouched). The reference has no
     replay story at all; this is the engine's reprocessing primitive.
+
+    The dynamic mode is a per-write option, so the shared session's
+    ``spark.sql.sources.partitionOverwriteMode`` is never touched and a
+    concurrent static overwrite on the same session keeps its meaning.
     """
     pcols = partition_cols or PARTITION_COLS
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(*[F.col(c) for c in pcols])
-            .write.mode("overwrite")
-            .partitionBy(*pcols)
-            .format(fmt)
-            .save(root)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.repartition(*[F.col(c) for c in pcols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*pcols)
+        .format(fmt)
+        .save(root)
+    )
 
 
 def _recover_rename_swap(root: str, old: str) -> bool:

@@ -75,6 +75,18 @@ def observed_stream(
     )
 
 
+def observed_count(obs: Observation, metric: str) -> int | None:
+    """One count metric of an attached Observation, waiting for the first
+    action on the observed frame to finish; None when that action reported
+    no metrics. Spark then completes the observation with an empty row, on
+    which ``Observation.get`` fails. It happens when the action ran no task
+    (empty input, e.g. a zero-byte landing file), and when adaptive
+    execution replaced the rest of the plan with an empty relation after
+    the observed stage ran (e.g. a filter above it that kept no row)."""
+    value = obs._jo.getAsJava().get(metric)
+    return None if value is None else int(value)
+
+
 def observed_result(df: DataFrame, name: str = "result_metrics") -> tuple[DataFrame, Observation]:
     """Attach output-side metrics (row count) to any query result — the
     'rows returned' half of a query log entry, measured in-flight."""

@@ -50,6 +50,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Above 32 paths (Spark's default) a file listing runs as a Spark
+        # job with one task per path. On local[N] that job costs far more
+        # than listing on the driver: 0.41 s vs 0.06 s for 40 local files,
+        # 7.3 s vs 0.35 s for 2,000 (4 vCPUs). A streaming micro-batch over
+        # more than 32 landing files would otherwise pay it every trigger.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -122,14 +122,27 @@ def read_lake(
     return df.drop("_epoch")
 
 
+#: byte bound on one streaming micro-batch: 64 MiB, Firehose's minimum
+#: size buffer when dynamic partitioning is on (kinesis-stack.ts:140-142)
+MAX_BYTES_PER_TRIGGER = 64 * 1024 * 1024
+
+
 def stream_json_source(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """File-based streaming source standing in for the Kinesis consumer (A1).
 
-    ``maxFilesPerTrigger`` bounds micro-batch size the way Kinesis shard
-    polling bounds the Flink source's per-fetch records.
+    Micro-batches are bounded by bytes, not file count: each trigger takes
+    new files until their total size would pass ``MAX_BYTES_PER_TRIGGER``
+    (always at least one file). This is the size half of the reference's
+    Firehose buffer, which flushes on whichever of 64 MiB or the interval
+    comes first (kinesis-stack.ts:140-142); the trigger interval is the
+    time half. Steady traffic yields the same small batches a file cap
+    would, while a backlog drains in a few large batches instead of many
+    capped ones, each paying the sink's fixed per-batch cost.
     """
     return (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "16").json(path)
+        spark.readStream.schema(schema)
+        .option("maxBytesPerTrigger", str(MAX_BYTES_PER_TRIGGER))
+        .json(path)
     )
 
 

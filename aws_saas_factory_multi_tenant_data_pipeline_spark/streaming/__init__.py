@@ -15,7 +15,7 @@ Checkpointing stands in for Flink's 60 s checkpoints
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -26,6 +26,7 @@ from aws_saas_factory_multi_tenant_data_pipeline_spark.lake import (
     write_quarantine,
 )
 from aws_saas_factory_multi_tenant_data_pipeline_spark.model import PARTITION_COLS
+from aws_saas_factory_multi_tenant_data_pipeline_spark.observability import observed_count
 from aws_saas_factory_multi_tenant_data_pipeline_spark.tenancy import TenantContext
 
 #: hidden partition column carrying the micro-batch epoch in exactly-once
@@ -83,12 +84,19 @@ def start_ingest_stream(
         # ingest_ts pins the A2 ingest timestamp (and so the A4
         # partition layout) for deterministic replays / the corpus
         # stream_sink_roundtrip oracle; None = wall clock (production)
-        res = ingest_batch(batch_df, tenant, ingest_ts=ingest_ts)
+        quarantined = Observation()
+        res = ingest_batch(batch_df, tenant, ingest_ts=ingest_ts, observation=quarantined)
         if exactly_once:
             epoch_idempotent_write(res.valid, lake_root, epoch_id, fmt=fmt)
         else:
             write_lake(res.valid, lake_root, fmt=fmt)
-        if res.quarantine.limit(1).count() > 0:
+        # counted on the lake write's own pass, so a clean batch creates no
+        # error/ directory without a probe job; an empty or all-malformed
+        # batch reports no metrics and is probed instead
+        n_quarantined = observed_count(quarantined, "n_quarantined")
+        if n_quarantined is None:
+            n_quarantined = res.quarantine.limit(1).count()
+        if n_quarantined > 0:
             write_quarantine(res.quarantine, lake_root, "validation-failed")
 
     writer = raw_stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint)

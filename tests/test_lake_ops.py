@@ -106,6 +106,43 @@ def test_dynamic_partition_overwrite_replay(spark, tmp_path):
     assert len(t1) == 7 and set(t1.event) == {"orig"}
 
 
+def test_dynamic_overwrite_leaves_session_conf_static(spark, tmp_path, monkeypatch):
+    """The dynamic overwrite is a per-write option: the shared session's
+    partitionOverwriteMode reads static while the write runs and after it,
+    and the replay still replaces only the partitions it touches."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.lake import (
+        write_lake_overwrite_partitions,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    seen = []
+    save = DataFrameWriter.save
+
+    def spy(self, *args, **kwargs):
+        seen.append(spark.conf.get(key).lower())
+        return save(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "save", spy)
+
+    def batch(tenant, event):
+        raw = spark.createDataFrame(
+            [(tenant, json.dumps({"Data": {"device": "TV", "event": event, "region": "US"}}))],
+            "tenant_id string, raw string",
+        )
+        return ingest_batch(raw, ingest_ts=1700000000).valid
+
+    root = str(tmp_path / "lake")
+    write_lake_overwrite_partitions(batch("t0", "orig"), root)
+    write_lake_overwrite_partitions(batch("t1", "orig"), root)
+    write_lake_overwrite_partitions(batch("t0", "fixed"), root)
+    assert seen == ["static"] * 3
+    assert spark.conf.get(key).lower() == "static"
+    got = {(r.tenant, r.event) for r in read_lake(spark, root).collect()}
+    assert got == {("t0", "fixed"), ("t1", "orig")}
+
+
 def test_compaction_recovers_from_crashed_prior_run(spark, tmp_path):
     """Rename-aside swap: a leftover __compact_old tree from a crashed run
     must not break (or double-count in) the next compaction."""

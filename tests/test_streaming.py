@@ -58,6 +58,83 @@ def test_streaming_ingest_pipeline(spark, tmp_path):
     assert err.count() == 1
 
 
+def _land_backlog(src: str, n_files: int = 40, per_file: int = 5) -> int:
+    """A backlog of small landing files with distinct events; returns the
+    number of events landed."""
+    os.makedirs(src, exist_ok=True)
+    for k in range(n_files):
+        with open(os.path.join(src, f"f{k:03d}.json"), "w") as f:
+            for i in range(per_file):
+                payload = {"Data": {"device": "TV", "event": f"e{k}-{i}", "region": "US"}}
+                f.write(json.dumps({"tenant_id": f"t{k % 3}", "raw": json.dumps(payload)}) + "\n")
+    return n_files * per_file
+
+
+def _drain(spark, src: str, lake: str, ckpt: str, **kw) -> list[int]:
+    """Run the ingest stream over ``src`` to completion; returns the input
+    rows of each micro-batch that read data."""
+    q = start_ingest_stream(
+        stream_json_source(spark, src, RAW_SCHEMA), lake, ckpt, available_now=True, **kw
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
+
+
+def _assert_exactly_once(spark, lake: str, n_events: int) -> None:
+    out = read_lake(spark, lake)
+    assert out.count() == n_events
+    assert out.select("event").distinct().count() == n_events
+
+
+def test_backlog_drains_in_one_byte_bounded_batch(spark, tmp_path):
+    """40 small landing files sit far under MAX_BYTES_PER_TRIGGER, so one
+    micro-batch takes the whole backlog."""
+    src, lake = str(tmp_path / "src"), str(tmp_path / "lake")
+    n = _land_backlog(src)
+    assert _drain(spark, src, lake, str(tmp_path / "ckpt")) == [n]
+    _assert_exactly_once(spark, lake, n)
+
+
+def test_byte_bound_splits_backlog(spark, tmp_path, monkeypatch):
+    """A bound of a few KB splits the same backlog into several batches;
+    every event still lands exactly once, on the exactly-once sink."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark import sources
+
+    monkeypatch.setattr(sources, "MAX_BYTES_PER_TRIGGER", 4096)
+    src, lake = str(tmp_path / "src"), str(tmp_path / "lake")
+    n = _land_backlog(src)
+    batches = _drain(spark, src, lake, str(tmp_path / "ckpt"), exactly_once=True)
+    assert len(batches) >= 3 and sum(batches) == n
+    _assert_exactly_once(spark, lake, n)
+
+
+def test_clean_batch_writes_no_quarantine(spark, tmp_path):
+    """A micro-batch without malformed rows creates no error/ directory,
+    and one with a malformed row still quarantines it."""
+    src, lake, ckpt = str(tmp_path / "src"), str(tmp_path / "lake"), str(tmp_path / "ckpt")
+    n = _land_backlog(src, n_files=3)
+    _drain(spark, src, lake, ckpt)
+    _assert_exactly_once(spark, lake, n)
+    assert not os.path.exists(os.path.join(lake, "error"))
+
+    with open(os.path.join(src, "bad.json"), "w") as f:
+        f.write(json.dumps({"tenant_id": "t0", "raw": "{oops"}) + "\n")
+    _drain(spark, src, lake, ckpt)
+    err = spark.read.json(os.path.join(lake, "error", "validation-failed"))
+    assert [r["raw_record"] for r in err.collect()] == ["{oops"]
+
+
+def test_zero_byte_landing_file_is_a_noop_batch(spark, tmp_path):
+    """An empty landing file runs a batch whose lake write has no task;
+    the sink must read that as nothing to quarantine, not fail."""
+    src, lake = str(tmp_path / "src"), str(tmp_path / "lake")
+    os.makedirs(src)
+    open(os.path.join(src, "empty.json"), "w").close()
+    _drain(spark, src, lake, str(tmp_path / "ckpt"))
+    assert not os.path.exists(os.path.join(lake, "error"))
+
+
 def test_streaming_tumbling_window_matches_batch(spark, tmp_path):
     """Streaming windowed agg == batch windowed agg on the same data."""
     from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
