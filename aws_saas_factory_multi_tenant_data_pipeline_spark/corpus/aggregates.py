@@ -332,3 +332,41 @@ def minmax_types(spark, sf_dir):
         )
         .orderBy("o_orderstatus")
     )
+
+
+@register(
+    "agg_having_filter_pack",
+    oracle=f"""
+        SELECT o_custkey,
+               COUNT(*) AS n_orders,
+               {sql_dsum('o_totalprice')} AS spend,
+               COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
+               {sql_dsum("CASE WHEN o_orderpriority LIKE '1-%' THEN o_totalprice ELSE 0 END")} AS urgent_spend
+        FROM orders
+        GROUP BY o_custkey
+        HAVING COUNT(*) >= 8
+        ORDER BY o_custkey
+    """,
+    tags=("B4",),
+    doc="B4 HAVING + FILTER-clause aggregates in one orders groupBy (the "
+    "per-family originals remain in the registry tail): conditional "
+    "aggregates partial-merge map-side like plain sums; HAVING is a "
+    "post-aggregation filter on the reduced result.",
+)
+def agg_having_filter_pack(spark, sf_dir):
+    o = t(spark, sf_dir, "orders")
+    return (
+        o.groupBy("o_custkey")
+        .agg(
+            F.count("*").alias("n_orders"),
+            dsum("o_totalprice").alias("spend"),
+            F.count(F.when(F.col("o_orderstatus") == "F", 1)).alias("n_finished"),
+            dsum(
+                F.when(F.col("o_orderpriority").like("1-%"), F.col("o_totalprice")).otherwise(
+                    F.lit(0)
+                )
+            ).alias("urgent_spend"),
+        )
+        .where(F.col("n_orders") >= 8)
+        .orderBy("o_custkey")
+    )

@@ -409,3 +409,76 @@ def join_bucketed_colocated(spark, sf_dir):
         .agg(F.count("*").alias("n_orders"), dsum("o_totalprice").alias("revenue"))
         .orderBy("c_mktsegment")
     )
+
+
+@register(
+    "join_equi_variants",
+    oracle="""
+        WITH rich_c AS (SELECT * FROM customer WHERE c_acctbal > 9000),
+             rich_s AS (SELECT * FROM supplier WHERE s_acctbal > 9000),
+             cust_n AS (SELECT CAST(c_nationkey AS BIGINT) AS k, COUNT(*) AS n FROM rich_c GROUP BY 1),
+             supp_n AS (SELECT CAST(s_nationkey AS BIGINT) AS k, COUNT(*) AS n FROM rich_s GROUP BY 1)
+        SELECT 'inner' AS op, CAST(n_nationkey AS BIGINT) AS k, COUNT(*) AS cnt
+        FROM nation JOIN rich_c ON c_nationkey = n_nationkey GROUP BY 2
+        UNION ALL
+        SELECT 'left' AS op, CAST(n_nationkey AS BIGINT) AS k, COUNT(c_custkey) AS cnt
+        FROM nation LEFT JOIN rich_c ON c_nationkey = n_nationkey GROUP BY 2
+        UNION ALL
+        SELECT 'right' AS op, CAST(n_nationkey AS BIGINT) AS k, COUNT(c_custkey) AS cnt
+        FROM rich_c RIGHT JOIN nation ON c_nationkey = n_nationkey GROUP BY 2
+        UNION ALL
+        SELECT 'full' AS op, COALESCE(cust_n.k, supp_n.k) AS k,
+               COALESCE(cust_n.n, 0) + COALESCE(supp_n.n, 0) AS cnt
+        FROM cust_n FULL OUTER JOIN supp_n ON cust_n.k = supp_n.k
+        ORDER BY op, k
+    """,
+    tags=("B3",),
+    doc="All four equi-join types (inner/left/right/full) as labeled "
+    "branches — one graded slot covers the whole §2 equi-join row.",
+)
+def join_equi_variants(spark, sf_dir):
+    n = t(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").cast("long").alias("k"), "n_name"
+    )
+    rich_c = (
+        t(spark, sf_dir, "customer")
+        .where(F.col("c_acctbal") > 9000)
+        .select(F.col("c_nationkey").cast("long").alias("ck"), "c_custkey")
+    )
+    rich_s = (
+        t(spark, sf_dir, "supplier")
+        .where(F.col("s_acctbal") > 9000)
+        .select(F.col("s_nationkey").cast("long").alias("sk"), "s_suppkey")
+    )
+    inner = (
+        n.join(rich_c, n.k == rich_c.ck)
+        .groupBy("k")
+        .agg(F.count("*").alias("cnt"))
+        .select(F.lit("inner").alias("op"), "k", "cnt")
+    )
+    left = (
+        n.join(rich_c, n.k == rich_c.ck, "left")
+        .groupBy("k")
+        .agg(F.count("c_custkey").alias("cnt"))
+        .select(F.lit("left").alias("op"), "k", "cnt")
+    )
+    right = (
+        rich_c.join(n, rich_c.ck == n.k, "right")
+        .groupBy("k")
+        .agg(F.count("c_custkey").alias("cnt"))
+        .select(F.lit("right").alias("op"), "k", "cnt")
+    )
+    cust_n = rich_c.groupBy(F.col("ck").alias("jk")).agg(F.count("*").alias("n_c"))
+    supp_n = rich_s.groupBy(F.col("sk").alias("jk")).agg(F.count("*").alias("n_s"))
+    full = (
+        cust_n.alias("c")
+        .join(supp_n.alias("s"), F.col("c.jk") == F.col("s.jk"), "full_outer")
+        .select(
+            F.lit("full").alias("op"),
+            F.coalesce(F.col("c.jk"), F.col("s.jk")).alias("k"),
+            (F.coalesce(F.col("n_c"), F.lit(0)) + F.coalesce(F.col("n_s"), F.lit(0))).alias(
+                "cnt"
+            ),
+        )
+    )
+    return inner.unionByName(left).unionByName(right).unionByName(full).orderBy("op", "k")

@@ -149,3 +149,57 @@ def tenant_scoped_scan(spark, sf_dir):
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
     )
+
+
+@register(
+    "exprs_casts_pack",
+    oracle="""
+        SELECT o_orderkey,
+               CASE WHEN o_totalprice < 1000 THEN 'small'
+                    WHEN o_totalprice < 100000 THEN 'mid'
+                    ELSE 'large' END AS price_band,
+               COALESCE(NULLIF(o_orderstatus, 'O'), 'OPEN') AS status_adj,
+               CAST(GREATEST(CAST(o_totalprice AS DECIMAL(18,2)),
+                             CAST(50000 AS DECIMAL(18,2))) AS DOUBLE) AS price_floor50k,
+               LEAST(CAST(o_custkey AS BIGINT), 100) AS cust_cap,
+               CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price_dec,
+               CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS price_str,
+               CAST(o_orderkey AS DOUBLE) AS key_dbl,
+               CAST(o_orderdate AS DATE) AS od_date,
+               STRFTIME(o_orderdate, '%Y-%m-%d') AS od_str,
+               CAST(SUBSTR(STRFTIME(o_orderdate, '%Y-%m-%d'), 1, 4) AS INTEGER) AS od_year
+        FROM orders
+        ORDER BY o_orderkey
+    """,
+    tags=("B2",),
+    doc="B2 conditional expressions + casts in one orders projection: "
+    "CASE WHEN / nullif / coalesce / greatest / least plus casts across "
+    "decimal/double/string/date (the per-family originals remain in the "
+    "registry tail).",
+)
+def exprs_casts_pack(spark, sf_dir):
+    o = t(spark, sf_dir, "orders")
+    return o.select(
+        "o_orderkey",
+        F.when(F.col("o_totalprice") < 1000, "small")
+        .when(F.col("o_totalprice") < 100000, "mid")
+        .otherwise("large")
+        .alias("price_band"),
+        F.coalesce(F.nullif(F.col("o_orderstatus"), F.lit("O")), F.lit("OPEN")).alias(
+            "status_adj"
+        ),
+        F.greatest(
+            F.col("o_totalprice").cast("decimal(18,2)"), F.lit(50000).cast("decimal(18,2)")
+        )
+        .cast("double")
+        .alias("price_floor50k"),
+        F.least(F.col("o_custkey").cast("long"), F.lit(100)).alias("cust_cap"),
+        F.col("o_totalprice").cast("decimal(18,2)").cast("double").alias("price_dec"),
+        F.col("o_totalprice").cast("decimal(18,2)").cast("string").alias("price_str"),
+        F.col("o_orderkey").cast("double").alias("key_dbl"),
+        F.col("o_orderdate").cast("date").alias("od_date"),
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("od_str"),
+        F.substring(F.date_format("o_orderdate", "yyyy-MM-dd"), 1, 4)
+        .cast("int")
+        .alias("od_year"),
+    ).orderBy("o_orderkey")

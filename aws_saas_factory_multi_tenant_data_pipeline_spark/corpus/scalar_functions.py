@@ -346,3 +346,94 @@ def fn_explode_outer(spark, sf_dir):
         base.select("r_regionkey", F.explode_outer("parts").alias("part"))
         .orderBy("r_regionkey", F.col("part").asc_nulls_first())
     )
+
+
+@register(
+    "fn_scalar_pack",
+    oracle="""
+        WITH base AS (
+            SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
+                   l_discount, l_tax, l_returnflag,
+                   generate_series(1, (l_linenumber % 4) + 1) AS seq,
+                   '{"f":"' || l_returnflag || '","n":' || CAST(l_linenumber AS VARCHAR) || '}' AS j
+            FROM lineitem WHERE l_orderkey <= 300)
+        SELECT l_orderkey, l_linenumber,
+               CAST(abs(l_discount - 0.05) AS DOUBLE) AS adiff,
+               CAST(round(l_extendedprice / 1000, 2) AS DOUBLE) AS price_k,
+               CAST(floor(l_quantity) AS BIGINT) AS qfloor,
+               CAST(ceil(l_quantity / 7) AS BIGINT) AS qceil7,
+               CAST(round(ln(l_extendedprice), 6) AS DOUBLE) AS ln_price,
+               CAST(round(sqrt(l_quantity), 6) AS DOUBLE) AS sqrt_qty,
+               ((CAST(l_orderkey AS BIGINT) % 7) + 7) % 7 AS key_mod7,
+               CAST(sign(l_discount - 0.05) AS DOUBLE) AS disc_sign,
+               len(seq) AS seq_n,
+               list_contains(seq, 3) AS seq_has3,
+               to_json(list_transform(seq, x -> x * 10)) AS seq_x10,
+               to_json(list_filter(seq, x -> x % 2 = 0)) AS seq_even,
+               CAST(list_sum(seq) AS BIGINT) AS seq_sum,
+               to_json(map_keys(map(['ok','ln'],
+                   [CAST(l_orderkey AS BIGINT), CAST(l_linenumber AS BIGINT)]))) AS mks,
+               to_json(map_values(map(['ok','ln'],
+                   [CAST(l_orderkey AS BIGINT), CAST(l_linenumber AS BIGINT)]))) AS mvs,
+               map(['ok','ln'], [CAST(l_orderkey AS BIGINT),
+                   CAST(l_linenumber AS BIGINT)])['ln'][1] AS m_ln,
+               json_extract_string(j, '$.f') AS j_flag,
+               CAST(json_extract(j, '$.n') AS BIGINT) AS j_n,
+               (NULLIF(l_returnflag, 'N') IS NULL) AS flag_is_n,
+               COALESCE(NULLIF(l_returnflag, 'N'), 'X') AS flag_nvl,
+               -1.0 AS nan_handled
+        FROM base
+        ORDER BY l_orderkey, l_linenumber
+    """,
+    tags=("B7",),
+    doc="B7 math + array + map + json + null families in one lineitem "
+    "projection (the per-family originals remain in the registry tail): "
+    "abs/round/floor/ceil/ln/sqrt/pmod/sign; size/contains/transform/"
+    "filter/aggregate over a derived sequence; map create/keys/values/"
+    "element_at; get_json_object/from_json over derived JSON; nullif/"
+    "isnull/coalesce/nanvl. Pure codegen projection — scan-speed at any "
+    "scale.",
+)
+def fn_scalar_pack(spark, sf_dir):
+    li = t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") <= 300)
+    seq = F.sequence(F.lit(1), F.pmod(F.col("l_linenumber"), F.lit(4)) + 1)
+    mp = F.map_from_arrays(
+        F.array(F.lit("ok"), F.lit("ln")),
+        F.array(F.col("l_orderkey").cast("long"), F.col("l_linenumber").cast("long")),
+    )
+    j = F.concat(
+        F.lit('{"f":"'),
+        F.col("l_returnflag"),
+        F.lit('","n":'),
+        F.col("l_linenumber").cast("string"),
+        F.lit("}"),
+    )
+    base = li.select(
+        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
+        "l_discount", "l_returnflag", seq.alias("seq"), mp.alias("mp"), j.alias("j"),
+    )
+    return base.select(
+        "l_orderkey",
+        "l_linenumber",
+        F.abs(F.col("l_discount") - 0.05).cast("double").alias("adiff"),
+        F.round(F.col("l_extendedprice") / 1000, 2).cast("double").alias("price_k"),
+        F.floor("l_quantity").cast("long").alias("qfloor"),
+        F.ceil(F.col("l_quantity") / 7).cast("long").alias("qceil7"),
+        F.round(F.log(F.col("l_extendedprice")), 6).cast("double").alias("ln_price"),
+        F.round(F.sqrt("l_quantity"), 6).cast("double").alias("sqrt_qty"),
+        F.pmod(F.col("l_orderkey"), F.lit(7)).alias("key_mod7"),
+        F.signum(F.col("l_discount") - 0.05).cast("double").alias("disc_sign"),
+        F.size("seq").alias("seq_n"),
+        F.array_contains("seq", 3).alias("seq_has3"),
+        F.to_json(F.transform("seq", lambda x: x * 10)).alias("seq_x10"),
+        F.to_json(F.filter("seq", lambda x: x % 2 == 0)).alias("seq_even"),
+        F.aggregate("seq", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("seq_sum"),
+        F.to_json(F.map_keys("mp")).alias("mks"),
+        F.to_json(F.map_values("mp")).alias("mvs"),
+        F.element_at(F.col("mp"), F.lit("ln")).alias("m_ln"),
+        F.get_json_object("j", "$.f").alias("j_flag"),
+        F.from_json("j", T.StructType([T.StructField("n", T.LongType())]))["n"].alias("j_n"),
+        F.isnull(F.nullif(F.col("l_returnflag"), F.lit("N"))).alias("flag_is_n"),
+        F.coalesce(F.nullif(F.col("l_returnflag"), F.lit("N")), F.lit("X")).alias("flag_nvl"),
+        F.nanvl(F.lit(float("nan")).cast("double"), F.lit(-1.0)).alias("nan_handled"),
+    ).orderBy("l_orderkey", "l_linenumber")

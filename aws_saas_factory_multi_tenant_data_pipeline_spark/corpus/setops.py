@@ -193,3 +193,51 @@ def dedup_keep_first(spark, sf_dir):
         .drop("rn")
         .orderBy("o_custkey")
     )
+
+
+@register(
+    "setop_family",
+    oracle="""
+        WITH cust_k AS (SELECT CAST(c_nationkey AS BIGINT) AS k FROM customer WHERE c_acctbal > 9000),
+             supp_k AS (SELECT CAST(s_nationkey AS BIGINT) AS k FROM supplier WHERE s_acctbal > 9000)
+        SELECT 'uall' AS op, k, COUNT(*) AS n
+        FROM (SELECT k FROM cust_k UNION ALL SELECT k FROM supp_k) GROUP BY k
+        UNION ALL
+        SELECT 'udist' AS op, k, 1 AS n
+        FROM (SELECT k FROM cust_k UNION SELECT k FROM supp_k)
+        UNION ALL
+        SELECT 'intersect' AS op, k, 1 AS n
+        FROM (SELECT k FROM cust_k INTERSECT SELECT k FROM supp_k)
+        UNION ALL
+        SELECT 'except' AS op, k, 1 AS n
+        FROM (SELECT k FROM cust_k EXCEPT SELECT k FROM supp_k)
+        ORDER BY op, k
+    """,
+    tags=("B6",),
+    doc="UNION ALL / UNION / INTERSECT / EXCEPT as labeled branches — one "
+    "graded slot covers both §2 set-operation rows.",
+)
+def setop_family(spark, sf_dir):
+    c = (
+        t(spark, sf_dir, "customer")
+        .where(F.col("c_acctbal") > 9000)
+        .select(F.col("c_nationkey").cast("long").alias("k"))
+    )
+    s = (
+        t(spark, sf_dir, "supplier")
+        .where(F.col("s_acctbal") > 9000)
+        .select(F.col("s_nationkey").cast("long").alias("k"))
+    )
+    uall = (
+        c.unionByName(s)
+        .groupBy("k")
+        .agg(F.count("*").alias("n"))
+        .select(F.lit("uall").alias("op"), "k", "n")
+    )
+    udist = c.unionByName(s).distinct().select(F.lit("udist").alias("op"), "k", F.lit(1).alias("n"))
+    inter = c.intersect(s).select(F.lit("intersect").alias("op"), "k", F.lit(1).alias("n"))
+    exc = c.distinct().subtract(s.distinct()).select(
+        F.lit("except").alias("op"), "k", F.lit(1).alias("n")
+    )
+    out = uall.unionByName(udist).unionByName(inter).unionByName(exc)
+    return out.select("op", "k", F.col("n").cast("long").alias("n")).orderBy("op", "k")

@@ -250,3 +250,65 @@ def catalog_view_ctas(spark, sf_dir):
     rows = out.collect()
     spark.sql("DROP TABLE IF EXISTS orders_prio_ctas")
     return spark.createDataFrame(rows, out.schema).orderBy("o_orderpriority")
+
+
+@register(
+    "scan_formats_roundtrip",
+    oracle=f"""
+        SELECT 'csv' AS fmt, CAST(n_regionkey AS VARCHAR) AS k, COUNT(*) AS n,
+               {sql_dsum('n_nationkey')} AS val
+        FROM nation GROUP BY n_regionkey
+        UNION ALL
+        SELECT 'jsonl' AS fmt, o_orderstatus AS k, COUNT(*) AS n,
+               {sql_dsum('o_totalprice')} AS val
+        FROM orders WHERE o_orderkey <= 2000 GROUP BY o_orderstatus
+        UNION ALL
+        SELECT 'part' AS fmt, event_type || '/' || strftime(ts, '%Y-%m-%d') AS k,
+               COUNT(*) AS n, {sql_dsum('user_id')} AS val
+        FROM events GROUP BY 2
+        ORDER BY fmt, k
+    """,
+    tags=("B1", "A4"),
+    doc="CSV + JSON-lines + hive-partitioned parquet sink/source roundtrips "
+    "as labeled branches — one graded slot covers three §2 B1 rows. Any "
+    "writer/reader loss or partition-discovery break changes the hash.",
+)
+def scan_formats_roundtrip(spark, sf_dir):
+    # csv branch: nation roundtrip
+    n = t(spark, sf_dir, "nation")
+    csv_path = os.path.join(_SCRATCH, "w50_nation_csv")
+    n.write.mode("overwrite").option("header", "true").csv(csv_path)
+    csv_back = read_csv(spark, csv_path, schema=n.schema)
+    csv_b = (
+        csv_back.groupBy(F.col("n_regionkey").cast("string").alias("k"))
+        .agg(F.count("*").alias("n"), dsum("n_nationkey").alias("val"))
+        .select(F.lit("csv").alias("fmt"), "k", "n", "val")
+    )
+    # jsonl branch: orders slice roundtrip
+    o = t(spark, sf_dir, "orders").where(F.col("o_orderkey") <= 2000)
+    jl_path = os.path.join(_SCRATCH, "w50_orders_jsonl")
+    o.write.mode("overwrite").json(jl_path)
+    jl_back = read_json_lines(spark, jl_path, schema=o.schema)
+    jl_b = (
+        jl_back.groupBy(F.col("o_orderstatus").alias("k"))
+        .agg(F.count("*").alias("n"), dsum("o_totalprice").alias("val"))
+        .select(F.lit("jsonl").alias("fmt"), "k", "n", "val")
+    )
+    # partitioned branch: events hive-partitioned write + discovering scan
+    e = t(spark, sf_dir, "events").withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
+    pt_path = os.path.join(_SCRATCH, "w50_events_part")
+    (
+        e.repartition(F.col("event_type"), F.col("day"))
+        .write.mode("overwrite")
+        .partitionBy("event_type", "day")
+        .parquet(pt_path)
+    )
+    pt_back = spark.read.option("basePath", pt_path).parquet(pt_path)
+    pt_b = (
+        pt_back.groupBy(
+            F.concat(F.col("event_type"), F.lit("/"), F.col("day").cast("string")).alias("k")
+        )
+        .agg(F.count("*").alias("n"), dsum("user_id").alias("val"))
+        .select(F.lit("part").alias("fmt"), "k", "n", "val")
+    )
+    return csv_b.unionByName(jl_b).unionByName(pt_b).orderBy("fmt", "k")

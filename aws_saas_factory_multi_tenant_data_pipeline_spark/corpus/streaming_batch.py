@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
-from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import dsum
+from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import dsum, sql_dsum
 from aws_saas_factory_multi_tenant_data_pipeline_spark.streaming import (
     session_counts,
     sliding_counts,
@@ -259,4 +259,169 @@ def stream_stream_join_batch_equiv(spark, sf_dir):
         joined.groupBy("user_id", "purchase_id")
         .agg(F.count("view_id").alias("n_prior_views"))
         .orderBy("user_id", "purchase_id")
+    )
+
+
+@register(
+    "stream_sliding_session",
+    oracle="""
+        WITH starts AS (
+            SELECT event_id, event_type,
+                   unnest([to_timestamp(epoch_us(ts) // 1000000 // 300 * 300),
+                           to_timestamp(epoch_us(ts) // 1000000 // 300 * 300 - 300)]) AS wstart,
+                   ts
+            FROM events),
+        sliding AS (
+            SELECT strftime(wstart, '%Y-%m-%d %H:%M:%S') || '|' || event_type AS k, COUNT(*) AS n
+            FROM starts
+            WHERE ts >= wstart AND ts < wstart + INTERVAL 10 MINUTE
+            GROUP BY 1),
+        ordered AS (
+            SELECT user_id, ts,
+                   CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                             > INTERVAL 30 MINUTE OR
+                             LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                        THEN 1 ELSE 0 END AS new_session
+            FROM events),
+        sessions AS (
+            SELECT user_id, ts,
+                   SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
+            FROM ordered),
+        sess AS (
+            SELECT CAST(user_id AS VARCHAR) || '#' || CAST(session_no AS VARCHAR)
+                   || '@' || strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS k,
+                   COUNT(*) AS n
+            FROM sessions GROUP BY user_id, session_no)
+        SELECT 'sliding' AS kind, k, n FROM sliding
+        UNION ALL
+        SELECT 'session' AS kind, k, n FROM sess
+        ORDER BY kind, k
+    """,
+    tags=("B8",),
+    doc="Sliding (10m/5m) + session (30m gap) windows as labeled branches — "
+    "one graded slot covers both §2 windowed-streaming rows (batch twins of "
+    "streaming/__init__.py sliding_counts/session_counts).",
+)
+def stream_sliding_session(spark, sf_dir):
+    e = t(spark, sf_dir, "events")
+    sliding = sliding_counts(e).select(
+        F.lit("sliding").alias("kind"),
+        F.concat(
+            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss"), F.lit("|"), F.col("event_type")
+        ).alias("k"),
+        "n",
+    )
+    sess_raw = session_counts(e).select(
+        "user_id", "n", F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("s_start")
+    )
+    w = W.partitionBy("user_id").orderBy("s_start")
+    sess = (
+        sess_raw.withColumn("session_no", F.row_number().over(w))
+        .select(
+            F.lit("session").alias("kind"),
+            F.concat(
+                F.col("user_id").cast("string"),
+                F.lit("#"),
+                F.col("session_no").cast("string"),
+                F.lit("@"),
+                F.col("s_start"),
+            ).alias("k"),
+            "n",
+        )
+    )
+    return sliding.unionByName(sess).orderBy("kind", "k")
+
+
+@register(
+    "stream_late_drop",
+    oracle=f"""
+        WITH base AS (
+            SELECT event_id, event_type, value,
+                   CAST(FLOOR(event_id / 2000) AS BIGINT) AS batch,
+                   CASE WHEN event_id % 37 = 0 THEN ts - INTERVAL 45 MINUTE
+                        ELSE ts END AS event_time
+            FROM events),
+        bmax AS (SELECT batch, MAX(event_time) AS bmax FROM base GROUP BY batch),
+        wm AS (
+            SELECT batch,
+                   MAX(bmax) OVER (ORDER BY batch
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
+                       - INTERVAL 10 MINUTE AS filter_wm
+            FROM bmax),
+        fin AS (SELECT MAX(bmax) - INTERVAL 10 MINUTE AS final_wm FROM bmax),
+        kept AS (
+            SELECT b.event_type, b.value,
+                   CAST(FLOOR(epoch(b.event_time) / 900) * 900 AS BIGINT) AS win_start
+            FROM base b JOIN wm USING (batch)
+            WHERE wm.filter_wm IS NULL
+               OR CAST(FLOOR(epoch(b.event_time) / 900) * 900 AS BIGINT) + 900
+                      > epoch(wm.filter_wm)),
+        agg AS (
+            SELECT event_type, win_start,
+                   COUNT(*) AS n,
+                   {sql_dsum('value')} AS sum_value
+            FROM kept GROUP BY 1, 2)
+        SELECT event_type, win_start, n, sum_value
+        FROM agg CROSS JOIN fin
+        WHERE win_start + 900 <= epoch(final_wm)
+        ORDER BY event_type, win_start
+    """,
+    tags=("B8",),
+    doc="Watermark late-data drop rule as a deterministic batch twin "
+    "(SURVEY §2 B8's last ◐ row): events are assigned to micro-batches by "
+    "arrival order (event_id ranges), every 37th event arrives 45 min "
+    "late. Spark's real two-watermark semantics (SPARK-24634): the "
+    "late-input filter for batch k uses the PREVIOUS trigger's watermark "
+    "(max event time over batches ≤ k-2, minus the 10-min delay) against "
+    "the row's WINDOW END, while eviction uses the current watermark — so "
+    "a row is dropped iff its 15-min window closed under the lagged "
+    "watermark, and windows are emitted only once the final watermark "
+    "passes their end. tests/test_streaming.py::"
+    "test_late_drop_stream_matches_twin pins a real watermarked append-"
+    "mode stream against this same rule (verified empirically: per-batch "
+    "progress watermarks + output match it exactly). Plan: two tiny "
+    "batch-level aggs broadcast into a narrow filter + one keyed agg.",
+)
+def stream_late_drop(spark, sf_dir):
+    e = t(spark, sf_dir, "events")
+    base = e.select(
+        "event_id",
+        "event_type",
+        "value",
+        F.floor(F.col("event_id") / 2000).cast("long").alias("batch"),
+        F.when(
+            F.pmod("event_id", F.lit(37)) == 0,
+            F.col("ts") - F.expr("INTERVAL 45 MINUTES"),
+        )
+        .otherwise(F.col("ts"))
+        .alias("event_time"),
+    )
+    bmax = base.groupBy("batch").agg(F.max("event_time").alias("bmax"))
+    # batch-count rows only (≤ |events|/2000): a single-partition window is
+    # fine. The -2 lag IS the semantics: the late filter uses the previous
+    # trigger's watermark (computed from batches ≤ k-2), not the current one.
+    prior2 = W.orderBy("batch").rowsBetween(W.unboundedPreceding, -2)
+    wm = bmax.select(
+        "batch",
+        (F.max("bmax").over(prior2) - F.expr("INTERVAL 10 MINUTES")).alias("filter_wm"),
+    )
+    fin = bmax.agg((F.max("bmax") - F.expr("INTERVAL 10 MINUTES")).alias("final_wm"))
+    win_start = (F.floor(F.unix_timestamp("event_time") / 900) * 900).cast("long")
+    kept = (
+        base.withColumn("win_start", win_start)
+        .join(F.broadcast(wm), "batch")
+        .where(
+            F.col("filter_wm").isNull()
+            | (F.col("win_start") + 900 > F.unix_timestamp("filter_wm"))
+        )
+    )
+    agg = kept.groupBy("event_type", "win_start").agg(
+        F.count("*").alias("n"), dsum("value").alias("sum_value")
+    )
+    return (
+        agg.crossJoin(F.broadcast(fin))
+        .where(F.col("win_start") + 900 <= F.unix_timestamp("final_wm"))
+        .select("event_type", "win_start", "n", "sum_value")
+        .orderBy("event_type", "win_start")
     )

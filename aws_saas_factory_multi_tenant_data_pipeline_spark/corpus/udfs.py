@@ -200,3 +200,77 @@ def udf_python_udtf(spark, sf_dir):
         ORDER BY o.o_orderkey, s.pos
         """
     )
+
+
+@register(
+    "udf_scalar_py_pandas",
+    oracle="""
+        SELECT o_orderkey,
+               CASE WHEN o_totalprice < 5000 THEN 'S'
+                    WHEN o_totalprice < 20000 THEN 'M'
+                    ELSE 'L' END AS size_band,
+               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents
+        FROM orders
+        WHERE o_orderkey <= 2000
+        ORDER BY o_orderkey
+    """,
+    tags=("B9",),
+    doc="Row-at-a-time Python UDF (size_band) + vectorized pandas UDF "
+    "(price_cents, Arrow batches) in one projection — one graded slot "
+    "covers both §2 scalar-UDF rows. Integer outputs keep it exact.",
+)
+def udf_scalar_py_pandas(spark, sf_dir):
+    @F.udf(T.StringType())
+    def band(p: float) -> str:
+        return "S" if p < 5000 else ("M" if p < 20000 else "L")
+
+    @F.pandas_udf(T.LongType())
+    def price_cents(p: pd.Series) -> pd.Series:
+        import numpy as np
+
+        return pd.Series(np.floor(p * 100 + 0.5).astype("int64"))
+
+    o = t(spark, sf_dir, "orders").where(F.col("o_orderkey") <= 2000)
+    return o.select(
+        "o_orderkey", band("o_totalprice").alias("size_band"), price_cents("o_totalprice").alias("price_cents")
+    ).orderBy("o_orderkey")
+
+
+@register(
+    "udf_grouped_map_agg",
+    oracle="""
+        SELECT 'gmap' AS kind, event_type, CAST(COUNT(*) AS BIGINT) AS metric
+        FROM events GROUP BY event_type
+        UNION ALL
+        SELECT 'gagg' AS kind, event_type,
+               CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT) * user_id) AS BIGINT) AS metric
+        FROM events GROUP BY event_type
+        ORDER BY kind, event_type
+    """,
+    tags=("B9",),
+    doc="applyInPandas grouped-map (per-group row count computed pandas-side) "
+    "+ grouped-agg pandas UDAF (integer-exact weighted total) as labeled "
+    "branches — one graded slot covers both §2 grouped-UDF rows.",
+)
+def udf_grouped_map_agg(spark, sf_dir):
+    def group_size(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame(
+            {"kind": ["gmap"], "event_type": [pdf["event_type"].iloc[0]], "metric": [len(pdf)]}
+        )
+
+    @F.pandas_udf(T.LongType())
+    def weighted_cents(value: pd.Series, user_id: pd.Series) -> int:
+        import numpy as np
+
+        return int((np.floor(value * 100 + 0.5).astype("int64") * user_id).sum())
+
+    e = t(spark, sf_dir, "events").select("event_type", "value", "user_id")
+    gmap = e.groupBy("event_type").applyInPandas(
+        group_size, "kind string, event_type string, metric long"
+    )
+    gagg = (
+        e.groupBy("event_type")
+        .agg(weighted_cents("value", "user_id").alias("metric"))
+        .select(F.lit("gagg").alias("kind"), "event_type", "metric")
+    )
+    return gmap.unionByName(gagg).orderBy("kind", "event_type")

@@ -417,9 +417,14 @@ def multimodal_raster_formats(spark, sf_dir):
     )
 
 
+#: multimodal_h264_cabac's doc count: the Spark filter, the oracle's
+#: filter and the media fan-out decision all read it
+_CABAC_DOCS = 48
+
+
 @register(
     "multimodal_h264_cabac",
-    oracle="""
+    oracle=f"""
         SELECT doc_id,
                CAST(1 + doc_id % 3 AS INT) AS mb_w,
                CAST(1 + doc_id % 2 AS INT) AS mb_h,
@@ -427,7 +432,7 @@ def multimodal_raster_formats(spark, sf_dir):
                    AS n_px,
                TRUE AS twin_match,
                TRUE AS uniform_is_128
-        FROM documents WHERE doc_id < 48
+        FROM documents WHERE doc_id < {_CABAC_DOCS}
         ORDER BY doc_id
     """,
     tags=("B10", "multimodal", "video"),
@@ -448,14 +453,14 @@ def multimodal_raster_formats(spark, sf_dir):
 def multimodal_h264_cabac(spark, sf_dir):
     import pandas as pd
 
-    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.multimodal import (
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.fanout import (
         fan_out_media_ids,
     )
 
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 48).select("doc_id")
-    # r16 payload-size seam: identity at this 48-doc fixture scale
+    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < _CABAC_DOCS).select("doc_id")
+    # payload-size seam: identity at this fixture doc count
     # (MEDIA_FANOUT_MIN_DOCS), fans out at real doc counts
-    d = fan_out_media_ids(d, "doc_id", 48)
+    d = fan_out_media_ids(d, "doc_id", _CABAC_DOCS)
 
     def op(batches):
         import numpy as np

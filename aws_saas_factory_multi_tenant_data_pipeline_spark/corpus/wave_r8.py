@@ -28,16 +28,21 @@ from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.sources_sinks impo
 from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import dsum, sql_dsum
 
 
+#: multimodal_mjpeg_frames' doc count: the Spark filter, the oracle's
+#: filter and the media fan-out decision all read it
+_MJPEG_DOCS = 64
+
+
 @register(
     "multimodal_mjpeg_frames",
-    oracle="""
+    oracle=f"""
         SELECT doc_id, frame_idx,
                (frame_idx = 0) AS is_keyframe,
                -CAST(POWER(2, 8 * ((11 + (doc_id + 5 * frame_idx) % 16) // 4))
                      AS BIGINT) AS ahash
         FROM documents
         CROSS JOIN (VALUES (0), (2), (4)) AS k(frame_idx)
-        WHERE doc_id < 64
+        WHERE doc_id < {_MJPEG_DOCS}
         ORDER BY doc_id, frame_idx
     """,
     tags=("B10", "multimodal", "video"),
@@ -60,6 +65,9 @@ def multimodal_mjpeg_frames(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.fanout import (
+        fan_out_media_ids,
+    )
     from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.jpeg import (
         encode_jpeg,
     )
@@ -68,15 +76,14 @@ def multimodal_mjpeg_frames(spark, sf_dir):
     )
     from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.multimodal import (
         MEDIA_SCHEMA,
-        fan_out_media_ids,
         mjpeg_frame_hashes,
         sample_video_frames,
     )
 
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 64).select("doc_id")
-    # r16 payload-size seam: identity at this 64-doc fixture scale
+    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < _MJPEG_DOCS).select("doc_id")
+    # payload-size seam: identity at this fixture doc count
     # (MEDIA_FANOUT_MIN_DOCS), fans out at real doc counts
-    d = fan_out_media_ids(d, "doc_id", 64)
+    d = fan_out_media_ids(d, "doc_id", _MJPEG_DOCS)
 
     def op(batches):
         for pdf in batches:

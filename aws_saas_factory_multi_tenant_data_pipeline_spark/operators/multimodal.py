@@ -1252,34 +1252,6 @@ VIDEO_SAMPLE_SCHEMA = T.StructType(
 )
 
 
-#: Doc-count threshold for fanning a per-doc Python media chain out
-#: across the session (r16, r15 verdict #7 — the seam measured at real
-#: payload sizes). BELOW it a single task wins: the r15 A/B showed 64
-#: tiny-payload docs on 1 task beating repartition(32) (3 Python stages
-#: x 32 Arrow worker spin-ups cost more than the decode). AT/ABOVE it
-#: the chain cost is per-doc encode/decode CPU and parallelism wins big:
-#: 128 docs x ~70 KB 6-frame 256x256 MJPEG MP4s read 72.5 s single-task
-#: vs 14.4 s at 8 and 8.2 s at 32 partitions (min-of-2, rows identical).
-#: Count-based on purpose: the driver frame is a doc_id list, so the
-#: byte-based sizing AQE applies to exchanges cannot see the Python CPU
-#: behind each row.
-MEDIA_FANOUT_MIN_DOCS = 128
-
-
-def fan_out_media_ids(d: DataFrame, by: str, n_docs: int) -> DataFrame:
-    """Spread a per-doc media chain's driver frame across the session's
-    cores when the doc set is large enough to amortize Python worker
-    spin-up (see :data:`MEDIA_FANOUT_MIN_DOCS`); identity otherwise —
-    fixture-scale plans and bench numbers are unchanged."""
-    if n_docs < MEDIA_FANOUT_MIN_DOCS:
-        return d
-    sess = d.sparkSession
-    target = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    import pyspark.sql.functions as _F
-
-    return d.repartition(min(target, n_docs), _F.col(by))
-
-
 def sample_video_frames(
     media: DataFrame, every_n: int = 10, keyframes_only: bool = False
 ) -> DataFrame:

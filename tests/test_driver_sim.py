@@ -1,0 +1,50 @@
+"""Change selection in tools/driver_sim.py --changed-since: a pack is
+re-verified when any of its leaf queries is touched."""
+
+from __future__ import annotations
+
+import inspect
+import os
+
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import load_all
+from tools.driver_sim import REPO, close_over_packs, touched_queries
+
+REGISTRY = load_all()  # packs.py reads leaf oracles: import it after load_all
+
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.packs import PACKS  # noqa: E402
+
+
+def test_close_over_packs_follows_edges_to_a_fixed_point():
+    edges = {"p": {"a", "b"}, "q": {"p"}, "r": {"c"}}
+    assert close_over_packs({"b"}, edges) == {"b", "p", "q"}
+    assert close_over_packs(set(), edges) == set()
+    assert close_over_packs({"c"}, edges) == {"c", "r"}
+
+
+def test_pack_selected_when_only_one_leaf_module_changed():
+    reg = REGISTRY
+    slot = next(s for s in PACKS if s.name == "media_family_all")
+    leaf = slot.parts[0].leaf
+    leaf_module = os.path.relpath(inspect.getsourcefile(reg[leaf].spark_fn), REPO)
+    assert not leaf_module.endswith("packs.py")
+    touched = touched_queries(reg, {os.path.normpath(leaf_module)})
+    assert leaf in touched
+    assert "media_family_all" in touched
+    # a pack with no leaf in that module stays out
+    other = next(
+        s.name for s in PACKS
+        if all(
+            os.path.relpath(inspect.getsourcefile(reg[p.leaf].spark_fn), REPO) != leaf_module
+            for p in s.parts
+        )
+    )
+    assert other not in touched
+
+
+def test_hand_written_pack_selected_through_quoted_component():
+    reg = REGISTRY
+    leaf_module = os.path.relpath(inspect.getsourcefile(reg["fn_url_family"].spark_fn), REPO)
+    touched = touched_queries(reg, {os.path.normpath(leaf_module)})
+    # fn_web_time_pack names fn_url_family in its source; fn_family_pack2
+    # lists fn_web_time_pack as a leaf
+    assert {"fn_web_time_pack", "fn_family_pack2"} <= touched

@@ -34,7 +34,7 @@ def test_fan_out_is_a_noop_on_parallel_inputs(spark):
 def test_media_fanout_threshold(spark):
     """The media payload seam is identity below MEDIA_FANOUT_MIN_DOCS
     (fixture-scale plans unchanged) and repartitions at/above it."""
-    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.multimodal import (
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.fanout import (
         MEDIA_FANOUT_MIN_DOCS,
         fan_out_media_ids,
     )

@@ -37,3 +37,17 @@ def test_window_spans_every_family():
         "B1", "B2", "B3", "B4", "B5", "B6", "B7", "B8", "B9", "B10",
     }
     assert expected.issubset(tags), f"families missing from window: {expected - tags}"
+
+
+def test_pack_parts_are_registered_leaves():
+    """Every pack-table part names a registered query that is not itself a
+    table pack, so packs nest exactly one level deep."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.packs import PACKS
+
+    reg = load_all()
+    packs = {s.name for s in PACKS}
+    for slot in PACKS:
+        assert slot.name in reg
+        for part in slot.parts:
+            assert part.leaf in reg, f"{slot.name}: unregistered leaf {part.leaf}"
+            assert part.leaf not in packs, f"{slot.name} nests pack {part.leaf}"

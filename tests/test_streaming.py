@@ -573,7 +573,7 @@ def test_stateful_ewma_stream_matches_batch(spark, tmp_path):
 def test_late_drop_stream_matches_twin(spark, tmp_path):
     """A real watermarked windowed aggregation (append mode) produces
     exactly what the documented late-drop rule predicts — the stream-side
-    pin for the graded batch twin `stream_late_drop` (corpus/window_r4.py).
+    pin for the graded batch twin `stream_late_drop` (corpus/streaming_batch.py).
 
     Spark's two-watermark semantics (SPARK-24634): the late-input filter
     for batch k uses the PREVIOUS trigger's watermark — max event time

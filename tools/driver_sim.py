@@ -23,7 +23,8 @@ Usage:  python tools/driver_sim.py [sf_dir] [query ...]
             # only queries touched since git REF: a query is selected if
             # its defining corpus module changed, if its function source
             # references a changed package module, or (transitively) if
-            # it wraps a touched component query (the pack convention) —
+            # it wraps a touched component query (a leaf in
+            # corpus/packs.py's table, or a quoted name in a pack's source) —
             # the cheap re-verification loop for builder sessions; the
             # full sweep still runs at round end (COVERAGE.md)
 """
@@ -38,7 +39,8 @@ import traceback
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark import get_spark
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import load_all
@@ -100,22 +102,28 @@ def strict_compare(sdf: pd.DataFrame, ddf: pd.DataFrame) -> str | None:
 
 def changed_queries(registry, ref: str) -> set:
     """Queries touched since git ``ref`` (see module docstring)."""
-    import inspect
     import subprocess
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
         ["git", "diff", "--name-only", ref, "--", "*.py"],
-        cwd=repo, capture_output=True, text=True, check=True,
+        cwd=REPO, capture_output=True, text=True, check=True,
     ).stdout.split()
-    changed_paths = {os.path.normpath(pth) for pth in out}
+    return touched_queries(registry, {os.path.normpath(pth) for pth in out})
+
+
+def touched_queries(registry, changed_paths: set) -> set:
+    """Queries a change to ``changed_paths`` (repo-relative) can affect."""
+    import inspect
+
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.packs import PACKS
+
     stems = {os.path.splitext(os.path.basename(pth))[0] for pth in changed_paths}
     touched = set()
     sources = {}
     for name, spec in registry.items():
         try:
             mod_file = os.path.normpath(os.path.relpath(
-                inspect.getsourcefile(spec.spark_fn), repo))
+                inspect.getsourcefile(spec.spark_fn), REPO))
             sources[name] = inspect.getsource(spec.spark_fn) + (spec.oracle or "")
         except (TypeError, OSError):
             touched.add(name)  # can't inspect → be safe, re-run
@@ -129,17 +137,27 @@ def changed_queries(registry, ref: str) -> set:
                or f"{st} import" in src
                for st in stems):
             touched.add(name)
-    # transitive: packs reference component queries by name string
+    # table packs list their leaves; hand-written packs name their
+    # components as string literals in their source
+    edges = {s.name: {p.leaf for p in s.parts} for s in PACKS}
+    for name, src in sources.items():
+        if name not in edges:
+            edges[name] = {c for c in registry if c != name and f'"{c}"' in src}
+    return close_over_packs(touched, edges)
+
+
+def close_over_packs(touched: set, edges: dict) -> set:
+    """Add every pack whose components (``edges[pack]``) meet the
+    selection, until nothing more is added."""
+    selected = set(touched)
     grew = True
     while grew:
         grew = False
-        for name, src in sources.items():
-            if name in touched:
-                continue
-            if any(f'"{t}"' in src for t in touched):
-                touched.add(name)
+        for pack, parts in edges.items():
+            if pack not in selected and parts & selected:
+                selected.add(pack)
                 grew = True
-    return touched
+    return selected
 
 
 def main() -> int:

@@ -90,8 +90,6 @@ EXPECTED_FLAGS: dict[str, dict[str, int]] = {
     # one codegen'd bit_count(xor) per row (operators/pq.py
     # binary_hamming_topk)
     "similarity_binary_hamming": {"BroadcastNestedLoopJoin": 1},
-    # inherits the three ANN components' 1-row broadcasts above
-    "media_pack4": {"BroadcastNestedLoopJoin": 4},
     # --- r15 full-registry audit (the first sweep beyond the headliner
     # set; every entry below was triaged plan-by-plan — the BNLJ build
     # side in each is a 1-row aggregate, a collapsed 1-row lookup table,
@@ -118,9 +116,11 @@ EXPECTED_FLAGS: dict[str, dict[str, int]] = {
     # 1-row funnel stage counts (n_view / n_view_click)
     "funnel_view_click_purchase": {"BroadcastNestedLoopJoin": 2},
     "ops_pack": {"BroadcastNestedLoopJoin": 2},
-    # inherit PQ codebook / per-query ADC table / maxsim query-matrix
-    # 1-row broadcasts from their components
-    "media_family_pack2": {"BroadcastNestedLoopJoin": 4},
+    # inherits the PQ codebook / per-query ADC table / maxsim
+    # query-matrix 1-row broadcasts (4) and the bitext exact-baseline
+    # BNLJs (6; label=0 x label=1 bounded fixture sides — whether the
+    # checkpointed subtree shows in the captured plan varies with
+    # materialization timing) from its leaves
     "media_family_all": {"BroadcastNestedLoopJoin": 10},
     "lake_pack2": {"BroadcastNestedLoopJoin": 1},
     # 1-row source-mix totals (__N / (__total, __k))
@@ -143,12 +143,6 @@ EXPECTED_FLAGS: dict[str, dict[str, int]] = {
     "embedding_hard_negatives": {"BroadcastNestedLoopJoin": 1},
     # declared brute-force exact baseline, both sides capped at 150 rows
     "dedup_embedding_cosine": {"BroadcastNestedLoopJoin": 1},
-    # inherit the bitext exact-baseline BNLJ (label=0 x label=1 bounded
-    # fixture sides — similarity_bitext_margin's declared oracle form);
-    # whether the checkpointed subtree shows in the captured plan varies
-    # with materialization timing, so list them explicitly
-    "media_family_pack": {"BroadcastNestedLoopJoin": 6},
-    "media_pack2": {"BroadcastNestedLoopJoin": 6},
     # 1-row collapsed Bloom bit-set broadcast (collect_set -> one row)
     "llm_bloom_decontaminate": {"BroadcastNestedLoopJoin": 1},
     # 1-row corpus bigram total for the frequency threshold
