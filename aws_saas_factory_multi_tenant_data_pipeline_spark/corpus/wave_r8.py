@@ -187,56 +187,44 @@ def lake_branch_wap_roundtrip(spark, sf_dir):
     batch = F.col("o_orderkey") % 4
     root = os.path.join(_SCRATCH, "w8_branch_wap")
     shutil.rmtree(root, ignore_errors=True)
-    # r15: the whole maintenance round-trip is a fixed sequence of
-    # tiny known-shape actions (<=5000-row snapshots by the query's own
-    # filter); running it in a fixed-plan (AQE-off) region removes one
-    # driver re-planning round per shuffle/write — measured 1.8 s ->
-    # 1.63 s warm at sf0.1. Only the returned read-back executes under
-    # the session's (restored) conf.
-    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.planconf import (
-        fixed_plan_region,
+    # v1: base batch straight to main
+    write_snapshot(o.where(batch == 0), root)
+    # v2 on an isolated branch: main must still read v1 while it exists
+    create_branch(root, "dev")
+    write_snapshot_to_branch(
+        read_branch(spark, root, "dev").unionByName(o.where(batch == 1)),
+        root,
+        "dev",
     )
-
-    with fixed_plan_region(spark):
-
-        # v1: base batch straight to main
-        write_snapshot(o.where(batch == 0), root)
-        # v2 on an isolated branch: main must still read v1 while it exists
-        create_branch(root, "dev")
-        write_snapshot_to_branch(
-            read_branch(spark, root, "dev").unionByName(o.where(batch == 1)),
-            root,
-            "dev",
-        )
-        isolation_main_rows = read_snapshot(spark, root).count()  # still v1
-        fast_forward(root, "dev")  # main -> v2 (ancestry-checked pointer move)
-        # v3: WAP a good batch — audits the staged bytes, then publishes
-        gate = [in_range("o_totalprice", 0.0, 1e12)]
+    isolation_main_rows = read_snapshot(spark, root).count()  # still v1
+    fast_forward(root, "dev")  # main -> v2 (ancestry-checked pointer move)
+    # v3: WAP a good batch — audits the staged bytes, then publishes
+    gate = [in_range("o_totalprice", 0.0, 1e12)]
+    write_audit_publish(
+        read_snapshot(spark, root).unionByName(o.where(batch == 2)), root, gate
+    )
+    # WAP a bad batch (negated prices violate the gate): must raise and
+    # must leave main untouched; the staged version stays on its audit
+    # branch for inspection
+    bad = o.where(batch == 3).withColumn(
+        "o_totalprice", -F.abs(F.col("o_totalprice"))
+    )
+    wap_bad_raised = 0
+    try:
         write_audit_publish(
-            read_snapshot(spark, root).unionByName(o.where(batch == 2)), root, gate
+            read_snapshot(spark, root).unionByName(bad),
+            root,
+            gate,
+            audit_branch="audit_bad",
         )
-        # WAP a bad batch (negated prices violate the gate): must raise and
-        # must leave main untouched; the staged version stays on its audit
-        # branch for inspection
-        bad = o.where(batch == 3).withColumn(
-            "o_totalprice", -F.abs(F.col("o_totalprice"))
-        )
-        wap_bad_raised = 0
-        try:
-            write_audit_publish(
-                read_snapshot(spark, root).unionByName(bad),
-                root,
-                gate,
-                audit_branch="audit_bad",
-            )
-        except AuditFailure:
-            wap_bad_raised = 1
-        staged_bad = (
-            read_branch(spark, root, "audit_bad")
-            .where(F.col("o_totalprice") < 0)
-            .count()
-        )
-        main_version = latest_snapshot_version(root)
+    except AuditFailure:
+        wap_bad_raised = 1
+    staged_bad = (
+        read_branch(spark, root, "audit_bad")
+        .where(F.col("o_totalprice") < 0)
+        .count()
+    )
+    main_version = latest_snapshot_version(root)
     main_rows = (
         read_snapshot(spark, root)
         .groupBy(F.col("o_orderstatus").alias("k"))

@@ -34,9 +34,6 @@ from pyspark.sql import functions as F
 from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.fanout import (
     fan_out_scan,
 )
-from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.planconf import (
-    fixed_plan_region,
-)
 from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.similarity import dot, norm
 
 #: exact-decimal accumulator for order-independent float means
@@ -151,26 +148,19 @@ def kmeans_portable(
     df = fan_out_scan(df, id_col)
     centroids = seed_centroids(df, n_clusters, vec_col, id_col)
     assigned = assign_clusters(df, centroids, vec_col, id_col)
-    # the Lloyd rounds materialize eagerly with known shapes — run them
-    # in a fixed-plan (AQE-off) region so each round is one driver
-    # round-trip, not one per shuffle (see operators/planconf.py)
-    with fixed_plan_region(df.sparkSession):
-        for it in range(iterations):
-            # checkpoint the (n_clusters-row) centroid frame each round: it
-            # is the whole cross-round dependency, so cutting lineage here
-            # keeps every round's plan at depth 1 over df instead of
-            # re-deriving all prior assignments — same pattern as
-            # graph.pagerank. r15: the LAST round stays lazy — the
-            # returned assignment references its centroids exactly once
-            # (one broadcast build), so the eager job bought nothing and
-            # cost one full extra driver round-trip; earlier rounds keep
-            # eager cuts or round k's broadcast would re-execute rounds
-            # 1..k-1.
-            cents = lloyd_update(assigned, vec_col)
-            centroids = (
-                cents if it == iterations - 1 else cents.localCheckpoint(eager=True)
-            )
-            assigned = assign_clusters(df, centroids, vec_col, id_col)
+    for it in range(iterations):
+        # checkpoint the (n_clusters-row) centroid frame each round: it is
+        # the whole cross-round dependency, so cutting lineage here keeps
+        # every round's plan at depth 1 over df instead of re-deriving all
+        # prior assignments — same pattern as graph.pagerank. The LAST
+        # round stays lazy — the returned assignment references its
+        # centroids exactly once (one broadcast build), so an eager job
+        # would buy nothing and cost one full extra driver round-trip;
+        # earlier rounds keep eager cuts or round k's broadcast would
+        # re-execute rounds 1..k-1.
+        cents = lloyd_update(assigned, vec_col)
+        centroids = cents if it == iterations - 1 else cents.localCheckpoint(eager=True)
+        assigned = assign_clusters(df, centroids, vec_col, id_col)
     return assigned
 
 
@@ -199,10 +189,9 @@ def ivf_topk_portable(
     corpus = fan_out_scan(corpus, id_col)  # r16: see kmeans_portable
     centroids = seed_centroids(corpus, n_clusters, vec_col, id_col)
     assigned = assign_clusters(corpus, centroids, vec_col, id_col)
-    with fixed_plan_region(corpus.sparkSession):
-        for _ in range(iterations):
-            centroids = lloyd_update(assigned, vec_col).localCheckpoint(eager=True)
-            assigned = assign_clusters(corpus, centroids, vec_col, id_col)
+    for _ in range(iterations):
+        centroids = lloyd_update(assigned, vec_col).localCheckpoint(eager=True)
+        assigned = assign_clusters(corpus, centroids, vec_col, id_col)
     lists = assigned.select(
         F.col(id_col),
         "cluster_id",
@@ -250,10 +239,9 @@ def build_ivf_index(
     df = fan_out_scan(df, id_col)  # r16: see kmeans_portable
     centroids = seed_centroids(df, n_clusters, vec_col, id_col)
     assigned = assign_clusters(df, centroids, vec_col, id_col)
-    with fixed_plan_region(df.sparkSession):
-        for _ in range(iterations):
-            centroids = lloyd_update(assigned, vec_col).localCheckpoint(eager=True)
-            assigned = assign_clusters(df, centroids, vec_col, id_col)
+    for _ in range(iterations):
+        centroids = lloyd_update(assigned, vec_col).localCheckpoint(eager=True)
+        assigned = assign_clusters(df, centroids, vec_col, id_col)
     centroids.write.mode(mode).parquet(f"{root}/centroids")
     (
         assigned.select(
@@ -330,28 +318,25 @@ def semantic_dedup(
     comparisons are Σ|cluster|² — bounded by raising n_clusters, never
     all-pairs."""
     vcol = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    with fixed_plan_region(df.sparkSession):
-        assigned = (
-            kmeans_portable(df, n_clusters, iterations, vec_col, id_col)
-            .select(
-                F.col(id_col),
-                "cluster_id",
-                vcol.alias("__v"),
-                # hoist the vector norm: the pair join otherwise recomputes
-                # BOTH sides' 64-element norm folds per pair — the norms
-                # are per-vector constants, so computing them once cuts
-                # per-pair work to the dot product alone (~3×). sqrt-once
-                # vs sqrt-twice is the identical IEEE value, so the
-                # round-6 cosine (and the SQL oracle) are unchanged
-                # bit-for-bit.
-                norm(vcol.alias("__v")).alias("__nrm"),
-            )
-            # the assignment feeds BOTH sides of the pair join and the
-            # final keep-join: materialize once or the whole clustering
-            # runs 3×; eager INSIDE the fixed-plan region, so the whole
-            # clustering executes without per-shuffle re-planning
-            .localCheckpoint(eager=True)
+    assigned = (
+        kmeans_portable(df, n_clusters, iterations, vec_col, id_col)
+        .select(
+            F.col(id_col),
+            "cluster_id",
+            vcol.alias("__v"),
+            # hoist the vector norm: the pair join otherwise recomputes
+            # BOTH sides' 64-element norm folds per pair — the norms are
+            # per-vector constants, so computing them once cuts per-pair
+            # work to the dot product alone (~3×). sqrt-once vs
+            # sqrt-twice is the identical IEEE value, so the round-6
+            # cosine (and the SQL oracle) are unchanged bit-for-bit.
+            norm(vcol.alias("__v")).alias("__nrm"),
         )
+        # the assignment feeds BOTH sides of the pair join and the final
+        # keep-join: materialize it once, eagerly, or the whole
+        # clustering runs 3×
+        .localCheckpoint(eager=True)
+    )
     a = assigned.select(
         F.col(id_col).alias("__ida"),
         F.col("cluster_id"),

@@ -151,91 +151,75 @@ def pagerank(
         .distinct()
     )
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("__n"))
-    # r15: the fixed-point region (r0 + the loop) runs with AQE OFF. Every
-    # round's shapes are fully known ahead of time — the edge side is a
-    # persisted frame with pinned partitioning and the rank frame is
-    # node-sized — so AQE's per-shuffle driver re-planning only adds
-    # latency to an iterative job (measured at sf0.1: loop 2.5 s -> 1.5 s,
-    # r0 0.9 s -> 0.4 s; the guide's §1.2 "distributed algorithm first"
-    # applies — no data moves differently, only scheduling). The session
-    # value is restored in `finally`; the final round is checkpointed
-    # EAGERLY so the whole loop executes inside this conf window.
-    sess = edges.sparkSession
-    aqe_before = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        ranks = (
-            nodes.crossJoin(F.broadcast(n_nodes))
-            .select("node", "__n", F.expr(f"CAST({UNITS} AS BIGINT) div __n").alias("ru"))
-            # materialize r0: its lineage re-derives the cached edge frame
-            # scan; without the cut, iteration 1 pays it again
-            .localCheckpoint(eager=True)
+    ranks = (
+        nodes.crossJoin(F.broadcast(n_nodes))
+        .select("node", "__n", F.expr(f"CAST({UNITS} AS BIGINT) div __n").alias("ru"))
+        # materialize r0: its lineage re-derives the cached edge frame
+        # scan; without the cut, iteration 1 pays it again
+        .localCheckpoint(eager=True)
+    )
+    teleport = F.expr(f"CAST({(100 - damping_pct) * UNITS} AS BIGINT) div (100 * __n)")
+    rounds = 0
+    converged = False
+    last_delta: int | None = None
+    for _it in range(iters):
+        # BROADCAST the node-sized rank frame into the edge partitions:
+        # the cached edge list is laid out by __dst, so after this
+        # exchange-free join the contribution aggregation below runs
+        # complete-in-place on the cache partitioning. A shuffle-hash
+        # form would keep the cache by __src instead and pay an
+        # edge-cardinality exchange of partial sums keyed by __dst
+        # EVERY round — strictly more bytes per round than the
+        # node-sized broadcast build this form pays.
+        # Scale limit documented in the module docstring: a node set
+        # beyond broadcast reach needs the shuffle-hash loop instead.
+        contribs = e_deg.join(
+            F.broadcast(ranks.select("node", "ru")),
+            F.col("__src") == F.col("node"),
+        ).select(F.col("__dst").alias("node"), F.expr("ru div __deg").alias("__c"))
+        sums = contribs.groupBy("node").agg(F.sum("__c").alias("__s"))
+        prev_cols = [F.col("ru").alias("__prev_ru")] if tol_units is not None else []
+        # the rank update broadcasts the sums too: one row per node with
+        # in-edges, so it is node-sized by construction — the second of
+        # the module docstring's two node-sized broadcasts per round
+        update = (
+            ranks.select("node", "__n", *prev_cols)
+            .join(F.broadcast(sums), "node", "left")
+            .select(
+                "node",
+                "__n",
+                *(["__prev_ru"] if tol_units is not None else []),
+                (
+                    teleport
+                    + F.expr(f"({damping_pct} * coalesce(__s, CAST(0 AS BIGINT))) div 100")
+                ).alias("ru"),
+            )
         )
-        teleport = F.expr(f"CAST({(100 - damping_pct) * UNITS} AS BIGINT) div (100 * __n)")
-        rounds = 0
-        converged = False
-        last_delta: int | None = None
-        for _it in range(iters):
-            # BROADCAST the node-sized rank frame into the edge partitions
-            # (r16): the cached edge list is laid out by __dst, so after
-            # this exchange-free join the contribution aggregation below
-            # runs complete-in-place on the cache partitioning. The r15
-            # shuffle-hash form kept the cache by __src instead and paid an
-            # edge-cardinality exchange of partial sums keyed by __dst
-            # EVERY round — strictly more bytes per round than the
-            # node-sized broadcast build this form pays (guide §2.4/§3.1).
-            # Scale limit documented in the module docstring: a node set
-            # beyond broadcast reach needs the pre-r16 shuffle-hash loop.
-            contribs = e_deg.join(
-                F.broadcast(ranks.select("node", "ru")),
-                F.col("__src") == F.col("node"),
-            ).select(F.col("__dst").alias("node"), F.expr("ru div __deg").alias("__c"))
-            sums = contribs.groupBy("node").agg(F.sum("__c").alias("__s"))
-            if plan_probe is not None:  # test hook: capture the iteration body
-                plan_probe.append(sums._jdf.queryExecution().executedPlan().toString())
-            prev_cols = (
-                [F.col("ru").alias("__prev_ru")] if tol_units is not None else []
-            )
-            ranks = (
-                ranks.select("node", "__n", *prev_cols)
-                .join(sums, "node", "left")
-                .select(
-                    "node",
-                    "__n",
-                    *(["__prev_ru"] if tol_units is not None else []),
-                    (
-                        teleport
-                        + F.expr(f"({damping_pct} * coalesce(__s, CAST(0 AS BIGINT))) div 100")
-                    ).alias("ru"),
-                )
-                # lazy checkpoints for rounds 1..k-1: lineage still truncates
-                # at first materialization (round k+1 reads round k's
-                # persisted blocks, never its plan), but the whole loop runs
-                # as ONE fused job — measured 4.8 s -> 3.7 s at sf0.1
-                # (per-job scheduling overhead, not data, dominated). r15:
-                # the LAST round checkpoints EAGERLY so that single fused job
-                # executes here, inside the AQE-off conf window, instead of
-                # at the caller's action after the conf is restored. The
-                # tol_units path materializes each round anyway via the
-                # delta agg.
-                .localCheckpoint(eager=(_it == iters - 1 and tol_units is None))
-            )
-            rounds += 1
-            if tol_units is not None:
-                # exact BIGINT max |Δ| over the round just materialized —
-                # one node-sized agg job against the fresh checkpoint, no
-                # extra join. Stop when the fixed-point loop is within
-                # tolerance: the returned frame is bit-identical to a
-                # fixed iters=rounds run (replayable by
-                # pagerank_oracle_sql(..., iters=rounds)).
-                last_delta = ranks.agg(
-                    F.max(F.abs(F.col("ru") - F.col("__prev_ru"))).alias("d")
-                ).collect()[0]["d"]
-                if last_delta is not None and last_delta <= tol_units:
-                    converged = True
-                    break
-    finally:
-        sess.conf.set("spark.sql.adaptive.enabled", aqe_before)
+        if plan_probe is not None:  # test hook: capture the iteration body
+            plan_probe.append(update._jdf.queryExecution().executedPlan().toString())
+        # lazy checkpoints for rounds 1..k-1: lineage still truncates at
+        # first materialization (round k+1 reads round k's persisted
+        # blocks, never its plan), but the whole loop runs as ONE fused
+        # job — measured 4.8 s -> 3.7 s at sf0.1 (per-job scheduling
+        # overhead, not data, dominated). The LAST round checkpoints
+        # EAGERLY because e_deg is unpersisted right after the loop: the
+        # fused job must read the edge cache before it is released. The
+        # tol_units path materializes each round anyway via the delta agg.
+        ranks = update.localCheckpoint(eager=(_it == iters - 1 and tol_units is None))
+        rounds += 1
+        if tol_units is not None:
+            # exact BIGINT max |Δ| over the round just materialized —
+            # one node-sized agg job against the fresh checkpoint, no
+            # extra join. Stop when the fixed-point loop is within
+            # tolerance: the returned frame is bit-identical to a
+            # fixed iters=rounds run (replayable by
+            # pagerank_oracle_sql(..., iters=rounds)).
+            last_delta = ranks.agg(
+                F.max(F.abs(F.col("ru") - F.col("__prev_ru"))).alias("d")
+            ).collect()[0]["d"]
+            if last_delta is not None and last_delta <= tol_units:
+                converged = True
+                break
     if info is not None:
         info["rounds"] = rounds
         info["converged"] = converged

@@ -126,38 +126,29 @@ def pq_train(
     ).select(
         F.col("__s.subspace").alias("subspace"), "code", F.col("__s.centroid").alias("centroid")
     )
-    # Lloyd rounds run with AQE off (restored in finally): the round
-    # shapes are known — broadcast assign over the persisted cache, a
-    # bounded (m·k·dsub)-row aggregation — and each round materializes
-    # eagerly INSIDE this window, so AQE's per-shuffle driver
-    # re-planning would only add latency (same finding as
-    # graph.pagerank's fixed-point loop).
-    sess = df.sparkSession
-    aqe_before = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for _ in range(iterations):
-            assigned = _assign_codes_all(q, cents, m, dsub)
-            cents = (
-                assigned.select(
-                    "subspace", "code", F.posexplode("__v").alias("dim", "val")
-                )
-                .groupBy("subspace", "code", "dim")
-                .agg(
-                    F.floor(
-                        F.sum("val").cast("double") / F.count(F.lit(1))
-                    ).cast("long").alias("val")
-                )
-                .groupBy("subspace", "code")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "val"))),
-                        lambda s: s["val"],
-                    ).alias("centroid")
-                )
-            ).localCheckpoint(eager=True)
-    finally:
-        sess.conf.set("spark.sql.adaptive.enabled", aqe_before)
+    for _ in range(iterations):
+        assigned = _assign_codes_all(q, cents, m, dsub)
+        # each round's centroid set is checkpointed EAGERLY, so no
+        # returned centroid frame still needs the persisted training
+        # input: that is what makes q.unpersist() below safe
+        cents = (
+            assigned.select(
+                "subspace", "code", F.posexplode("__v").alias("dim", "val")
+            )
+            .groupBy("subspace", "code", "dim")
+            .agg(
+                F.floor(
+                    F.sum("val").cast("double") / F.count(F.lit(1))
+                ).cast("long").alias("val")
+            )
+            .groupBy("subspace", "code")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("dim", "val"))),
+                    lambda s: s["val"],
+                ).alias("centroid")
+            )
+        ).localCheckpoint(eager=True)
     # the returned frame is (derived from) an eagerly-checkpointed
     # centroid set, so releasing the training cache is safe; with
     # iterations=0 the lazy seed frame simply recomputes if read later

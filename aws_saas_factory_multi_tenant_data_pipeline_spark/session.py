@@ -27,7 +27,9 @@ def get_spark(
 
     - UTC session timezone (oracle comparability; the reference stamps
       epoch-seconds UTC, FirehoseStreamingSinkJob.java:80)
-    - AQE + skew-join handling on (tenant skew is the realistic case)
+    - AQE with skew-join handling on for every query in the session
+      (tenant skew is the realistic case); no operator turns it off,
+      pinned by tests/test_plans.py::test_operator_sets_no_aqe_conf
     - shuffle partitions sized to cores for local mode, not the 200 default
     - Arrow enabled for Pandas-UDF / toPandas paths
     """

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
@@ -514,12 +515,20 @@ def test_pagerank_iteration_never_moves_edges(spark):
     assert len(probe) == 3
     for i, plan in enumerate(probe):
         final = plan.split("== Initial Plan ==")[0]
-        join_at = final.find("BroadcastHashJoin")
-        assert join_at >= 0, f"iter {i}: broadcast rank join missing\n{final[:2000]}"
+        # the probe holds the rank-update frame: its join against the
+        # contribution sums must be a broadcast too (the sums are
+        # node-sized), so the round pays no rank-sized shuffle either
+        joins = [ln for ln in final.splitlines() if "Join" in ln]
+        assert joins and "BroadcastHashJoin" in joins[0] and "LeftOuter" in joins[0], (
+            f"iter {i}: rank update join not broadcast\n{final[:2000]}"
+        )
+        assert sum("BroadcastHashJoin" in ln for ln in joins) >= 2, (
+            f"iter {i}: broadcast rank join missing\n{final[:2000]}"
+        )
         # the streamed side must be the cache scan, and NOTHING between
-        # the aggregation root and the cache scan may shuffle: the body
+        # the update root and the cache scan may shuffle: the body
         # (everything before the InMemoryRelation detail dump) must be
-        # exchange-free apart from the rank broadcast itself
+        # exchange-free apart from the two broadcasts
         body = final.split("InMemoryRelation")[0]
         assert "InMemoryTableScan" in body, f"iter {i}:\n{body}"
         assert "Exchange hashpartitioning" not in body, (
@@ -528,6 +537,108 @@ def test_pagerank_iteration_never_moves_edges(spark):
         assert "ShuffledHashJoin" not in body and "SortMergeJoin" not in body, (
             f"iter {i}: rank frame not broadcast\n{body}"
         )
+
+
+def test_pagerank_loop_leaves_session_adaptive(spark):
+    """One long-lived session serves every tenant's queries, so an
+    operator must not change how OTHER queries plan while it runs: a
+    query planned inside pagerank's loop (here, from the plan_probe hook
+    every round) still gets an AdaptiveSparkPlan, with AQE's skew-join
+    splitting and runtime join selection."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.graph import (
+        pagerank,
+    )
+
+    class _OtherQueryProbe(list):
+        def __init__(self):
+            super().__init__()
+            self.planned: list[str] = []
+
+        def append(self, plan):
+            super().append(plan)
+            other = spark.range(64).groupBy((F.col("id") % 5).alias("k")).count()
+            self.planned.append(
+                other._jdf.queryExecution().executedPlan().getClass().getSimpleName()
+            )
+
+    edges = spark.range(400).select(
+        (F.col("id") % 37).alias("src"), ((F.col("id") * 7) % 37).alias("dst")
+    )
+    probe = _OtherQueryProbe()
+    pagerank(edges, iters=3, plan_probe=probe).count()
+    assert probe.planned == ["AdaptiveSparkPlanExec"] * 3, probe.planned
+
+
+def _former_aqe_off_runs() -> dict:
+    """Every operator that once scoped an AQE-off region, each run to
+    completion on small inputs: name -> fn(spark, sf_dir, emb, tmp_path)."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import load_all
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.clustering import (
+        build_ivf_index,
+        ivf_topk_portable,
+        kmeans_portable,
+        semantic_dedup,
+    )
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.graph import pagerank
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.pq import pq_train
+
+    def edges(spark):
+        return spark.range(200).select(
+            (F.col("id") % 23).alias("src"), ((F.col("id") * 5) % 23).alias("dst")
+        )
+
+    def queries(emb):
+        return emb.where(F.col("vec_id") < 4).withColumnRenamed("vec_id", "query_id")
+
+    return {
+        "pagerank": lambda spark, sf, emb, tmp: pagerank(edges(spark), iters=2).count(),
+        "kmeans_portable": lambda spark, sf, emb, tmp: kmeans_portable(
+            emb, n_clusters=3, iterations=2
+        ).count(),
+        "semantic_dedup": lambda spark, sf, emb, tmp: semantic_dedup(emb, n_clusters=3).count(),
+        "ivf_topk_portable": lambda spark, sf, emb, tmp: ivf_topk_portable(
+            emb, queries(emb), n_clusters=3
+        ).count(),
+        "build_ivf_index": lambda spark, sf, emb, tmp: build_ivf_index(
+            emb, str(tmp / "ivf"), n_clusters=3
+        ),
+        "pq_train": lambda spark, sf, emb, tmp: pq_train(emb, m=4, k=3, iterations=2).count(),
+        "lake_branch_wap_roundtrip": lambda spark, sf, emb, tmp: load_all()[
+            "lake_branch_wap_roundtrip"
+        ].spark_fn(spark, sf).collect(),
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pagerank",
+        "kmeans_portable",
+        "semantic_dedup",
+        "ivf_topk_portable",
+        "build_ivf_index",
+        "pq_train",
+        "lake_branch_wap_roundtrip",
+    ],
+)
+def test_operator_sets_no_aqe_conf(spark, sf_smoke, tmp_path, monkeypatch, name):
+    """The session's AQE settings belong to the session (session.get_spark):
+    no operator may set a ``spark.sql.adaptive.*`` key, not even
+    temporarily — a scoped flip is still session-global while it lasts
+    and reaches every concurrent query."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    keys: list[str] = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    emb = t(spark, sf_smoke, "embeddings").where(F.col("vec_id") < 64)
+    _former_aqe_off_runs()[name](spark, sf_smoke, emb, tmp_path)
+    assert [k for k in keys if k.startswith("spark.sql.adaptive.")] == []
 
 
 def test_dedup_clusters_iterations_never_move_edges(spark):
