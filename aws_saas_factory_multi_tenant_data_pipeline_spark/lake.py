@@ -12,14 +12,21 @@ Reference behavior re-expressed:
   table over the lake root, then ``recoverPartitions`` (≈ MSCK REPAIR).
 
 Scale notes (100 TB):
-- Writes repartition by the partition columns first so each Hive partition
-  is produced by a bounded number of tasks — avoids the classic
+- Writes hash-repartition on the full partition layout first
+  (``_by_layout``), so each Hive partition is produced by exactly one task
+  and every write adds exactly one file per partition — no
   every-task-writes-every-partition small-file explosion. At cluster scale
   this is the one shuffle in the ingest path and it is keyed on the same
   columns the storage layout uses.
+- The shuffle is sized at one writer task per core
+  (``defaultParallelism``). A write costs per file, not per byte (a PUT on
+  S3; forked ``chmod``s per directory, file and ``.crc`` on the local
+  Hadoop FS), and a micro-batch is small enough that AQE would coalesce
+  an unnumbered shuffle onto one task, which then creates every partition
+  file in turn while the other cores idle.
 - ``compact_partitions`` is the periodic OPTIMIZE-style rewrite the
   reference lacks (Firehose's known small-file weakness): rewrite a
-  partition subtree to ``target_file_mb`` files.
+  partition subtree to one file per partition.
 """
 
 from __future__ import annotations
@@ -60,8 +67,18 @@ def write_lake(
     pushdown, which JSON can never give).
     """
     pcols = partition_cols or PARTITION_COLS
-    # one shuffle keyed on the storage layout → bounded files per partition
-    (df.repartition(*[F.col(c) for c in pcols]).write.mode(mode).partitionBy(*pcols).format(fmt).save(root))
+    # one shuffle keyed on the storage layout → one file per partition,
+    # written by one task per core in parallel
+    _by_layout(df, pcols).write.mode(mode).partitionBy(*pcols).format(fmt).save(root)
+
+
+def _by_layout(df: DataFrame, pcols: list[str], n_writers: int = 0) -> DataFrame:
+    """Hash-repartition ``df`` on the full layout ``pcols`` into at least
+    one writer task per core. Each Hive partition lands in exactly one
+    task, so the write makes one file per partition; the explicit count
+    keeps AQE from coalescing a small shuffle onto a single writer."""
+    n = max(n_writers, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(n, *[F.col(c) for c in pcols])
 
 
 def write_quarantine(quarantine: DataFrame, root: str, error_type: str = "processing-failed") -> None:
@@ -146,7 +163,7 @@ def write_lake_overwrite_partitions(
     """
     pcols = partition_cols or PARTITION_COLS
     (
-        df.repartition(*[F.col(c) for c in pcols])
+        _by_layout(df, pcols)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*pcols)
@@ -175,10 +192,13 @@ def compact_partitions(
     fmt: str = "parquet",
     target_file_mb: int = 512,
 ) -> None:
-    """Small-file compaction: rewrite the lake to ~target-sized files per partition.
+    """Small-file compaction: rewrite the lake to one file per partition.
 
     The reference has no answer to Firehose's 60 s micro-file problem; at
-    100 TB this job is what keeps scan task counts sane. Rewrites into a
+    100 TB this job is what keeps scan task counts sane. The rewrite hashes
+    on the full layout, so each partition becomes exactly one file whatever
+    its size; ``target_file_mb`` only sets the writer-task count (lake
+    size / target, but at least one per core). Rewrites into a
     temp subtree then swaps via rename-aside (root -> root__old,
     tmp -> root, delete root__old): at no point is the only copy of the
     data deleted, so a crash at any step leaves either the old or the new
@@ -197,9 +217,9 @@ def compact_partitions(
     _recover_rename_swap(root, old)  # heal a crash between the two renames
     df = spark.read.format(fmt).load(root)
     size_bytes = _tree_size_bytes(spark, root)
-    n_files = max(1, size_bytes // (target_file_mb * 1024 * 1024))
+    n_writers = int(size_bytes // (target_file_mb * 1024 * 1024))
     (
-        df.repartition(int(n_files), *[F.col(c) for c in PARTITION_COLS])
+        _by_layout(df, PARTITION_COLS, n_writers)
         .write.mode("overwrite")
         .partitionBy(*PARTITION_COLS)
         .format(fmt)

@@ -1,5 +1,6 @@
-"""Change selection in tools/driver_sim.py --changed-since: a pack is
-re-verified when any of its leaf queries is touched."""
+"""Change selection in tools/driver_sim.py --changed-since: a query is
+re-verified when its module imports a changed module, and a pack when any
+of its leaf queries is touched."""
 
 from __future__ import annotations
 
@@ -48,3 +49,11 @@ def test_hand_written_pack_selected_through_quoted_component():
     # fn_web_time_pack names fn_url_family in its source; fn_family_pack2
     # lists fn_web_time_pack as a leaf
     assert {"fn_web_time_pack", "fn_family_pack2"} <= touched
+
+
+def test_query_selected_when_its_module_imports_the_changed_module():
+    # ext_llm_wave4 imports operators.clustering at top level; dedup_semantic's
+    # own source only calls the imported semantic_dedup
+    touched = touched_queries(REGISTRY, {os.path.normpath(
+        "aws_saas_factory_multi_tenant_data_pipeline_spark/operators/clustering.py")})
+    assert "dedup_semantic" in touched

@@ -4,22 +4,38 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.ingest import ingest_batch
-from aws_saas_factory_multi_tenant_data_pipeline_spark.lake import compact_partitions, write_lake
+from aws_saas_factory_multi_tenant_data_pipeline_spark.lake import (
+    compact_partitions,
+    write_lake,
+    write_lake_overwrite_partitions,
+)
 from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.joins import salted_join
 from aws_saas_factory_multi_tenant_data_pipeline_spark.sources import read_lake
 
 
-def _count_files(root: str) -> int:
-    return sum(
-        1
+def _parquet_files(root: str) -> list[tuple[str, str]]:
+    """(partition directory, file name) of every data file under ``root``."""
+    return [
+        (dp, f)
         for dp, _, fns in os.walk(root)
         for f in fns
         if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
+    ]
+
+
+def _count_files(root: str) -> int:
+    return len(_parquet_files(root))
+
+
+def _files_per_partition(root: str) -> Counter:
+    return Counter(dp for dp, _ in _parquet_files(root))
 
 
 def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
@@ -40,6 +56,27 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     assert after_rows == before_rows == 1000
     assert after_files < before_files
     assert after_files <= 2
+    # hashing on the full layout: exactly one file per Hive partition
+    assert set(_files_per_partition(root).values()) == {1}
+
+
+@pytest.mark.parametrize("write", [write_lake, write_lake_overwrite_partitions])
+def test_layout_write_runs_one_writer_per_core(spark, tmp_path, write):
+    root = str(tmp_path / "lake")
+    n_parts = 2 * spark.sparkContext.defaultParallelism
+    rows = [(f"t{i:03d}", "2024", "1", "2", "3", f"e{i}-{j}") for i in range(n_parts) for j in range(3)]
+    df = spark.createDataFrame(rows, "tenant string, year string, month string, day string, hour string, event string")
+    write(df, root)
+    files = _parquet_files(root)
+    # (a) several writer tasks made the files, not one coalesced task
+    writers = {re.match(r"part-(\d{5})", f).group(1) for _, f in files}
+    assert len(writers) > 1, writers
+    # (b) exactly one file per Hive partition
+    counts = _files_per_partition(root)
+    assert len(counts) == n_parts and set(counts.values()) == {1}
+    # (c) the rows read back are the rows written
+    back = read_lake(spark, root).select(*[F.col(c).cast("string") for c in df.columns])
+    assert sorted(map(tuple, back.collect())) == sorted(rows)
 
 
 def test_salted_join_matches_plain_join(spark, sf_smoke):

@@ -21,7 +21,8 @@ Usage:  python tools/driver_sim.py [sf_dir] [query ...]
         python tools/driver_sim.py --head N [sf_dir]   # first N registry entries
         python tools/driver_sim.py --changed-since REF [sf_dir]
             # only queries touched since git REF: a query is selected if
-            # its defining corpus module changed, if its function source
+            # its defining corpus module changed, if that module imports a
+            # changed module at top level, if its function source
             # references a changed package module, or (transitively) if
             # it wraps a touched component query (a leaf in
             # corpus/packs.py's table, or a quoted name in a pack's source) —
@@ -111,8 +112,28 @@ def changed_queries(registry, ref: str) -> set:
     return touched_queries(registry, {os.path.normpath(pth) for pth in out})
 
 
+def top_level_import_stems(path: str) -> set:
+    """Last component of every module ``path`` imports at top level, plus
+    every name it imports from one (``from ..operators import clustering``
+    names the ``clustering`` module)."""
+    import ast
+
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    stems = set()
+    for node in tree.body:
+        if isinstance(node, ast.Import):
+            stems |= {a.name.rsplit(".", 1)[-1] for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            if node.module:
+                stems.add(node.module.rsplit(".", 1)[-1])
+            stems |= {a.name for a in node.names}
+    return stems
+
+
 def touched_queries(registry, changed_paths: set) -> set:
     """Queries a change to ``changed_paths`` (repo-relative) can affect."""
+    import functools
     import inspect
 
     from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.packs import PACKS
@@ -120,6 +141,7 @@ def touched_queries(registry, changed_paths: set) -> set:
     stems = {os.path.splitext(os.path.basename(pth))[0] for pth in changed_paths}
     touched = set()
     sources = {}
+    imports_of = functools.cache(lambda f: top_level_import_stems(os.path.join(REPO, f)))
     for name, spec in registry.items():
         try:
             mod_file = os.path.normpath(os.path.relpath(
@@ -128,7 +150,7 @@ def touched_queries(registry, changed_paths: set) -> set:
         except (TypeError, OSError):
             touched.add(name)  # can't inspect → be safe, re-run
             continue
-        if mod_file in changed_paths:
+        if mod_file in changed_paths or stems & imports_of(mod_file):
             touched.add(name)
             continue
         src = sources[name]
