@@ -27,14 +27,30 @@ Scale notes (100 TB):
 - ``compact_partitions`` is the periodic OPTIMIZE-style rewrite the
   reference lacks (Firehose's known small-file weakness): rewrite a
   partition subtree to one file per partition.
+
+Every table-format feature below (snapshots, branches, WAP, compaction,
+redrive, upsert, rollups) is built from two protocols, each implemented
+once:
+- **Pointer commit** (``write_snapshot_to_branch``; ``write_snapshot`` is
+  its ``main`` case): write an immutable ``v<N>`` directory, log it, then
+  move a pointer file (``_write_pointer``, a tmp file plus an atomic
+  ``os.replace``).
+- **Rename-aside promote** (``_promote``): set the live tree aside,
+  rename the staged tree into place, then delete the old one. Every
+  rewriter first runs ``_recover_rename_swap``, which restores a tree a
+  crash left set aside.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
+import shutil
+from functools import reduce
+from operator import and_, or_
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.model import PARTITION_COLS
@@ -53,23 +69,17 @@ def _check_ident(name: str, what: str) -> str:
     return name
 
 
-def write_lake(
-    df: DataFrame,
-    root: str,
-    fmt: str = "parquet",
-    mode: str = "append",
-    partition_cols: list[str] | None = None,
-) -> None:
-    """A4 partitioned lake write.
+def write_lake(df: DataFrame, root: str, fmt: str = "parquet") -> None:
+    """A4 partitioned lake write: append ``df`` under the ``PARTITION_COLS``
+    layout.
 
     ``fmt="json"`` gives byte-level parity with the reference's JSON-lines
     lake; ``parquet`` (default) is the scale path (column pruning + min/max
     pushdown, which JSON can never give).
     """
-    pcols = partition_cols or PARTITION_COLS
     # one shuffle keyed on the storage layout → one file per partition,
     # written by one task per core in parallel
-    _by_layout(df, pcols).write.mode(mode).partitionBy(*pcols).format(fmt).save(root)
+    _by_layout(df, PARTITION_COLS).write.mode("append").partitionBy(*PARTITION_COLS).format(fmt).save(root)
 
 
 def _by_layout(df: DataFrame, pcols: list[str], n_writers: int = 0) -> DataFrame:
@@ -186,6 +196,21 @@ def _recover_rename_swap(root: str, old: str) -> bool:
     return False
 
 
+def _promote(root: str, staged: str | None, old: str) -> None:
+    """The rename-aside swap: set ``root`` aside as ``old`` (atomic),
+    rename ``staged`` into place (atomic; ``None`` retires ``root``
+    without a replacement), and only then delete ``old``. No step deletes
+    the only copy of the data; a crash between the renames leaves
+    ``root`` absent and ``old`` intact, which the caller's entry-time
+    :func:`_recover_rename_swap` restores on the next run."""
+    if os.path.exists(old):  # left by a run that crashed after promoting
+        shutil.rmtree(old)
+    os.rename(root, old)
+    if staged is not None:
+        os.rename(staged, root)
+    shutil.rmtree(old)
+
+
 def compact_partitions(
     spark: SparkSession,
     root: str,
@@ -225,13 +250,22 @@ def compact_partitions(
         .format(fmt)
         .save(tmp)
     )
-    import shutil
+    _promote(root, tmp, old)
 
-    if os.path.exists(old):  # leftover from a crashed prior run
-        shutil.rmtree(old)
-    os.rename(root, old)  # step 1: set the live tree aside (atomic)
-    os.rename(tmp, root)  # step 2: promote the compacted tree (atomic)
-    shutil.rmtree(old)  # step 3: only now drop the superseded copy
+
+def _touched_partitions(df: DataFrame, pcols: list[str], limit: int, what: str):
+    """The distinct ``pcols`` tuples in ``df`` and a static predicate that
+    selects exactly those partitions (``None`` when ``df`` is empty). The
+    tuples are collected to the driver, so more than ``limit`` of them
+    raises: a change that wide should be a full rebuild, not ``what``."""
+    keys = df.select(*pcols).distinct().limit(limit + 1).collect()
+    if len(keys) > limit:
+        raise ValueError(
+            f"more than {limit} partitions touched; "
+            f"use a full rebuild (write_lake) instead of {what}"
+        )
+    clauses = [reduce(and_, [F.col(c) == F.lit(row[c]) for c in pcols]) for row in keys]
+    return keys, reduce(or_, clauses) if clauses else None
 
 
 def maintain_rollup(
@@ -266,21 +300,9 @@ def maintain_rollup(
     second shuffle is introduced beyond the rollup aggregation itself.
     """
     pcols = list(partition_cols or PARTITION_COLS)
-    keys = touched.select(*pcols).distinct().limit(max_touched_partitions + 1).collect()
-    if len(keys) > max_touched_partitions:
-        raise ValueError(
-            f"delta touches more than {max_touched_partitions} partitions; "
-            "use a full rebuild (write_lake) instead of incremental refresh"
-        )
+    keys, pred = _touched_partitions(touched, pcols, max_touched_partitions, "an incremental refresh")
     if not keys:
         return 0
-    pred = None
-    for row in keys:
-        clause = None
-        for c in pcols:
-            term = F.col(c) == F.lit(row[c])
-            clause = term if clause is None else (clause & term)
-        pred = clause if pred is None else (pred | clause)
     fact = spark.read.format(fmt).load(fact_root).where(pred)
     rolled = build(fact)
     missing = [c for c in pcols if c not in rolled.columns]
@@ -339,17 +361,10 @@ def upsert_partitioned(
     """
     pcols = list(partition_cols or PARTITION_COLS)
     kcols = list(key_cols)
-    keys = changes.select(*pcols).distinct().limit(max_touched_partitions + 1).collect()
-    if len(keys) > max_touched_partitions:
-        raise ValueError(
-            f"changeset touches more than {max_touched_partitions} partitions; "
-            "use a full rebuild (write_lake) instead of a keyed upsert"
-        )
+    keys, pred = _touched_partitions(changes, pcols, max_touched_partitions, "a keyed upsert")
     if not keys:
         return 0
     if seq_col is not None:
-        from pyspark.sql import Window
-
         w = Window.partitionBy(*kcols).orderBy(F.col(seq_col).desc(), *kcols)
         changes = (
             changes.withColumn("__rn", F.row_number().over(w))
@@ -362,13 +377,6 @@ def upsert_partitioned(
             raise ValueError(
                 "changeset has duplicate keys and no seq_col to pick a winner"
             )
-    pred = None
-    for row in keys:
-        clause = None
-        for c in pcols:
-            term = F.col(c) == F.lit(row[c])
-            clause = term if clause is None else (clause & term)
-        pred = clause if pred is None else (pred | clause)
     try:
         current = spark.read.format(fmt).load(root).where(pred)
     except Exception as exc:  # PATH_NOT_FOUND: first changeset bootstraps
@@ -398,8 +406,6 @@ def upsert_partitioned(
         write_lake_overwrite_partitions(merged, root, fmt=fmt, partition_cols=pcols)
     finally:
         merged.unpersist()
-    import shutil
-
     for row in keys:
         if tuple(row[c] for c in pcols) not in present:
             victim = os.path.join(root, *[f"{c}={row[c]}" for c in pcols])
@@ -422,7 +428,15 @@ def reprocess_quarantine(
     upstream fix this typically means a corrected parser or a relaxed
     ``strict_types`` — appends recovered rows to the lake, and REWRITES
     the quarantine directory with only the still-failing remainder
-    (rename-aside swap, same crash-safety recipe as compact_partitions).
+    (the rename-aside :func:`_promote`, recovered on entry like
+    compact_partitions). Recovered rows are at-least-once across a crash
+    between the swap's two renames: the entry-time recovery restores the
+    whole set-aside quarantine, so a row already appended to the lake
+    before the crash is re-driven and appended again, as in the stream
+    sink's default mode. The recovery only runs while ``error/<type>``
+    is absent: a quarantine append that lands between the crash and the
+    next redrive recreates it, and that redrive then drops the set-aside
+    rows as a finished swap's leftover.
     Requires the quarantine rows to carry ``tenant_id`` (ingest_batch
     writes it when the source had one); rows without it cannot be
     re-attributed and are kept quarantined.
@@ -434,6 +448,9 @@ def reprocess_quarantine(
     from aws_saas_factory_multi_tenant_data_pipeline_spark.ingest import ingest_batch
 
     qdir = os.path.join(root, "error", error_type)
+    base = qdir.rstrip("/")
+    tmp, old = base + "__redrive_tmp", base + "__redrive_old"
+    _recover_rename_swap(qdir, old)  # heal a crash between the two renames
     if not os.path.exists(qdir):
         return (0, 0)
     q = spark.read.json(qdir)
@@ -468,21 +485,11 @@ def reprocess_quarantine(
     # reads the tree it is replacing), then promote by rename. A poisoned
     # upstream day can make the quarantine arbitrarily large — it must
     # never round-trip through the driver.
-    import shutil
-
-    tmp = qdir.rstrip("/") + "__redrive_tmp"
-    old = qdir.rstrip("/") + "__redrive_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)  # left by a run that crashed before promoting
     n_remaining = remaining.count()
     if n_remaining:
         remaining.write.format("json").save(tmp)
-        os.rename(qdir, old)
-        os.rename(tmp, qdir)
-        shutil.rmtree(old)
-    else:
-        os.rename(qdir, old)
-        shutil.rmtree(old)
+    _promote(qdir, tmp if n_remaining else None, old)
     return (n_recovered, n_remaining)
 
 
@@ -496,8 +503,6 @@ def delete_tenant(spark: SparkSession, root: str, tenant_id: str, table: str | N
     Returns the number of partition directories removed. At object-store
     scale the same call is a prefix delete on ``tenant=<id>/``.
     """
-    import shutil
-
     from aws_saas_factory_multi_tenant_data_pipeline_spark.tenancy import TenantContext
 
     TenantContext(tenant_id)  # same identity rule as ingest; rejects path shapes
@@ -523,6 +528,32 @@ def delete_tenant(spark: SparkSession, root: str, tenant_id: str, table: str | N
 
 def _versions_meta(root: str) -> str:
     return os.path.join(root, "_LATEST")
+
+
+def _read_pointer(path: str) -> int | None:
+    """The version a pointer file names; None when there is no such file."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return int(f.read().strip())
+
+
+def _write_pointer(path: str, version: int) -> None:
+    """Move a pointer atomically: write a tmp file, then ``os.replace`` it
+    over the pointer (on an object store, a conditional put)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(str(version))
+    os.replace(tmp, path)
+
+
+def _version_dirs(root: str) -> list[int]:
+    """The numbers of the ``v<N>`` directories under ``root``, ascending."""
+    return sorted(
+        int(m.group(1))
+        for d in os.listdir(root)
+        if (m := re.fullmatch(r"v(\d+)", d)) and os.path.isdir(os.path.join(root, d))
+    )
 
 
 class ConcurrentSnapshotError(RuntimeError):
@@ -553,11 +584,9 @@ def write_snapshot(
     partition_cols: list[str] | None = None,
     expected_version: int | None = None,
 ) -> int:
-    """Write ``df`` as the next immutable snapshot version and atomically
-    promote the pointer. Returns the new version number.
-
-    Local-FS pointer swap is os.replace (atomic rename); on an object
-    store the same contract is a conditional put of the pointer object.
+    """Write ``df`` as the next immutable snapshot version of ``main`` and
+    atomically promote main's pointer: :func:`write_snapshot_to_branch`
+    on ``main``, creating ``root`` first. Returns the new version number.
 
     ``expected_version`` enables OPTIMISTIC CONCURRENCY (the Delta/Iceberg
     commit rule): pass the version your read-modify-write began from; if
@@ -571,62 +600,11 @@ def write_snapshot(
     store's conditional put closes it entirely.
     """
     os.makedirs(root, exist_ok=True)
-    if expected_version is not None and latest_snapshot_version(root) != expected_version:
-        raise ConcurrentSnapshotError(
-            f"expected v{expected_version} but table is at "
-            f"v{latest_snapshot_version(root)} — re-read and retry"
-        )
-    # next version = 1 + max(pointer, existing dirs): after a rollback the
-    # superseded versions are still on disk, and a new write must branch
-    # FORWARD past them, never overwrite an immutable snapshot
-    existing = [
-        int(m.group(1))
-        for d in os.listdir(root)
-        if (m := re.fullmatch(r"v(\d+)", d)) and os.path.isdir(os.path.join(root, d))
-    ]
-    version = max([latest_snapshot_version(root), *existing], default=0) + 1
-    out = os.path.join(root, f"v{version}")
-    w = df.write.mode("errorifexists")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(out)
-    if expected_version is not None and latest_snapshot_version(root) != expected_version:
-        fate = (
-            f"orphan v{version} will be vacuumed"
-            if _mark_aborted(out)
-            else f"orphan v{version} could not be stamped — reclaim via "
-            "vacuum_orphans(include_unmarked_above_refs=True)"
-        )
-        raise ConcurrentSnapshotError(
-            f"expected v{expected_version} but table is at "
-            f"v{latest_snapshot_version(root)} — re-read and retry ({fate})"
-        )
-    prev = latest_snapshot_version(root)
-    # record the commit AFTER the CAS re-check but BEFORE the promote:
-    # an aborted commit raises above and never reaches the log (what lets
-    # vacuum_orphans tell a lost race from committed history), while a
-    # PROMOTED head is always logged — the reverse order left a crash
-    # window where a promoted version had no parent record, permanently
-    # breaking fast_forward's ancestry walk. The remaining window
-    # (logged, then crash before promote) only leaves a harmless
-    # never-promoted entry that vacuum conservatively preserves.
-    import json as _json
-
-    with open(_commit_log(root), "a") as f:
-        f.write(_json.dumps({"version": version, "parent": prev}) + "\n")
-    tmp = _versions_meta(root) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, _versions_meta(root))
-    return version
+    return write_snapshot_to_branch(df, root, "main", partition_cols, expected_version)
 
 
 def latest_snapshot_version(root: str) -> int:
-    meta = _versions_meta(root)
-    if not os.path.exists(meta):
-        return 0
-    with open(meta) as f:
-        return int(f.read().strip())
+    return _read_pointer(_versions_meta(root)) or 0
 
 
 def read_snapshot(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
@@ -642,26 +620,16 @@ def rollback_snapshot(root: str, version: int) -> None:
     data rewrite; later versions stay on disk for re-promotion/audit."""
     if not os.path.isdir(os.path.join(root, f"v{version}")):
         raise ValueError(f"snapshot v{version} does not exist at {root}")
-    tmp = _versions_meta(root) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, _versions_meta(root))
+    _write_pointer(_versions_meta(root), version)
 
 
 def vacuum_snapshots(root: str, keep_last: int = 2) -> list[int]:
     """Drop snapshot directories older than the newest ``keep_last``
     versions, never dropping the currently-pointed version NOR any
     version a branch points at. Returns the removed version numbers."""
-    import re
-    import shutil
-
     current = latest_snapshot_version(root)
     protected = {current} | set(list_branches(root).values())
-    versions = sorted(
-        int(m.group(1))
-        for d in os.listdir(root)
-        if (m := re.fullmatch(r"v(\d+)", d)) and os.path.isdir(os.path.join(root, d))
-    )
+    versions = _version_dirs(root)
     victims = [v for v in versions[:-keep_last] if v not in protected] if keep_last else []
     for v in victims:
         shutil.rmtree(os.path.join(root, f"v{v}"))
@@ -718,7 +686,6 @@ def vacuum_orphans(
     Concurrent vacuums are safe: a directory that vanishes between the
     listing and the delete is simply skipped.
     """
-    import shutil
     import time as _time
 
     current = latest_snapshot_version(root)
@@ -728,14 +695,10 @@ def vacuum_orphans(
     committed = set(_read_commit_parents(root))
     now = _time.time()
     victims: list[int] = []
-    for d in os.listdir(root):
-        m = re.fullmatch(r"v(\d+)", d)
-        path = os.path.join(root, d)
-        if not m or not os.path.isdir(path):
-            continue
-        v = int(m.group(1))
+    for v in _version_dirs(root):
         if v in refs or v in committed:
             continue
+        path = os.path.join(root, f"v{v}")
         torn = not os.path.exists(os.path.join(path, "_SUCCESS"))
         aborted = os.path.exists(os.path.join(path, "_ABORTED"))
         legacy = include_unmarked_above_refs and v > max_ref
@@ -777,8 +740,6 @@ def _commit_log(root: str) -> str:
 
 
 def _read_commit_parents(root: str) -> dict[int, int]:
-    import json
-
     parents: dict[int, int] = {}
     path = _commit_log(root)
     if os.path.exists(path):
@@ -792,13 +753,16 @@ def _read_commit_parents(root: str) -> dict[int, int]:
 
 def branch_version(root: str, branch: str) -> int:
     """Current version a branch points at (0 = no commits)."""
-    meta = _branch_meta(root, branch)
-    if not os.path.exists(meta):
-        if branch == "main":
-            return 0
+    v = _read_pointer(_branch_meta(root, branch))
+    if v is None and branch != "main":
         raise ValueError(f"branch {branch!r} does not exist at {root}")
-    with open(meta) as f:
-        return int(f.read().strip())
+    return v or 0
+
+
+def _head(root: str, branch: str) -> int:
+    """A branch's head: main's through :func:`latest_snapshot_version`,
+    any other branch's through :func:`branch_version`."""
+    return latest_snapshot_version(root) if branch == "main" else branch_version(root, branch)
 
 
 def create_branch(root: str, branch: str, from_version: int | None = None) -> int:
@@ -812,10 +776,7 @@ def create_branch(root: str, branch: str, from_version: int | None = None) -> in
     v = latest_snapshot_version(root) if from_version is None else from_version
     if v > 0 and not os.path.isdir(os.path.join(root, f"v{v}")):
         raise ValueError(f"snapshot v{v} does not exist at {root}")
-    tmp = meta + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(v))
-    os.replace(tmp, meta)
+    _write_pointer(meta, v)
     return v
 
 
@@ -842,47 +803,48 @@ def write_snapshot_to_branch(
     partition_cols: list[str] | None = None,
     expected_version: int | None = None,
 ) -> int:
-    """`write_snapshot` against a branch pointer: the new version's
-    parent is the branch's current head (recorded in the commit log),
-    main and other branches are untouched, and ``expected_version``
-    gives the same optimistic-concurrency rule per branch."""
-    import json
-
-    base = branch_version(root, branch)
+    """The snapshot commit: write ``df`` as the next immutable version and
+    move ``branch``'s pointer to it (:func:`write_snapshot` is the
+    ``main`` case). The new version's parent is the branch's current head
+    (recorded in the commit log), other branches are untouched, and
+    ``expected_version`` is the optimistic-concurrency check described
+    at :func:`write_snapshot`, per branch."""
+    base = _head(root, branch)
     if expected_version is not None and base != expected_version:
         raise ConcurrentSnapshotError(
-            f"branch {branch!r}: expected v{expected_version} but at v{base}"
+            f"branch {branch!r}: expected v{expected_version} but at v{base} — re-read and retry"
         )
-    existing = [
-        int(m.group(1))
-        for d in os.listdir(root)
-        if (m := re.fullmatch(r"v(\d+)", d)) and os.path.isdir(os.path.join(root, d))
-    ]
-    version = max([base, latest_snapshot_version(root), *existing], default=0) + 1
+    # next version = 1 + max(head, main, existing dirs): after a rollback
+    # the superseded versions are still on disk, and a new write must
+    # branch FORWARD past them, never overwrite an immutable snapshot
+    version = max([base, latest_snapshot_version(root), *_version_dirs(root)]) + 1
+    out = os.path.join(root, f"v{version}")
     w = df.write.mode("errorifexists")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
-    out = os.path.join(root, f"v{version}")
     w.parquet(out)
-    if expected_version is not None and branch_version(root, branch) != expected_version:
+    if expected_version is not None and (now := _head(root, branch)) != expected_version:
         fate = (
             f"orphan v{version} will be vacuumed"
             if _mark_aborted(out)
             else f"orphan v{version} could not be stamped — reclaim via "
             "vacuum_orphans(include_unmarked_above_refs=True)"
         )
-        raise ConcurrentSnapshotError(f"branch {branch!r}: lost the race ({fate})")
-    # log AFTER the CAS re-check, BEFORE the promote (the write_snapshot
-    # convention): an aborted branch commit raised above and never
-    # reaches the log, while every promoted branch head is guaranteed a
-    # parent record for fast_forward's ancestry walk
+        raise ConcurrentSnapshotError(
+            f"branch {branch!r}: lost the race, expected v{expected_version} but at "
+            f"v{now} — re-read and retry ({fate})"
+        )
+    # record the commit AFTER the CAS re-check but BEFORE the promote:
+    # an aborted commit raises above and never reaches the log (what lets
+    # vacuum_orphans tell a lost race from committed history), while a
+    # PROMOTED head is always logged — the reverse order left a crash
+    # window where a promoted version had no parent record, permanently
+    # breaking fast_forward's ancestry walk. The remaining window
+    # (logged, then crash before promote) only leaves a harmless
+    # never-promoted entry that vacuum conservatively preserves.
     with open(_commit_log(root), "a") as f:
         f.write(json.dumps({"version": version, "parent": base, "branch": branch}) + "\n")
-    meta = _branch_meta(root, branch)
-    tmp = meta + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, meta)
+    _write_pointer(_branch_meta(root, branch), version)
     return version
 
 
@@ -901,7 +863,7 @@ def fast_forward(root: str, branch: str, into: str = "main") -> int:
     them is a data job (merge_upsert + a new commit), not a pointer
     swap. Returns the new head version."""
     head = branch_version(root, branch)
-    target = branch_version(root, into) if into != "main" else latest_snapshot_version(root)
+    target = _head(root, into)
     parents = _read_commit_parents(root)
     v = head
     seen = set()
@@ -917,11 +879,7 @@ def fast_forward(root: str, branch: str, into: str = "main") -> int:
             f"cannot fast-forward: {into!r} (v{target}) is not an ancestor of "
             f"{branch!r} (v{head}) — histories diverged; merge the data instead"
         )
-    meta = _branch_meta(root, into)
-    tmp = meta + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(head))
-    os.replace(tmp, meta)
+    _write_pointer(_branch_meta(root, into), head)
     return head
 
 
@@ -1051,8 +1009,6 @@ def expire_partitions(
     only: no file rewrite, no scan of surviving data — the same
     O(expired-partitions) shape as ``delete_tenant``. Returns the number
     of partition directories dropped."""
-    import shutil
-
     _check_ident(partition_col, "partition column")
     prefix = f"{partition_col}="
     dropped = 0
@@ -1078,8 +1034,6 @@ def record_lineage(
     ("did my inputs change?") needs, written driver-side once per write
     (metadata cost, not a data pass). Input roots are derived from the
     plan's file sources; in-memory inputs yield an empty list."""
-    import json as _json
-
     files = df.inputFiles()
     roots = sorted({os.path.dirname(f) for f in files})
     entry = {
@@ -1093,19 +1047,17 @@ def record_lineage(
     lineage_dir = os.path.join(output_root, "_lineage")
     os.makedirs(lineage_dir, exist_ok=True)
     with open(os.path.join(lineage_dir, "log.jsonl"), "a") as f:
-        f.write(_json.dumps(entry, sort_keys=True) + "\n")
+        f.write(json.dumps(entry, sort_keys=True) + "\n")
     return entry
 
 
 def read_lineage(root: str) -> list[dict]:
     """All lineage entries recorded for ``root`` (oldest first)."""
-    import json as _json
-
     path = os.path.join(root, "_lineage", "log.jsonl")
     if not os.path.exists(path):
         return []
     with open(path) as f:
-        return [_json.loads(line) for line in f if line.strip()]
+        return [json.loads(line) for line in f if line.strip()]
 
 
 def optimize_table(
@@ -1132,14 +1084,13 @@ def optimize_table(
     data is ever unreachable, but the swap itself is NOT atomic: a crash
     between the two renames leaves ``root`` absent with the data intact
     in ``<root>__opt_old`` — the entry-time recovery below (shared with
-    compact_partitions) restores it on the next run. Returns a report
+    compact_partitions and reprocess_quarantine) restores it on the next
+    run. Returns a report
     dict: files/bytes before and after. Partitioned lake trees use
     ``compact_partitions``; snapshot tables should be optimized by
     writing an optimized NEW version instead (immutable versions are
     never rewritten in place).
     """
-    import shutil
-
     base = root.rstrip("/")
     tmp, old = base + "__opt_tmp", base + "__opt_old"
     _recover_rename_swap(root, old)  # heal a crash between the two renames
@@ -1154,11 +1105,7 @@ def optimize_table(
     else:
         out = out.repartition(int(n_files))
     out.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(root, old)
-    os.rename(tmp, root)
-    shutil.rmtree(old)
+    _promote(root, tmp, old)
     report = {
         "files_before": files_before,
         "files_after": len(spark.read.parquet(root).inputFiles()),

@@ -31,6 +31,16 @@ INGEST_METRICS = (
 )
 
 
+def _ingest_metrics(tenant_col: str, payload_col: str) -> list:
+    """The ``INGEST_METRICS`` expressions, in that order."""
+    return [
+        F.count(F.lit(1)).alias("n_records"),
+        F.approx_count_distinct(tenant_col).alias("n_tenants_approx"),
+        F.sum(F.coalesce(F.length(payload_col), F.lit(0))).alias("bytes_in"),
+        F.sum(F.col(payload_col).isNull().cast("long")).alias("n_null_payload"),
+    ]
+
+
 def observed_ingest(
     df: DataFrame,
     tenant_col: str = "tenant_id",
@@ -46,14 +56,7 @@ def observed_ingest(
     :func:`observed_stream` instead (Observation objects are batch-only).
     """
     obs = Observation(name)
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_records"),
-        F.approx_count_distinct(tenant_col).alias("n_tenants_approx"),
-        F.sum(F.coalesce(F.length(payload_col), F.lit(0))).alias("bytes_in"),
-        F.sum(F.col(payload_col).isNull().cast("long")).alias("n_null_payload"),
-    )
-    return out, obs
+    return df.observe(obs, *_ingest_metrics(tenant_col, payload_col)), obs
 
 
 def observed_stream(
@@ -66,13 +69,7 @@ def observed_stream(
     batch's values appear in ``query.lastProgress['observedMetrics'][name]``
     and in every ``StreamingQueryListener.onQueryProgress`` event — the
     subscription point for an external metrics shipper."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("n_records"),
-        F.approx_count_distinct(tenant_col).alias("n_tenants_approx"),
-        F.sum(F.coalesce(F.length(payload_col), F.lit(0))).alias("bytes_in"),
-        F.sum(F.col(payload_col).isNull().cast("long")).alias("n_null_payload"),
-    )
+    return df.observe(name, *_ingest_metrics(tenant_col, payload_col))
 
 
 def observed_count(obs: Observation, metric: str) -> int | None:

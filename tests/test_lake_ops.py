@@ -375,6 +375,16 @@ def test_upsert_partitioned_insert_update_delete(spark, tmp_path):
         (r.id, r.name, r.val, r.part)
         for r in spark.read.parquet(root).collect()
     } == got
+    # a changeset wider than the cap demands a full rebuild and writes nothing
+    with pytest.raises(ValueError, match="full rebuild"):
+        upsert_partitioned(
+            spark, root, changes, key_cols=["id"], partition_cols=["part"],
+            delete_col="is_deleted", max_touched_partitions=1,
+        )
+    assert {
+        (r.id, r.name, r.val, r.part)
+        for r in spark.read.parquet(root).collect()
+    } == got
 
 
 def test_upsert_partitioned_seq_col_and_dup_guard(spark, tmp_path):
@@ -457,6 +467,46 @@ def test_reprocess_quarantine_recovers_fixed_records(spark, tmp_path):
 
     # idempotent: nothing more recoverable under the same gate
     assert reprocess_quarantine(spark, root, strict_types=False, ingest_ts=1700000000) == (0, 1)
+
+
+def test_reprocess_quarantine_recovers_crash_between_renames(spark, tmp_path, monkeypatch):
+    """A redrive that dies between its swap's two renames leaves
+    error/<type> absent, with the still-failing rows set aside under
+    __redrive_old. The next redrive must restore them before anything
+    else, so a quarantine row the stream appends afterwards joins them
+    instead of replacing them."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark import lake
+
+    root = str(tmp_path / "redrive_crash")
+    qdir = os.path.join(root, "error", "validation-failed")
+    schema = "tenant_id string, raw string"
+    good = ("t0", json.dumps({"Data": {"device": "TV", "event": "ok", "region": "US"}}))
+    bad = [("t1", f"{{broken {i}") for i in range(5)]
+    res = ingest_batch(spark.createDataFrame([good, *bad], schema), ingest_ts=1700000000)
+    write_lake(res.valid, root)
+    lake.write_quarantine(res.quarantine, root, "validation-failed")
+
+    real_rename, calls = os.rename, {"n": 0}
+
+    def crashing_rename(src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("simulated crash between the two renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(lake.os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="simulated crash"):
+        lake.reprocess_quarantine(spark, root, ingest_ts=1700000000)
+    monkeypatch.setattr(lake.os, "rename", real_rename)
+    assert not os.path.exists(qdir)
+
+    lake.reprocess_quarantine(spark, root, ingest_ts=1700000000)
+    later = ingest_batch(spark.createDataFrame([("t1", "{broken later")], schema), ingest_ts=1700000000)
+    lake.write_quarantine(later.quarantine, root, "validation-failed")
+    lake.reprocess_quarantine(spark, root, ingest_ts=1700000000)
+    assert spark.read.json(qdir).count() == 6
+    assert read_lake(spark, root).count() == 1
+    assert not [d for d in os.listdir(os.path.dirname(qdir)) if "__redrive_" in d]
 
 
 def test_delete_tenant_removes_only_that_subtree(spark, tmp_path):
