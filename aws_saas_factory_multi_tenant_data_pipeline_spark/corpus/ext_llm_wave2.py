@@ -496,8 +496,7 @@ def dedup_minhash_portable(spark, sf_dir):
 
     d = t(spark, sf_dir, "documents")
     res = minhash_near_duplicates(
-        d, num_hashes=16, bands=4, jaccard_threshold=0.5,
-        persist_shingles=True, portable=True,
+        d, num_hashes=16, bands=4, jaccard_threshold=0.5, portable=True,
     )
     out = res.select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")

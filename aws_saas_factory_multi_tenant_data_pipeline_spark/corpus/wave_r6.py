@@ -719,9 +719,9 @@ def llm_budget_select(spark, sf_dir):
     # quality model preserves input columns, so the old two-scan
     # self-join on doc_id (a full corpus shuffle) was pure waste — the
     # r8 plan is scan → project → budget_select, shuffle-free upstream.
-    # r16: the quality-model regex pass fills the boundary cache from the
-    # scan's 1-2 partitions — conditional fan-out spreads that one pass
-    # (sf1 A/B: 4.5 s → 1.6 s, rows identical; no-op at real scale)
+    # r16: the quality-model regex pass fills budget_select's input cache
+    # from the scan's 1-2 partitions — conditional fan-out spreads that
+    # one pass (sf1 A/B: 4.5 s → 1.6 s, rows identical; no-op at real scale)
     d = fan_out_scan(d, "doc_id")
     full = quality_model_score(d).select(
         "doc_id",

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.model import PARTITION_COLS
+from aws_saas_factory_multi_tenant_data_pipeline_spark.session import persisted
 
 DEFAULT_DB = "multi_tenant_db"  # reference: "multi-tenant-db" (glue-stack.ts:39)
 
@@ -397,15 +398,12 @@ def upsert_partitioned(
     # surviving rows and drop their directories explicitly (local-FS
     # rmtree here; at object-store scale the same step is a prefix
     # delete, exactly like delete_tenant).
-    merged = merged.persist()
-    try:
+    with persisted(merged):
         present = {
             tuple(r[c] for c in pcols)
             for r in merged.select(*pcols).distinct().collect()
         }
         write_lake_overwrite_partitions(merged, root, fmt=fmt, partition_cols=pcols)
-    finally:
-        merged.unpersist()
     for row in keys:
         if tuple(row[c] for c in pcols) not in present:
             victim = os.path.join(root, *[f"{c}={row[c]}" for c in pcols])
@@ -433,10 +431,8 @@ def reprocess_quarantine(
     between the swap's two renames: the entry-time recovery restores the
     whole set-aside quarantine, so a row already appended to the lake
     before the crash is re-driven and appended again, as in the stream
-    sink's default mode. The recovery only runs while ``error/<type>``
-    is absent: a quarantine append that lands between the crash and the
-    next redrive recreates it, and that redrive then drops the set-aside
-    rows as a finished swap's leftover.
+    sink's default mode. A quarantine append that lands between the
+    crash and the next redrive keeps its rows too (:func:`_recover_redrive`).
     Requires the quarantine rows to carry ``tenant_id`` (ingest_batch
     writes it when the source had one); rows without it cannot be
     re-attributed and are kept quarantined.
@@ -450,7 +446,7 @@ def reprocess_quarantine(
     qdir = os.path.join(root, "error", error_type)
     base = qdir.rstrip("/")
     tmp, old = base + "__redrive_tmp", base + "__redrive_old"
-    _recover_rename_swap(qdir, old)  # heal a crash between the two renames
+    _recover_redrive(qdir, tmp, old)
     if not os.path.exists(qdir):
         return (0, 0)
     q = spark.read.json(qdir)
@@ -491,6 +487,26 @@ def reprocess_quarantine(
         remaining.write.format("json").save(tmp)
     _promote(qdir, tmp if n_remaining else None, old)
     return (n_recovered, n_remaining)
+
+
+def _recover_redrive(qdir: str, tmp: str, old: str) -> None:
+    """Entry-time recovery of :func:`reprocess_quarantine`'s swap. ``tmp``
+    next to ``old`` means the swap stopped between its two renames:
+    ``old`` is the whole quarantine as it was, and a stream append since
+    then may have recreated ``qdir``, so old's part files move into
+    ``qdir`` (made if needed) rather than replace it. ``old`` alone next
+    to a live ``qdir`` is a finished swap's leftover and goes now, before
+    a new ``tmp`` is written next to it."""
+    if not os.path.exists(old):
+        return
+    if os.path.exists(tmp):
+        os.makedirs(qdir, exist_ok=True)
+        for name in os.listdir(old):
+            if "part-" in name:  # part files and their .crc twins
+                os.rename(os.path.join(old, name), os.path.join(qdir, name))
+        shutil.rmtree(old)
+    elif not _recover_rename_swap(qdir, old):
+        shutil.rmtree(old)
 
 
 def delete_tenant(spark: SparkSession, root: str, tenant_id: str, table: str | None = None) -> int:

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.dedup import tokens
+from aws_saas_factory_multi_tenant_data_pipeline_spark.session import persisted
 
 
 def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -135,15 +136,11 @@ def learn_merges(
 ) -> DataFrame:
     """Learn the top ``n_merges`` BPE merges; returns (merge_rank,
     left_sym, right_sym, merged, pair_count) in merge order."""
-    base = (
-        word_frequencies(df, text_col)
-        .select(symbolize(F.col("word")).alias("s"), "cnt")
-        .persist()
-    )
-    base.count()  # materialize once; every round folds replaces on top
-    vocab = base
-    merges: list[tuple[int, str, str, str, int]] = []
-    try:
+    base = word_frequencies(df, text_col).select(symbolize(F.col("word")).alias("s"), "cnt")
+    with persisted(base):
+        base.count()  # materialize once; every round folds replaces on top
+        vocab = base
+        merges: list[tuple[int, str, str, str, int]] = []
         for r in range(1, n_merges + 1):
             best = (
                 pair_counts(vocab)
@@ -165,10 +162,8 @@ def learn_merges(
             # resolution).
             if r % 16 == 0:
                 vocab = vocab.localCheckpoint(eager=True)
-        return spark.createDataFrame(
-            merges,
-            "merge_rank int, left_sym string, right_sym string, "
-            "merged string, pair_count bigint",
-        )
-    finally:
-        base.unpersist()
+    return spark.createDataFrame(
+        merges,
+        "merge_rank int, left_sym string, right_sym string, "
+        "merged string, pair_count bigint",
+    )

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.fanout import (
     fan_out_scan,
 )
+from aws_saas_factory_multi_tenant_data_pipeline_spark.session import persisted
 
 # Mersenne prime 2^31-1: universal hashing a*x+b mod p — (p-1)^2 + b fits in
 # signed 64-bit, so the multiply never overflows under ANSI mode
@@ -160,7 +161,6 @@ def minhash_near_duplicates(
     bands: int = 16,
     shingle_k: int = 3,
     jaccard_threshold: float = 0.5,
-    persist_shingles: bool = True,
     portable: bool = False,
 ) -> DataFrame:
     """LSH candidate generation + exact-Jaccard verification.
@@ -176,16 +176,11 @@ def minhash_near_duplicates(
     oracle-backed ``dedup_minhash_portable`` corpus query uses it. The
     fast path keeps xxhash64 (~2× cheaper per shingle at 100 TB).
 
-    ``persist_shingles`` (default on) shingles the corpus ONCE and persists
-    the (id, shingles) frame (MEMORY_AND_DISK, spill-safe) so signature
-    generation and exact-Jaccard verification share it — without it the
-    whole normalize/tokenize/shingle pipeline runs twice. Disable for
-    one-shot small inputs where the persist round-trip costs more than the
-    recompute. The cached frame is attached to the returned DataFrame as
-    ``result.shingle_cache`` — long-lived sessions should call
-    ``result.shingle_cache.unpersist()`` once the result is consumed, so
-    repeated calls over different inputs don't accumulate cache entries
-    (``spark.catalog.clearCache()`` would nuke unrelated caches too).
+    The corpus is shingled ONCE: the (id, shingles) frame is persisted
+    (MEMORY_AND_DISK, spill-safe) so signature generation and
+    exact-Jaccard verification share it — without it the whole
+    normalize/tokenize/shingle pipeline runs twice. The pairs come back
+    eagerly checkpointed, with both persisted frames already released.
     """
     r = num_hashes // bands
     # r16 (guide §2.5 input parallelism): a single-file documents table
@@ -197,10 +192,6 @@ def minhash_near_duplicates(
     # no-op when the scan is already parallel, see fanout.py).
     df = fan_out_scan(df, id_col)
     shs = with_shingle_col(df, text_col, shingle_k).select(F.col(id_col), F.col("__shingles"))
-    if persist_shingles:
-        from pyspark import StorageLevel
-
-        shs = shs.persist(StorageLevel.MEMORY_AND_DISK)
     sigs = _signatures_from_shingles(shs, id_col, num_hashes, portable=portable)
     # band hash: the key only needs to preserve tuple EQUALITY (equal
     # signature tuples must collide; unequal ones almost surely not).
@@ -221,18 +212,6 @@ def minhash_near_duplicates(
             "band_idx", "band_hash"
         ),
     )
-    if persist_shingles:
-        # the band self-join references this frame twice, and Catalyst does
-        # NOT reuse the signature pipeline across the two sides (the
-        # broadcast side canonicalizes differently, so ReuseExchange never
-        # fires) — without this persist the shingle-hash explode + the
-        # num_hashes min-aggregates run twice. The frame is tiny
-        # (|docs|·bands rows of three fixed-width cols), so the cache cost
-        # is noise next to a second signature pass. Measured at sf0.1:
-        # 2.7 s → 1.6 s warm.
-        from pyspark import StorageLevel
-
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -263,12 +242,15 @@ def minhash_near_duplicates(
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if persist_shingles:
-        # precise cleanup handle (see docstring) — avoids both a session-
-        # lifetime cache leak and the clearCache() sledgehammer
-        result.shingle_cache = shs
-        result.band_cache = banded
-    return result
+    # the band self-join references `banded` twice, and Catalyst does NOT
+    # reuse the signature pipeline across the two sides (the broadcast
+    # side canonicalizes differently, so ReuseExchange never fires) —
+    # without its persist the shingle-hash explode + the num_hashes
+    # min-aggregates run twice. The frame is tiny (|docs|·bands rows of
+    # three fixed-width cols), so the cache cost is noise next to a
+    # second signature pass. Measured at sf0.1: 2.7 s → 1.6 s warm.
+    with persisted(shs), persisted(banded):
+        return result.localCheckpoint(eager=True)
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64) -> DataFrame:
@@ -314,16 +296,12 @@ def ngram_jaccard_pairs(
     The doc-level shingle frame is persisted once (same decision as the
     MinHash and PPJoin paths): both sides of the self-join read it, and
     without the persist the tokenize+shingle pipeline — the CPU-dominant
-    step — executes twice. Exposed as ``result.shingle_cache`` so callers
-    can unpersist.
+    step — executes twice. The pairs come back eagerly checkpointed.
     """
-    from pyspark import StorageLevel
-
     sized = (
         with_shingle_col(df, text_col, shingle_k, out="__sh")
         .select(F.col(id_col), F.col("__sh"))
         .withColumn("__n", F.size("__sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     inv = sized.select(id_col, "__n", F.explode("__sh").alias("__s"))
     a = inv.alias("a")
@@ -344,8 +322,8 @@ def ngram_jaccard_pairs(
     result = shared.withColumn("jaccard", jac).where(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
     )
-    result.shingle_cache = sized
-    return result
+    with persisted(sized):
+        return result.localCheckpoint(eager=True)
 
 
 def ngram_jaccard_pairs_prefix(
@@ -368,15 +346,14 @@ def ngram_jaccard_pairs_prefix(
     frequency statistics needed, deterministic across runs. Verification
     recomputes exact |∩|/|∪| from the FULL shingle arrays (the prefix
     index alone cannot count sharing), reusing the persisted shingle
-    frame like the MinHash verify path.
+    frame like the MinHash verify path. The pairs come back eagerly
+    checkpointed.
     """
     if not 0 < threshold <= 1:
         raise ValueError("prefix filtering requires 0 < threshold <= 1")
-    from pyspark import StorageLevel
-
     shs = with_shingle_col(df, text_col, shingle_k, out="__sh").select(
         F.col(id_col), F.col("__sh")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     n = F.size("__sh")
     p = n - F.ceil(F.lit(threshold) * n).cast("int") + 1
     ordered = F.transform(
@@ -415,8 +392,8 @@ def ngram_jaccard_pairs_prefix(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    result.shingle_cache = shs
-    return result
+    with persisted(shs):
+        return result.localCheckpoint(eager=True)
 
 
 def dedup_clusters(
@@ -441,7 +418,7 @@ def dedup_clusters(
     back to round 1 (multiplicative re-execution at 100 TB) and the
     convergence ``count()`` probe runs against the materialized frame, not
     a recomputation. The symmetrized EDGE list is pre-partitioned on the
-    per-iteration join key and PERSISTED (the PageRank treatment,
+    per-iteration join key and PERSISTED for the loop (the PageRank treatment,
     `operators/graph.py`): InMemoryTableScan preserves the cached
     hashpartitioning, so iterations shuffle only the node-sized label
     frame — re-deriving the union+distinct per round would both recompute
@@ -450,57 +427,55 @@ def dedup_clusters(
     emitted: labels are then PARTIAL — one component may carry several
     cluster_ids.
     """
-    from pyspark import StorageLevel
-
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
         .repartition(F.col("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        # materialize l0: iteration 1 must not re-derive the distinct
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels.hint("shuffle_hash"), edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
+    with persisted(edges):
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
+            # materialize l0: iteration 1 must not re-derive the distinct
+            .localCheckpoint(eager=True)
         )
-        if plan_probe is not None:  # test hook: capture the iteration body
-            plan_probe.append(
-                neighbor_min._jdf.queryExecution().executedPlan().toString()
+        converged = False
+        for _ in range(max_iters):
+            neighbor_min = (
+                edges.join(labels.hint("shuffle_hash"), edges.dst == labels.node)
+                .groupBy("src")
+                .agg(F.min("label").alias("nbr_label"))
             )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                    "label"
-                ),
+            if plan_probe is not None:  # test hook: capture the iteration body
+                plan_probe.append(
+                    neighbor_min._jdf.queryExecution().executedPlan().toString()
+                )
+            new_labels = (
+                labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
+                .select(
+                    "node",
+                    F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
+                        "label"
+                    ),
+                )
             )
-        )
-        # truncate lineage BEFORE the convergence probe so the count() runs
-        # on the materialized frame and later iterations never re-evaluate
-        # earlier rounds
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
+            # truncate lineage BEFORE the convergence probe so the count() runs
+            # on the materialized frame and later iterations never re-evaluate
+            # earlier rounds
+            new_labels = new_labels.localCheckpoint(eager=True)
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .where(F.col("n.label") != F.col("o.label"))
+                .limit(1)
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                converged = True
+                break
     if not converged:
         warnings.warn(
             f"dedup_clusters: not converged after max_iters={max_iters}; "
@@ -509,8 +484,6 @@ def dedup_clusters(
             RuntimeWarning,
             stacklevel=2,
         )
-    # the label frame is checkpointed — the cached edge list can go
-    edges.unpersist(blocking=False)
     return labels.select(F.col("node").alias("node_id"), F.col("label").alias("cluster_id"))
 
 
@@ -911,9 +884,9 @@ def containment_pairs(
     containment of documents", SEQUENCES 1997).
 
     Same scale shape as :func:`ngram_jaccard_pairs`: shingle once
-    (persisted, exposed as ``result.shingle_cache``), explode to an
-    inverted index, equi-join on shingle — candidate pairs share ≥1
-    shingle, never all-pairs. Returns (id_a, id_b, shared, n_a, n_b,
+    (persisted for the call), explode to an inverted index, equi-join on
+    shingle — candidate pairs share ≥1 shingle, never all-pairs; the
+    pairs come back eagerly checkpointed. Returns (id_a, id_b, shared, n_a, n_b,
     c_ab, c_ba, contained) for pairs where max(c_ab, c_ba) ≥ tau;
     ``contained`` names the swallowed side ('a', 'b', or 'both' when
     the sets coincide). Counts are exact ints; the divisions are
@@ -926,64 +899,61 @@ def containment_pairs(
     Denominators stay the full shingle counts, so surviving scores are
     conservative (a pair can lose shared evidence, never gain it).
     """
-    from pyspark import StorageLevel
-
     sized = (
         with_shingle_col(df, text_col, shingle_k, out="__sh")
         .select(F.col(id_col), F.col("__sh"))
         .withColumn("__n", F.size("__sh"))
         .where(F.col("__n") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    inv = sized.select(id_col, "__n", F.explode("__sh").alias("__s"))
-    if max_df is not None:
-        # the documented 100 TB lever (SCALE.md): drop boilerplate
-        # shingles appearing in more than max_df of all docs BEFORE the
-        # self-join — candidate pairs shrink from the head of the
-        # shingle-frequency distribution, where they explode. Denominators
-        # (__n) stay the FULL distinct-shingle counts, so scores for
-        # surviving pairs are conservative (never inflated) — a pair can
-        # only lose evidence, not gain it.
-        n_docs = sized.count()
-        hot = (
-            inv.groupBy("__s")
-            .agg(F.count("*").alias("__df"))
-            .where(F.col("__df") > max_df * n_docs)
-            .select("__s")
+    with persisted(sized):
+        inv = sized.select(id_col, "__n", F.explode("__sh").alias("__s"))
+        if max_df is not None:
+            # the documented 100 TB lever (SCALE.md): drop boilerplate
+            # shingles appearing in more than max_df of all docs BEFORE the
+            # self-join — candidate pairs shrink from the head of the
+            # shingle-frequency distribution, where they explode. Denominators
+            # (__n) stay the FULL distinct-shingle counts, so scores for
+            # surviving pairs are conservative (never inflated) — a pair can
+            # only lose evidence, not gain it.
+            n_docs = sized.count()
+            hot = (
+                inv.groupBy("__s")
+                .agg(F.count("*").alias("__df"))
+                .where(F.col("__df") > max_df * n_docs)
+                .select("__s")
+            )
+            inv = inv.join(F.broadcast(hot), "__s", "left_anti")
+        a = inv.alias("a")
+        b = inv.alias("b")
+        shared = (
+            a.join(
+                b,
+                (F.col("a.__s") == F.col("b.__s"))
+                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            )
+            .groupBy(
+                F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+                F.col("a.__n").alias("n_a"),
+                F.col("b.__n").alias("n_b"),
+            )
+            .agg(F.count("*").alias("shared"))
         )
-        inv = inv.join(F.broadcast(hot), "__s", "left_anti")
-    a = inv.alias("a")
-    b = inv.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.__s") == F.col("b.__s"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        c_ab = F.col("shared").cast("double") / F.col("n_a").cast("double")
+        c_ba = F.col("shared").cast("double") / F.col("n_b").cast("double")
+        contained = (
+            F.when((F.col("c_ab") >= 1.0) & (F.col("c_ba") >= 1.0), "both")
+            .when(F.col("c_ab") >= F.col("c_ba"), "a")
+            .otherwise("b")
         )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.__n").alias("n_a"),
-            F.col("b.__n").alias("n_b"),
+        return (
+            shared.withColumn("c_ab", c_ab)
+            .withColumn("c_ba", c_ba)
+            .where(F.greatest("c_ab", "c_ba") >= tau)
+            .withColumn("contained", contained)
+            .select("id_a", "id_b", "shared", "n_a", "n_b", "c_ab", "c_ba", "contained")
+            .localCheckpoint(eager=True)
         )
-        .agg(F.count("*").alias("shared"))
-    )
-    c_ab = F.col("shared").cast("double") / F.col("n_a").cast("double")
-    c_ba = F.col("shared").cast("double") / F.col("n_b").cast("double")
-    contained = (
-        F.when((F.col("c_ab") >= 1.0) & (F.col("c_ba") >= 1.0), "both")
-        .when(F.col("c_ab") >= F.col("c_ba"), "a")
-        .otherwise("b")
-    )
-    result = (
-        shared.withColumn("c_ab", c_ab)
-        .withColumn("c_ba", c_ba)
-        .where(F.greatest("c_ab", "c_ba") >= tau)
-        .withColumn("contained", contained)
-        .select("id_a", "id_b", "shared", "n_a", "n_b", "c_ab", "c_ba", "contained")
-    )
-    result.shingle_cache = sized
-    return result
 
 
 def containment_pairs_prefix(
@@ -1020,12 +990,11 @@ def containment_pairs_prefix(
     A doc whose ``τ·|S|`` exceeds ``|K|`` can never be the contained
     side (too much of it was dropped as boilerplate) — its prefix is
     empty, matching the unfiltered ``max_df`` semantics where such a
-    pair cannot reach the threshold either.
+    pair cannot reach the threshold either. The pairs come back eagerly
+    checkpointed.
     """
     if not 0 < tau <= 1:
         raise ValueError("prefix filtering requires 0 < tau <= 1")
-    from pyspark import StorageLevel
-
     sized = (
         with_shingle_col(df, text_col, shingle_k, out="__sh")
         .select(F.col(id_col), F.col("__sh"))
@@ -1044,30 +1013,35 @@ def containment_pairs_prefix(
     # (prefix index, full index, and both verification sides) — without
     # this the tokenize+shingle+sort pipeline executes four times
     base = sized.select(F.col(id_col), F.col("__n"), ordered.alias("__ord"))
-    aux = None
-    if max_df is not None:
-        # this pre-filter frame feeds three consumers (count, hot-shingle
-        # scan, kept-explode); exposed as result.boilerplate_cache so
-        # callers can unpersist it alongside shingle_cache
-        base = aux = base.persist(StorageLevel.MEMORY_AND_DISK)
-        n_docs = base.count()
-        hot = (
-            base.select(F.explode("__ord").alias("__s"))
-            .groupBy("__s")
-            .agg(F.count("*").alias("__df"))
-            .where(F.col("__df") > max_df * n_docs)
-            .select("__s")
-        )
-        kept_ex = base.select(
-            F.col(id_col), F.col("__n"), F.posexplode("__ord").alias("__pos", "__s")
-        ).join(F.broadcast(hot), "__s", "left_anti")
-        base = kept_ex.groupBy(id_col, "__n").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__pos", "__s"))),
-                lambda st: st["__s"],
-            ).alias("__ord")
-        )
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    with persisted(base):
+        if max_df is not None:
+            # the pre-filter frame feeds three consumers (count,
+            # hot-shingle scan, kept-explode); the kept frame is persisted
+            # in its place for the four above
+            n_docs = base.count()
+            hot = (
+                base.select(F.explode("__ord").alias("__s"))
+                .groupBy("__s")
+                .agg(F.count("*").alias("__df"))
+                .where(F.col("__df") > max_df * n_docs)
+                .select("__s")
+            )
+            kept_ex = base.select(
+                F.col(id_col), F.col("__n"), F.posexplode("__ord").alias("__pos", "__s")
+            ).join(F.broadcast(hot), "__s", "left_anti")
+            base = kept_ex.groupBy(id_col, "__n").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("__pos", "__s"))),
+                    lambda st: st["__s"],
+                ).alias("__ord")
+            )
+        with persisted(base):  # already persisted (a no-op) without max_df
+            return _prefix_containment(base, id_col, tau).localCheckpoint(eager=True)
+
+
+def _prefix_containment(base: DataFrame, id_col: str, tau: float) -> DataFrame:
+    """The candidate join and verification of :func:`containment_pairs_prefix`
+    over (id, __n, __ord), each doc's kept shingles in the total order."""
     # p = floor(|K| - tau*|S|) + 1; the 1e-9 nudge makes a float near-tie
     # err toward a LONGER prefix (extra candidate, never a missed one)
     p = (
@@ -1117,7 +1091,7 @@ def containment_pairs_prefix(
         .when(F.col("c_ab") >= F.col("c_ba"), "a")
         .otherwise("b")
     )
-    result = (
+    return (
         ver.withColumn("shared", shared)
         .withColumn("c_ab", c_ab)
         .withColumn("c_ba", c_ba)
@@ -1125,9 +1099,6 @@ def containment_pairs_prefix(
         .withColumn("contained", contained)
         .select("id_a", "id_b", "shared", "n_a", "n_b", "c_ab", "c_ba", "contained")
     )
-    result.shingle_cache = base
-    result.boilerplate_cache = aux  # max_df pre-filter frame (or None)
-    return result
 
 
 def duplicated_spans(
@@ -1166,8 +1137,9 @@ def duplicated_spans(
        classic gaps-and-islands window (pos − row_number) merges
        overlapping duplicated windows into MAXIMAL spans per doc.
 
-    Returns (id, span_start, span_len, n_windows): token offsets,
-    span_len = last_start − first_start + k. Exact integers end-to-end.
+    Returns (id, span_start, span_len, n_windows), eagerly checkpointed:
+    token offsets, span_len = last_start − first_start + k. Exact
+    integers end-to-end.
     Docs shorter than ``k`` tokens contribute no windows (they are
     document-level dedup's job, not span surgery's).
     """
@@ -1189,14 +1161,6 @@ def duplicated_spans(
     )
     if hash_grams:
         grams = grams.select(F.col(id_col), "__pos", F.xxhash64("__g").alias("__g"))
-    # the exploded k-gram frame feeds BOTH the frequency count and the
-    # semi-join probe; persist it once (the persist_shingles convention)
-    # or the tokenize + k-gram concat — the dominant cost at scale —
-    # executes twice. Exposed as result.gram_cache for callers to
-    # unpersist.
-    from pyspark import StorageLevel
-
-    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     dup = (
         grams.groupBy("__g")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -1217,8 +1181,11 @@ def duplicated_spans(
         )
         .select(id_col, "span_start", "span_len", "n_windows")
     )
-    result.gram_cache = grams
-    return result
+    # the exploded k-gram frame feeds BOTH the frequency count and the
+    # semi-join probe; persist it once or the tokenize + k-gram concat —
+    # the dominant cost at scale — executes twice
+    with persisted(grams):
+        return result.localCheckpoint(eager=True)
 
 
 def remove_duplicated_spans_keep_first(
@@ -1258,13 +1225,12 @@ def remove_duplicated_spans_keep_first(
     Scale shape: the coverage explode (×k) runs ONLY over duplicated
     occurrences — the small head of the distribution — never the whole
     corpus; the gram frame is persisted once and shared by the count
-    and the probe (exposed as ``result.gram_cache``).
+    and the probe, and the result comes back eagerly checkpointed.
     """
     if k < 2:
         raise ValueError("remove_duplicated_spans needs k >= 2")
     if min_count < 2:
         raise ValueError("a span occurring once is not duplicated")
-    from pyspark import StorageLevel
 
     base = df.select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
@@ -1280,7 +1246,6 @@ def remove_duplicated_spans_keep_first(
     )
     if hash_grams:
         grams = grams.select(F.col(id_col), "__pos", F.xxhash64("__g").alias("__g"))
-    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     dup = (
         grams.groupBy("__g")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -1327,5 +1292,5 @@ def remove_duplicated_spans_keep_first(
             ),
         )
     )
-    result.gram_cache = grams
-    return result
+    with persisted(grams):
+        return result.localCheckpoint(eager=True)

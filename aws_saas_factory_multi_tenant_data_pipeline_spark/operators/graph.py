@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_saas_factory_multi_tenant_data_pipeline_spark.session import persisted
+
 #: fixed-point scale: 1.0 of total rank mass = 10^12 units
 UNITS = 10**12
 
@@ -84,7 +86,6 @@ def pagerank(
         raise ValueError("iters must be >= 1")
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     # NOTE on (not) caching the input: persisting `edges` here was
@@ -137,9 +138,27 @@ def pagerank(
             F.count(F.lit(1)).over(Window.partitionBy("__src")).alias("__deg"),
         )
         .repartition("__dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    e_deg.count()  # materialize once, before the loop
+    with persisted(e_deg):
+        e_deg.count()  # materialize once, before the loop
+        ranks = _power_iterations(e_deg, iters, damping_pct, plan_probe, tol_units, info)
+    return ranks.select(
+        F.col("node").alias("node_id"),
+        F.col("ru").alias("rank_units"),
+        (F.col("ru").cast("double") / F.lit(float(UNITS))).alias("rank"),
+    )
+
+
+def _power_iterations(
+    e_deg: DataFrame,
+    iters: int,
+    damping_pct: int,
+    plan_probe: list | None,
+    tol_units: int | None,
+    info: dict | None,
+) -> DataFrame:
+    """:func:`pagerank`'s rounds over the persisted (__src, __dst, __deg)
+    edge cache; returns the (node, __n, ru) rank frame, materialized."""
     # r15: the node frame and r0 derive from the PERSISTED e_deg, not from
     # the caller's edge lineage — e_deg holds exactly the input edge rows
     # (outdeg is computed from edges, so the inner join drops nothing),
@@ -202,7 +221,7 @@ def pagerank(
         # blocks, never its plan), but the whole loop runs as ONE fused
         # job — measured 4.8 s -> 3.7 s at sf0.1 (per-job scheduling
         # overhead, not data, dominated). The LAST round checkpoints
-        # EAGERLY because e_deg is unpersisted right after the loop: the
+        # EAGERLY because e_deg is released when the loop returns: the
         # fused job must read the edge cache before it is released. The
         # tol_units path materializes each round anyway via the delta agg.
         ranks = update.localCheckpoint(eager=(_it == iters - 1 and tol_units is None))
@@ -224,14 +243,7 @@ def pagerank(
         info["rounds"] = rounds
         info["converged"] = converged
         info["final_max_delta_units"] = last_delta
-    # the final rank frame is checkpointed (materialized) — the cached
-    # edge list is no longer needed by anything downstream
-    e_deg.unpersist(blocking=False)
-    return ranks.select(
-        F.col("node").alias("node_id"),
-        F.col("ru").alias("rank_units"),
-        (F.col("ru").cast("double") / F.lit(float(UNITS))).alias("rank"),
-    )
+    return ranks
 
 
 def pagerank_oracle_sql(

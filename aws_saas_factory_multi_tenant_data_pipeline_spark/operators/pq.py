@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aws_saas_factory_multi_tenant_data_pipeline_spark.session import persisted
+
 #: micro-unit scale: float embeddings quantize to floor(v * 1e6)
 MICRO = 1_000_000
 
@@ -90,17 +92,14 @@ def pq_train(
     bit-for-bit (exact integer math throughout).
 
     The quantized input is persisted for the duration of training
-    (every Lloyd round reads it) and unpersisted before returning; the
-    per-round centroid frames are eagerly checkpointed, so nothing
-    returned still depends on it."""
+    (every Lloyd round reads it); the per-round centroid frames are
+    eagerly checkpointed, so nothing returned still depends on it."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    from pyspark import StorageLevel
-
     dsub = dim // m
     q = df.select(
         F.col(id_col).alias("__id"), quantize_micro(F.col(vec_col)).alias("__q")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     seeds = (
         q.select(F.md5(F.col("__id").cast("string")).alias("__r"), "__id", "__q")
         .orderBy("__r", "__id")
@@ -126,33 +125,30 @@ def pq_train(
     ).select(
         F.col("__s.subspace").alias("subspace"), "code", F.col("__s.centroid").alias("centroid")
     )
-    for _ in range(iterations):
-        assigned = _assign_codes_all(q, cents, m, dsub)
-        # each round's centroid set is checkpointed EAGERLY, so no
-        # returned centroid frame still needs the persisted training
-        # input: that is what makes q.unpersist() below safe
-        cents = (
-            assigned.select(
-                "subspace", "code", F.posexplode("__v").alias("dim", "val")
-            )
-            .groupBy("subspace", "code", "dim")
-            .agg(
-                F.floor(
-                    F.sum("val").cast("double") / F.count(F.lit(1))
-                ).cast("long").alias("val")
-            )
-            .groupBy("subspace", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "val"))),
-                    lambda s: s["val"],
-                ).alias("centroid")
-            )
-        ).localCheckpoint(eager=True)
-    # the returned frame is (derived from) an eagerly-checkpointed
-    # centroid set, so releasing the training cache is safe; with
-    # iterations=0 the lazy seed frame simply recomputes if read later
-    q.unpersist()
+    with persisted(q):
+        for _ in range(iterations):
+            assigned = _assign_codes_all(q, cents, m, dsub)
+            # each round's centroid set is checkpointed EAGERLY, so no
+            # returned centroid frame still reads the persisted training input
+            cents = (
+                assigned.select(
+                    "subspace", "code", F.posexplode("__v").alias("dim", "val")
+                )
+                .groupBy("subspace", "code", "dim")
+                .agg(
+                    F.floor(
+                        F.sum("val").cast("double") / F.count(F.lit(1))
+                    ).cast("long").alias("val")
+                )
+                .groupBy("subspace", "code")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("dim", "val"))),
+                        lambda s: s["val"],
+                    ).alias("centroid")
+                )
+            ).localCheckpoint(eager=True)
+    # with iterations=0 the lazy seed frame recomputes from df if read
     return cents
 
 

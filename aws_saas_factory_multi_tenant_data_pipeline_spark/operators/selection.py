@@ -28,9 +28,6 @@ Two selection primitives every corpus build eventually needs:
 
 from __future__ import annotations
 
-import threading
-
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,31 +35,7 @@ from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.dedup import (
     dedup_clusters,
     tokens,
 )
-
-#: the previous budget_select call's persisted boundary frame — released
-#: on the next call so long sessions hold at most one cached copy.
-#: Guarded by _BOUNDARY_LOCK: two interleaved budget_select calls from
-#: different threads must never double-pop or leak a persisted frame.
-_BOUNDARY_CACHE: list = []
-_BOUNDARY_LOCK = threading.Lock()
-
-
-def _drain_locked() -> None:
-    """Unpersist and forget every tracked frame. Caller holds the lock."""
-    while _BOUNDARY_CACHE:
-        try:
-            _BOUNDARY_CACHE.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-def release_boundary_cache() -> None:
-    """Unpersist any frame budget_select left cached (call when a long
-    session is done with selection queries). Thread-safe; unpersisting a
-    frame whose plan is still referenced only drops the cache (Spark
-    recomputes), never correctness."""
-    with _BOUNDARY_LOCK:
-        _drain_locked()
+from aws_saas_factory_multi_tenant_data_pipeline_spark.session import persisted
 
 
 def leakage_safe_split(
@@ -115,7 +88,6 @@ def budget_select(
     id_col: str = "doc_id",
     seed: str = "budget",
     n_bins: int = 4096,
-    cache_input: bool = True,
 ) -> DataFrame:
     """Keep the greedy highest-quality prefix whose token total fits
     ``budget_tokens``; within a score, documents are taken in
@@ -136,42 +108,38 @@ def budget_select(
     ordered-prefix window input is ≤ ``n_bins`` rows in the common case
     (boundary bin ≈ corpus/n_bins, known from the collected profile);
     ONLY a pathological distribution (all mass in one equi-width bin —
-    e.g. a corpus-wide constant score) pays a one-shot persist + re-bin —
+    e.g. a corpus-wide constant score) pays a one-shot checkpoint + re-bin —
     by score when the bin's scores spread, by the uniform md5 tie hash
     when they don't — shrinking the window input to ≈ corpus / n_bins²
     rows. The irreducible residual is an equal-(score,
     13-hex-tie-prefix) class — cryptographically negligible.
 
-    ``cache_input=True`` (default) persists ``df`` MEMORY_AND_DISK for
-    the duration: budget selection is inherently multi-pass (min/max,
-    per-bin profile, final split scans), and recomputing an expensive
-    upstream (a quality model is typical) 3-4× dwarfs the cache cost of
-    a slim scored frame — at 100 TB pass a projection of (id, score,
-    tokens, carry-along columns), which spills fine. The cache is
-    released on the next budget_select call (or via
-    :func:`release_boundary_cache`); set ``cache_input=False`` to scan
-    the raw lineage every pass instead.
+    ``df`` is persisted MEMORY_AND_DISK for the call: budget selection
+    is inherently multi-pass (min/max, per-bin profile, final split
+    scans), and recomputing an expensive upstream (a quality model is
+    typical) 3-4× dwarfs the cache cost of a slim scored frame — at
+    100 TB pass a projection of (id, score, tokens, carry-along
+    columns), which spills fine. The result comes back eagerly
+    checkpointed and the cache is released before returning; a ``df``
+    the caller had already cached stays cached.
     """
     if budget_tokens < 0:
         raise ValueError("budget_tokens must be >= 0")
-    # release the PREVIOUS call's frames BEFORE probing cache state, so a
-    # repeated call on the same frame sees its own prior persist gone and
-    # re-caches (the object-local is_cached flag can't tell us that)
-    with _BOUNDARY_LOCK:
-        _drain_locked()
-    to_cache: list[DataFrame] = []
-    # only persist (and later release) frames WE cached: a caller-persisted
-    # df must not be unpersisted behind the caller's back — Spark
-    # persistence is not reference-counted, so our release would evict
-    # their cache too. df.storageLevel is a JVM CacheManager lookup on the
-    # PLAN (catches spark.catalog.cacheTable and persists made through a
-    # different DataFrame object — unlike the client-side is_cached flag).
-    sl = df.storageLevel
-    if cache_input and not (sl.useMemory or sl.useDisk):
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        to_cache.append(df)
-    with _BOUNDARY_LOCK:
-        _BOUNDARY_CACHE.extend(to_cache)
+    with persisted(df):
+        result = _select(df, budget_tokens, score_col, tokens_col, id_col, seed, n_bins)
+        return result.localCheckpoint(eager=True)
+
+
+def _select(
+    df: DataFrame,
+    budget_tokens: int,
+    score_col: str,
+    tokens_col: str,
+    id_col: str,
+    seed: str,
+    n_bins: int,
+) -> DataFrame:
+    """:func:`budget_select`'s lazy plan over the persisted ``df``."""
     score = F.col(score_col).cast("double")
     tok_l = F.col(tokens_col).cast("long")
     tie = F.md5(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string")))
@@ -241,7 +209,7 @@ def budget_select(
     if boundary_cnt <= n_bins:
         # common case (boundary bin ≈ corpus/n_bins rows): the ordered
         # prefix runs straight over the bounded boundary bin — no
-        # persist, no re-bin, no extra jobs (this was the r7 regression)
+        # checkpoint, no re-bin, no extra jobs (this was the r7 regression)
         wb0 = Window.orderBy(score.desc(), tie, F.col(id_col))
         run0 = F.sum(tok_l).over(wb0)
         edge = binned.where(F.col("__bkt") == boundary_bkt).withColumn(
@@ -249,20 +217,13 @@ def budget_select(
         )
         return decided.unionByName(edge).drop("__bkt")
     # pathological case ONLY (all mass in one equi-width bin — e.g. a
-    # corpus-wide constant score): persist the boundary bin and re-bin it
-    # once before the window. Sub-bin ids are monotone along the exact
+    # corpus-wide constant score): materialize the boundary bin and re-bin
+    # it once before the window. Sub-bin ids are monotone along the exact
     # greedy order (score DESC, tie ASC): by score when the bin's scores
     # spread, by the uniform md5 tie hash (13 hex digits = 52
     # double-exact bits) when they don't — ≈ bin/n_bins rows reach the
-    # window. The persisted frame is released on the NEXT budget_select
-    # call (lock-guarded module-level handoff) — unpersisting a frame
-    # whose plan is still referenced only drops the cache (Spark
-    # recomputes), never correctness.
-    edge_in = binned.where(F.col("__bkt") == boundary_bkt).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    with _BOUNDARY_LOCK:
-        _BOUNDARY_CACHE.append(edge_in)
+    # window.
+    edge_in = binned.where(F.col("__bkt") == boundary_bkt).localCheckpoint(eager=True)
     lohi2 = edge_in.agg(
         F.min(score).alias("lo"), F.max(score).alias("hi")
     ).collect()[0]

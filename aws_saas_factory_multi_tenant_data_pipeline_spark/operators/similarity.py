@@ -599,16 +599,11 @@ def bitext_mine(
     # projection), and Catalyst does not share the cross-join between
     # them — the before-plan showed 3 BroadcastNestedLoopJoins, i.e.
     # every |src|·|tgt| cosine fold evaluated three times. One eager
-    # pass + cached reads cuts the dominant compute 3×. This is the
+    # checkpoint read three times cuts the dominant compute 3×. This is the
     # EXACT quadratic-by-contract oracle form (the scale paths are
-    # bitext_mine_candidates/_ann/_lsh), so persisting |s|·|t| rows of
-    # (id, id, cosine) is within this form's declared envelope; the
-    # handle is exposed as ``result.pair_cache`` for long-lived callers
-    # (the minhash shingle_cache convention).
-    from pyspark import StorageLevel
-
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
+    # bitext_mine_candidates/_ann/_lsh), so materializing |s|·|t| rows
+    # of (id, id, cosine) is within this form's declared envelope.
+    pairs = pairs.localCheckpoint(eager=True)
     dec = F.col("cosine").cast("decimal(18,6)")
     wsrc = Window.partitionBy("src_id").orderBy(
         F.col("cosine").desc(), F.col("tgt_id")
@@ -669,7 +664,6 @@ def bitext_mine(
         )
     )
     if not mutual:
-        forward.pair_cache = pairs
         return forward
     # mutual best: keep a pair only when the target also elects the
     # source as ITS best (forward ∩ backward — the highest-precision
@@ -682,9 +676,7 @@ def bitext_mine(
         .where(F.col("__r") == 1)
         .select("src_id", "tgt_id")
     )
-    result = forward.join(backward, ["src_id", "tgt_id"], "left_semi")
-    result.pair_cache = pairs
-    return result
+    return forward.join(backward, ["src_id", "tgt_id"], "left_semi")
 
 
 def bitext_mine_candidates(

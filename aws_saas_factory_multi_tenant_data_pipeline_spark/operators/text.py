@@ -355,17 +355,15 @@ def frequent_ngrams(
                 }
             )
 
-    # persisted: both the total row and the candidate set read this tiny
-    # frame (candidates + one count row per batch), and without the persist
-    # the candidate-generation scan would run twice
-    from pyspark import StorageLevel
-
-    phase1 = grams.mapInPandas(gen_candidates, "gram string, cnt long").persist(
-        StorageLevel.MEMORY_AND_DISK
+    # materialized: both the total row and the candidate set read this
+    # tiny frame (candidates + one count row per batch), and without the
+    # checkpoint the candidate-generation scan would run twice
+    phase1 = grams.mapInPandas(gen_candidates, "gram string, cnt long").localCheckpoint(
+        eager=True
     )
     total = phase1.where(F.col("gram").isNull()).agg(F.sum("cnt").alias("total"))
     candidates = phase1.where(F.col("gram").isNotNull()).select("gram").distinct()
-    result = (
+    return (
         grams.join(F.broadcast(candidates), "gram")
         .groupBy("gram")
         .agg(F.count("*").alias("freq"))
@@ -377,9 +375,6 @@ def frequent_ngrams(
             F.round(F.col("freq") / F.col("total"), 6).alias("ratio"),
         )
     )
-    # cleanup handle, same convention as minhash_near_duplicates
-    result.candidate_cache = phase1
-    return result
 
 
 def bigram_lm_score(

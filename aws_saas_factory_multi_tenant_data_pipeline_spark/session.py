@@ -10,8 +10,11 @@ rely on AQE + explicit repartition-by-tenant before partitioned writes).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 #: number of local cores the harness uses (driver contract: SPARK_GRAFT_CPUS)
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
@@ -64,3 +67,27 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` (MEMORY_AND_DISK, spill-safe) for the ``with`` block
+    and unpersist it on the way out, also when the block raises.
+
+    The one persist in the package: every operator leaves the shared
+    session's cache as it found it. A frame the block returns must not
+    read the cache after the block ends, so return a
+    ``localCheckpoint(eager=True)`` of it. When ``df``'s plan is already
+    cached (``df.storageLevel`` asks the session's CacheManager, so a
+    persist through another DataFrame object or ``cacheTable`` counts),
+    the caller owns that cache: ``df`` is yielded as is and stays cached.
+    """
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        yield df
+        return
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist()

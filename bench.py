@@ -332,14 +332,12 @@ def main() -> None:
         min(_bench_scaling_probe(spark) for _ in range(3)), 3
     )
     for _pass in range(int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))):
-        # r16 (r15 verdict #3): drop every cached relation between passes.
-        # Queries that persist an intermediate within one invocation
-        # (bitext_margin's pair cache, minhash's shingle cache) leave the
-        # handle for the caller by documented convention; Spark's
-        # CacheManager plan-canonicalization then let pass 2/3 reuse pass
-        # 1's InMemoryRelation, so their recorded minimum partially
-        # measured a warm cache. Clearing here makes every pass a full
-        # recompute from parquet — the honest minimum.
+        # Every pass must be a full recompute from parquet — the honest
+        # minimum. Operators release what they persist before returning
+        # (session.persisted; tools/driver_sim.py fails any query that
+        # leaves a cached relation), so this clear is a guard: a leaked
+        # InMemoryRelation would be plan-matched and reused by passes 2/3,
+        # and their recorded minimum would partly measure a warm cache.
         spark.catalog.clearCache()
         for name in HEADLINE:
             fn = registry[name].spark_fn

@@ -472,41 +472,49 @@ def test_reprocess_quarantine_recovers_fixed_records(spark, tmp_path):
 def test_reprocess_quarantine_recovers_crash_between_renames(spark, tmp_path, monkeypatch):
     """A redrive that dies between its swap's two renames leaves
     error/<type> absent, with the still-failing rows set aside under
-    __redrive_old. The next redrive must restore them before anything
-    else, so a quarantine row the stream appends afterwards joins them
-    instead of replacing them."""
+    __redrive_old. The next redrive must bring them back before anything
+    else, so a quarantine row the stream appends joins them instead of
+    replacing them — also when that append lands before the recovering
+    redrive and recreates error/<type>."""
     from aws_saas_factory_multi_tenant_data_pipeline_spark import lake
 
-    root = str(tmp_path / "redrive_crash")
-    qdir = os.path.join(root, "error", "validation-failed")
     schema = "tenant_id string, raw string"
     good = ("t0", json.dumps({"Data": {"device": "TV", "event": "ok", "region": "US"}}))
     bad = [("t1", f"{{broken {i}") for i in range(5)]
-    res = ingest_batch(spark.createDataFrame([good, *bad], schema), ingest_ts=1700000000)
-    write_lake(res.valid, root)
-    lake.write_quarantine(res.quarantine, root, "validation-failed")
+    real_rename = os.rename
+    for append_first in (False, True):
+        root = str(tmp_path / f"redrive_crash_{append_first}")
+        qdir = os.path.join(root, "error", "validation-failed")
+        res = ingest_batch(spark.createDataFrame([good, *bad], schema), ingest_ts=1700000000)
+        write_lake(res.valid, root)
+        lake.write_quarantine(res.quarantine, root, "validation-failed")
 
-    real_rename, calls = os.rename, {"n": 0}
+        calls = {"n": 0}
 
-    def crashing_rename(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("simulated crash between the two renames")
-        return real_rename(src, dst)
+        def crashing_rename(src, dst):
+            calls["n"] += 1
+            if calls["n"] == 2:
+                raise OSError("simulated crash between the two renames")
+            return real_rename(src, dst)
 
-    monkeypatch.setattr(lake.os, "rename", crashing_rename)
-    with pytest.raises(OSError, match="simulated crash"):
+        monkeypatch.setattr(lake.os, "rename", crashing_rename)
+        with pytest.raises(OSError, match="simulated crash"):
+            lake.reprocess_quarantine(spark, root, ingest_ts=1700000000)
+        monkeypatch.setattr(lake.os, "rename", real_rename)
+        assert not os.path.exists(qdir)
+
+        later = ingest_batch(
+            spark.createDataFrame([("t1", "{broken later")], schema), ingest_ts=1700000000
+        )
+        if append_first:
+            lake.write_quarantine(later.quarantine, root, "validation-failed")
         lake.reprocess_quarantine(spark, root, ingest_ts=1700000000)
-    monkeypatch.setattr(lake.os, "rename", real_rename)
-    assert not os.path.exists(qdir)
-
-    lake.reprocess_quarantine(spark, root, ingest_ts=1700000000)
-    later = ingest_batch(spark.createDataFrame([("t1", "{broken later")], schema), ingest_ts=1700000000)
-    lake.write_quarantine(later.quarantine, root, "validation-failed")
-    lake.reprocess_quarantine(spark, root, ingest_ts=1700000000)
-    assert spark.read.json(qdir).count() == 6
-    assert read_lake(spark, root).count() == 1
-    assert not [d for d in os.listdir(os.path.dirname(qdir)) if "__redrive_" in d]
+        if not append_first:
+            lake.write_quarantine(later.quarantine, root, "validation-failed")
+        lake.reprocess_quarantine(spark, root, ingest_ts=1700000000)
+        assert spark.read.json(qdir).count() == 6, f"append_first={append_first}"
+        assert read_lake(spark, root).count() == 1
+        assert not [d for d in os.listdir(os.path.dirname(qdir)) if "__redrive_" in d]
 
 
 def test_delete_tenant_removes_only_that_subtree(spark, tmp_path):

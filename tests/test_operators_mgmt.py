@@ -85,7 +85,6 @@ def test_prefix_filtered_jaccard_equals_full_index(spark, sf_smoke):
         pref = {
             (r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in pref_df.collect()
         }
-        pref_df.shingle_cache.unpersist()
         assert pref == full, f"tau={tau}: prefix filtering changed the result"
 
 

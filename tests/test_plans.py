@@ -245,31 +245,39 @@ def test_runtime_bloom_filter_reduces_probe_side(spark, sf_smoke):
                 spark.conf.set(k, v)
 
 
+def _last_sql_execution(spark) -> int:
+    """Id of the newest execution in the SQL status store (-1 if none)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def _sql_plans_after(spark, last: int) -> list[str]:
+    """Physical plan descriptions of the SQL executions newer than ``last``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    found = [execs.apply(i) for i in range(execs.size())]
+    return [e.physicalPlanDescription() for e in found if e.executionId() > last]
+
+
 def test_minhash_persist_once_shingle_reuse(spark, sf_smoke):
-    """persist_shingles=True: both the signature pipeline and the
-    exact-Jaccard verification must scan the SAME cached (id, shingles)
-    frame (InMemoryTableScan appears in the plan) instead of re-running
-    the normalize/tokenize/shingle pipeline twice. With the flag off and
-    a clean cache, no in-memory scan may appear."""
+    """Both the signature pipeline and the exact-Jaccard verification must
+    scan the SAME persisted (id, shingles) frame instead of re-running
+    the normalize/tokenize/shingle pipeline twice: the plan of the job
+    that materializes the returned pairs, read from the SQL status store,
+    holds at least two InMemoryTableScans."""
     from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.dedup import (
         minhash_near_duplicates,
     )
     from aws_saas_factory_multi_tenant_data_pipeline_spark.sources import read_table
 
     docs = read_table(spark, sf_smoke, "documents")
-    spark.catalog.clearCache()
-    plan_off = (
-        minhash_near_duplicates(docs, persist_shingles=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "InMemoryTableScan" not in plan_off
-    plan_on = (
-        minhash_near_duplicates(docs, persist_shingles=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    spark.catalog.clearCache()
+    last = _last_sql_execution(spark)
+    minhash_near_duplicates(docs)
+    plans = _sql_plans_after(spark, last)
+    assert plans, "the pairs were not materialized by a SQL execution"
     # cached frame feeds >= 2 consumers: signatures + both verify joins
-    assert plan_on.count("InMemoryTableScan") >= 2, plan_on[:2000]
+    assert max(p.count("InMemoryTableScan") for p in plans) >= 2, plans
 
 
 def test_llm_corpus_prep_shuffle_budget(spark, sf_smoke):
@@ -639,6 +647,175 @@ def test_operator_sets_no_aqe_conf(spark, sf_smoke, tmp_path, monkeypatch, name)
     emb = t(spark, sf_smoke, "embeddings").where(F.col("vec_id") < 64)
     _former_aqe_off_runs()[name](spark, sf_smoke, emb, tmp_path)
     assert [k for k in keys if k.startswith("spark.sql.adaptive.")] == []
+
+
+def _persisting_runs() -> dict:
+    """Every operator that persists an intermediate, each run to
+    completion on small inputs: name -> fn(spark, sf_dir, tmp_path)."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.lake import upsert_partitioned
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators import dedup
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.bpe import learn_merges
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.graph import pagerank
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.pq import pq_train
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.selection import (
+        budget_select,
+    )
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.similarity import (
+        bitext_mine,
+    )
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.text import (
+        frequent_ngrams,
+    )
+
+    def docs(spark, sf):
+        return t(spark, sf, "documents").where(F.col("doc_id") < 150)
+
+    def emb(spark, sf, lo, hi):
+        return t(spark, sf, "embeddings").where(F.col("vec_id").between(lo, hi - 1))
+
+    def scored(spark, score):
+        return spark.range(600).select(
+            F.col("id").alias("doc_id"),
+            score.alias("quality_score"),
+            ((F.col("id") * 7) % 40 + 5).alias("n_tokens"),
+        )
+
+    def upsert(spark, tmp):
+        root = str(tmp / "upsert_lake")
+        spark.createDataFrame([(1, "a", "p1"), (2, "b", "p2")], "id long, v string, part string")\
+            .write.partitionBy("part").parquet(root)
+        changes = spark.createDataFrame([(2, "b2", "p2")], "id long, v string, part string")
+        upsert_partitioned(spark, root, changes, key_cols=["id"], partition_cols=["part"])
+
+    pairs = lambda spark: spark.createDataFrame(  # noqa: E731
+        [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
+    )
+    return {
+        "minhash_near_duplicates": lambda spark, sf, tmp: dedup.minhash_near_duplicates(
+            docs(spark, sf)
+        ).count(),
+        "ngram_jaccard_pairs": lambda spark, sf, tmp: dedup.ngram_jaccard_pairs(
+            docs(spark, sf), threshold=0.2
+        ).count(),
+        "ngram_jaccard_pairs_prefix": lambda spark, sf, tmp: dedup.ngram_jaccard_pairs_prefix(
+            docs(spark, sf)
+        ).count(),
+        "containment_pairs": lambda spark, sf, tmp: dedup.containment_pairs(
+            docs(spark, sf), max_df=0.5
+        ).count(),
+        "containment_pairs_prefix": lambda spark, sf, tmp: dedup.containment_pairs_prefix(
+            docs(spark, sf), max_df=0.5
+        ).count(),
+        "duplicated_spans": lambda spark, sf, tmp: dedup.duplicated_spans(
+            docs(spark, sf), k=8
+        ).count(),
+        "remove_duplicated_spans_keep_first": lambda spark, sf, tmp: (
+            dedup.remove_duplicated_spans_keep_first(docs(spark, sf), k=8).count()
+        ),
+        "dedup_clusters": lambda spark, sf, tmp: dedup.dedup_clusters(pairs(spark)).count(),
+        "frequent_ngrams": lambda spark, sf, tmp: frequent_ngrams(docs(spark, sf)).count(),
+        "learn_merges": lambda spark, sf, tmp: learn_merges(spark, docs(spark, sf), 3).count(),
+        "pq_train": lambda spark, sf, tmp: pq_train(
+            emb(spark, sf, 0, 64), m=4, k=3, iterations=2
+        ).count(),
+        "pagerank": lambda spark, sf, tmp: pagerank(
+            spark.range(200).select(
+                (F.col("id") % 23).alias("src"), ((F.col("id") * 5) % 23).alias("dst")
+            ),
+            iters=2,
+        ).count(),
+        "budget_select": lambda spark, sf, tmp: budget_select(
+            scored(spark, (F.col("id") % 97) / 97.0), 3_000, n_bins=16
+        ).count(),
+        "budget_select_rebin": lambda spark, sf, tmp: budget_select(
+            scored(spark, F.lit(0.5)), 3_000, n_bins=16
+        ).count(),
+        "bitext_mine": lambda spark, sf, tmp: bitext_mine(
+            emb(spark, sf, 0, 24), emb(spark, sf, 24, 48), k=2
+        ).count(),
+        "upsert_partitioned": lambda spark, sf, tmp: upsert(spark, tmp),
+    }
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "minhash_near_duplicates",
+        "ngram_jaccard_pairs",
+        "ngram_jaccard_pairs_prefix",
+        "containment_pairs",
+        "containment_pairs_prefix",
+        "duplicated_spans",
+        "remove_duplicated_spans_keep_first",
+        "dedup_clusters",
+        "frequent_ngrams",
+        "learn_merges",
+        "pq_train",
+        "pagerank",
+        "budget_select",
+        "budget_select_rebin",
+        "bitext_mine",
+        "upsert_partitioned",
+    ],
+)
+def test_operator_leaves_no_cached_relation(spark, sf_smoke, tmp_path, name):
+    """One long-lived session serves every tenant, so an operator must
+    leave the session's cache as it found it: whatever it persists is
+    released before it returns, and its result no longer reads it."""
+    spark.catalog.clearCache()
+    _persisting_runs()[name](spark, sf_smoke, tmp_path)
+    assert _cache_is_empty(spark)
+
+
+def test_operator_keeps_a_caller_cached_input_cached(spark):
+    """A frame the caller cached is the caller's: an operator that would
+    persist it uses that cache and leaves it in place."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.selection import (
+        budget_select,
+    )
+
+    spark.catalog.clearCache()
+    df = spark.range(300).select(
+        F.col("id").alias("doc_id"),
+        ((F.col("id") % 89) / 89.0).alias("quality_score"),
+        F.lit(10).alias("n_tokens"),
+    )
+    df.persist()
+    try:
+        assert budget_select(df, 1_000, n_bins=16).where("is_selected").count() == 100
+        assert df.storageLevel.useMemory
+    finally:
+        df.unpersist()
+    assert _cache_is_empty(spark)
+
+
+@pytest.mark.parametrize("name", ["pagerank", "dedup_clusters"])
+def test_operator_releases_its_cache_when_the_loop_raises(spark, name):
+    """An exception mid-loop must not leave the loop's edge cache behind:
+    the plan_probe hook raises in the first round."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.dedup import (
+        dedup_clusters,
+    )
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.graph import pagerank
+
+    class _Crash(list):
+        def append(self, plan):
+            raise RuntimeError("injected mid-loop failure")
+
+    spark.catalog.clearCache()
+    pairs = spark.range(60).select(
+        (F.col("id") % 23).alias("id_a"), ((F.col("id") * 5) % 23).alias("id_b")
+    )
+    with pytest.raises(RuntimeError, match="injected"):
+        if name == "pagerank":
+            pagerank(pairs, src="id_a", dst="id_b", iters=2, plan_probe=_Crash())
+        else:
+            dedup_clusters(pairs, plan_probe=_Crash())
+    assert _cache_is_empty(spark)
 
 
 def test_dedup_clusters_iterations_never_move_edges(spark):

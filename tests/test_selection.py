@@ -289,10 +289,10 @@ def test_budget_select_mass_concentrated_bin_exact(spark):
         assert got == _brute_force(rows, budget), f"budget={budget}"
 
 def test_budget_select_interleaved_calls_thread_safe(spark):
-    """Two concurrent budget_select calls (directive r7#6): the
-    module-level boundary-cache handoff is lock-guarded, so interleaved
-    calls from different threads must both stay exact — an unpersisted
-    frame only loses its cache, never its plan."""
+    """Two concurrent budget_select calls (directive r7#6) from different
+    threads must both stay exact: each call persists and releases only
+    its own input, and a released frame only loses its cache, never its
+    plan."""
     import threading
 
     df1 = _scored_continuous(spark, 300)

@@ -13,6 +13,10 @@ driver runs:
   VALUE  — sorted values differ
   PASS   — byte-identical after canonicalization
 
+A query that leaves a relation in the session's CacheManager fails before
+any comparison: one long-lived session serves every tenant, so nothing a
+query persists may outlive it.
+
 Normalization mirrors what r01 results imply the driver does: integer
 widths → Int64, float widths → float64, datetimes → us. It does NOT
 coerce int to float (fn_math failed r01 exactly there).
@@ -217,6 +221,7 @@ def main() -> int:
     con = duck_connect(sf_dir)
     n_pass = n_fail = n_noracle = 0
     failures: list[str] = []
+    cache = spark._jsparkSession.sharedState().cacheManager()
     for name in names:
         spec = registry[name]
         t0 = time.time()
@@ -224,6 +229,14 @@ def main() -> int:
             sdf = spec.spark_fn(spark, sf_dir).toPandas()
         except Exception:
             print(f"FAIL {name}: spark error\n{traceback.format_exc()}")
+            failures.append(name)
+            n_fail += 1
+            continue
+        if not cache.isEmpty():
+            # an operator must leave the shared session's cache as it
+            # found it; clear so the next query is judged on its own
+            print(f"FAIL {name}: left a cached relation")
+            spark.catalog.clearCache()
             failures.append(name)
             n_fail += 1
             continue
