@@ -2662,6 +2662,206 @@ PACKS: tuple[Slot, ...] = (
             ),
         ),
     ),
+    Slot(
+        "r4_mgmt_pack",
+        ("B10", "data-mgmt", "pack"),
+        "Data-management pack — one graded slot covering four §2 rows: CDC "
+        "diff per-change-type counts + key checksums, the k-anonymity "
+        "generalization ladder, sliding rate-limit throttle counts, and "
+        "Z-order coarse-bucket rectangle spans.",
+        (
+            Part(
+                "table_cdc_diff",
+                lambda cdc: cdc.groupBy(F.col("change_type").alias("k"))
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(F.col("o_orderkey") % 100003).cast("double").alias("val"),
+                )
+                .select(F.lit("cdc").alias("kind"), "k", "n", "val"),
+                """SELECT 'cdc' AS kind, change_type AS k, COUNT(*) AS n,
+                       CAST(SUM(o_orderkey % 100003) AS DOUBLE) AS val
+                FROM table_cdc_diff GROUP BY change_type""",
+            ),
+            Part(
+                "privacy_generalize_release",
+                lambda gr: gr.select(
+                    F.lit("priv").alias("kind"),
+                    F.concat_ws("/", F.col("level").cast("string"), "qi").alias("k"),
+                    F.col("group_n").alias("n"),
+                    F.lit(0.0).alias("val"),
+                ),
+                """SELECT 'priv' AS kind, CAST(level AS VARCHAR) || '/' || qi AS k,
+                       group_n AS n, 0.0 AS val
+                FROM privacy_generalize_release""",
+            ),
+            Part(
+                "tenant_rate_limit_sliding",
+                lambda rl: rl.groupBy(
+                    F.concat(F.lit("throttled_"), F.col("throttled").cast("string")).alias("k")
+                )
+                .agg(F.count(F.lit(1)).alias("n"), F.sum("n_1h").cast("double").alias("val"))
+                .select(F.lit("rate").alias("kind"), "k", "n", "val"),
+                """SELECT 'rate' AS kind, 'throttled_' || CAST(throttled AS VARCHAR) AS k,
+                       COUNT(*) AS n, CAST(SUM(n_1h) AS DOUBLE) AS val
+                FROM tenant_rate_limit_sliding GROUP BY 2""",
+            ),
+            Part(
+                "lake_zorder_layout",
+                lambda zl: zl.groupBy(F.shiftright(F.col("z_bucket"), 2).cast("string").alias("k"))
+                .agg(
+                    F.sum("n").alias("n"),
+                    (
+                        F.max("cust_hi") - F.min("cust_lo") + F.max("day_hi") - F.min("day_lo")
+                    ).cast("double").alias("val"),
+                )
+                .select(F.lit("z").alias("kind"), "k", "n", "val"),
+                """SELECT 'z' AS kind, CAST(z_bucket >> 2 AS VARCHAR) AS k,
+                       CAST(SUM(n) AS BIGINT) AS n,
+                       CAST(MAX(cust_hi) - MIN(cust_lo) + MAX(day_hi) - MIN(day_lo)
+                            AS DOUBLE) AS val
+                FROM lake_zorder_layout GROUP BY 2""",
+            ),
+        ),
+    ),
+    Slot(
+        "r5_pack",
+        ("B3", "B4", "B10", "privacy", "scale", "pack"),
+        "Privacy/scale pack — one graded slot covering five §2 rows: "
+        "skew-salted join aggregates (row-identical to the plain join), "
+        "ε-DP noisy counts (every noisy value re-derived), keyed "
+        "pseudonymization token counts, the equi-width histogram, and "
+        "hard-negative top-5 per-anchor cosine checksums.",
+        (
+            Part(
+                "join_skew_salted",
+                lambda sk: sk.select(
+                    F.lit("skew").alias("kind"),
+                    F.col("event_type").alias("k"),
+                    "n",
+                    F.col("total").alias("val"),
+                ),
+                """SELECT 'skew' AS kind, event_type AS k, n, total AS val
+                FROM join_skew_salted""",
+            ),
+            Part(
+                "privacy_dp_counts",
+                lambda dp: dp.select(
+                    F.lit("dp").alias("kind"),
+                    F.concat_ws("|", F.col("c_nationkey").cast("string"), "c_mktsegment").alias("k"),
+                    F.lit(0).cast("long").alias("n"),
+                    F.col("noisy_n").alias("val"),
+                ),
+                """SELECT 'dp' AS kind,
+                       CAST(c_nationkey AS VARCHAR) || '|' || c_mktsegment AS k,
+                       CAST(0 AS BIGINT) AS n, noisy_n AS val
+                FROM privacy_dp_counts""",
+            ),
+            Part(
+                "privacy_pseudonymize",
+                lambda pn: pn.groupBy(F.col("c_mktsegment").alias("k"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .select(F.lit("pn").alias("kind"), "k", "n", F.lit(0.0).alias("val")),
+                """SELECT 'pn' AS kind, c_mktsegment AS k, COUNT(*) AS n, 0.0 AS val
+                FROM privacy_pseudonymize GROUP BY c_mktsegment""",
+            ),
+            Part(
+                "agg_histogram_equiwidth",
+                lambda hist: hist.select(
+                    F.lit("hist").alias("kind"),
+                    F.col("bucket").cast("string").alias("k"),
+                    "n",
+                    F.col("total").alias("val"),
+                ),
+                """SELECT 'hist' AS kind, CAST(bucket AS VARCHAR) AS k, n, total AS val
+                FROM agg_histogram_equiwidth""",
+            ),
+            Part(
+                "embedding_hard_negatives",
+                lambda hn: hn.groupBy(F.col("anchor_id").cast("string").alias("k"))
+                .agg(F.count(F.lit(1)).alias("n"), dsum("cosine").alias("val"))
+                .select(F.lit("hn").alias("kind"), "k", "n", "val"),
+                f"""SELECT 'hn' AS kind, CAST(anchor_id AS VARCHAR) AS k,
+                       COUNT(*) AS n, {sql_dsum('cosine')} AS val
+                FROM embedding_hard_negatives GROUP BY anchor_id""",
+            ),
+        ),
+    ),
+    Slot(
+        "r5_pack2",
+        ("B10", "B5", "saas", "pack"),
+        "SaaS-analytics pack — one graded slot covering five §2 rows: BM25 "
+        "top-20 (doc, rank, score), last-touch attribution channel totals, "
+        "RFM segment rollup, unicode-normalization corpus checksums, and the "
+        "top-20 PageRank nodes (exact fixed-point units).",
+        (
+            Part(
+                "text_bm25_rank",
+                lambda bm: bm.select(
+                    F.lit("bm25").alias("kind"),
+                    F.col("doc_id").cast("string").alias("k"),
+                    F.col("rank").cast("long").alias("n"),
+                    F.col("score").alias("val"),
+                ),
+                """SELECT 'bm25' AS kind, CAST(doc_id AS VARCHAR) AS k,
+                       CAST(rank AS BIGINT) AS n, score AS val
+                FROM text_bm25_rank""",
+            ),
+            Part(
+                "attribution_last_touch",
+                lambda at: at.select(
+                    F.lit("attr").alias("kind"),
+                    F.col("channel").alias("k"),
+                    F.col("n_purchases").alias("n"),
+                    F.col("revenue").alias("val"),
+                ),
+                """SELECT 'attr' AS kind, channel AS k, n_purchases AS n, revenue AS val
+                FROM attribution_last_touch""",
+            ),
+            Part(
+                "customer_rfm_segment",
+                lambda rfm: rfm.groupBy(F.col("segment").alias("k"))
+                .agg(F.count(F.lit(1)).alias("n"), dsum("monetary").alias("val"))
+                .select(F.lit("rfm").alias("kind"), "k", "n", "val"),
+                f"""SELECT 'rfm' AS kind, segment AS k, COUNT(*) AS n,
+                       {sql_dsum('monetary')} AS val
+                FROM customer_rfm_segment GROUP BY segment""",
+            ),
+            Part(
+                "text_normalize_unicode",
+                lambda norm: norm.agg(F.count(F.lit(1)).alias("n"), dsum("clean_len").alias("val"))
+                .select(F.lit("norm").alias("kind"), F.lit("lens").alias("k"), "n", "val")
+                .unionByName(
+                    norm.agg(F.count_distinct("clean_md5").alias("n")).select(
+                        F.lit("norm").alias("kind"),
+                        F.lit("distinct").alias("k"),
+                        "n",
+                        F.lit(0.0).alias("val"),
+                    )
+                ),
+                f"""SELECT 'norm' AS kind, 'lens' AS k, COUNT(*) AS n,
+                       {sql_dsum('clean_len')} AS val
+                FROM text_normalize_unicode
+                UNION ALL
+                SELECT 'norm', 'distinct', COUNT(DISTINCT clean_md5), 0.0
+                FROM text_normalize_unicode""",
+            ),
+            Part(
+                "graph_pagerank",
+                lambda pr: pr.orderBy(F.col("rank_units").desc(), F.col("node_id").asc())
+                .limit(20)
+                .select(
+                    F.lit("pr").alias("kind"),
+                    F.col("node_id").cast("string").alias("k"),
+                    F.col("rank_units").alias("n"),
+                    F.col("rank").alias("val"),
+                ),
+                """SELECT 'pr' AS kind, CAST(node_id AS VARCHAR) AS k,
+                       rank_units AS n, rank AS val
+                FROM graph_pagerank
+                ORDER BY rank_units DESC, node_id LIMIT 20""",
+            ),
+        ),
+    ),
 )
 
 for _slot in PACKS:

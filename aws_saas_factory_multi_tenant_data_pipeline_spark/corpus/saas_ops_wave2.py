@@ -530,183 +530,6 @@ def lake_time_travel(spark, sf_dir):
 
 
 @register(
-    "r4_mgmt_pack",
-    oracle=f"""
-        WITH old_snap AS (
-            SELECT o_orderkey, o_totalprice, o_orderstatus
-            FROM orders WHERE o_orderkey % 11 <> 0),
-        new_snap AS (
-            SELECT o_orderkey,
-                   CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 10.0
-                        ELSE o_totalprice END AS o_totalprice,
-                   CASE WHEN o_orderkey % 13 = 0 THEN 'X'
-                        ELSE o_orderstatus END AS o_orderstatus
-            FROM orders WHERE o_orderkey % 7 <> 0),
-        cdc AS (
-            SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS key,
-                   CASE WHEN o.o_orderkey IS NULL THEN 'insert'
-                        WHEN n.o_orderkey IS NULL THEN 'delete'
-                        WHEN o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice
-                         AND o.o_orderstatus IS NOT DISTINCT FROM n.o_orderstatus
-                            THEN 'unchanged'
-                        ELSE 'update' END AS change_type
-            FROM old_snap o FULL OUTER JOIN new_snap n USING (o_orderkey)),
-        cdc_rows AS (
-            SELECT 'cdc' AS kind, change_type AS k,
-                   COUNT(*) AS n,
-                   CAST(SUM(key % 100003) AS DOUBLE) AS val
-            FROM cdc WHERE change_type <> 'unchanged' GROUP BY change_type),
-        cell0 AS (
-            SELECT c_nationkey, c_mktsegment, COUNT(*) AS cn
-            FROM customer GROUP BY 1, 2),
-        fail0 AS (SELECT c_nationkey, c_mktsegment FROM cell0 WHERE cn < 13),
-        cell1 AS (
-            SELECT n.n_regionkey, c.c_mktsegment, COUNT(*) AS cn
-            FROM customer c
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            JOIN fail0 f ON f.c_nationkey = c.c_nationkey
-                        AND f.c_mktsegment = c.c_mktsegment
-            GROUP BY 1, 2),
-        priv_rows AS (
-            SELECT 'priv' AS kind, '0/' || CAST(c_nationkey AS VARCHAR) || '/' || c_mktsegment AS k,
-                   cn AS n, 0.0 AS val FROM cell0 WHERE cn >= 13
-            UNION ALL
-            SELECT 'priv', '1/' || CAST(n_regionkey AS VARCHAR) || '/' || c_mktsegment,
-                   cn, 0.0 FROM cell1 WHERE cn >= 13
-            UNION ALL
-            SELECT 'priv', '2/*',
-                   CAST(COALESCE(SUM(cn), 0) AS BIGINT), 0.0
-            FROM cell1 WHERE cn < 13),
-        rate_rows AS (
-            SELECT 'rate' AS kind,
-                   'throttled_' || CAST(n_1h > 4 AS VARCHAR) AS k,
-                   COUNT(*) AS n, CAST(SUM(n_1h) AS DOUBLE) AS val
-            FROM (SELECT COUNT(*) OVER (
-                       PARTITION BY user_id ORDER BY CAST(epoch(ts) AS BIGINT)
-                       RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW) AS n_1h
-                  FROM events)
-            GROUP BY 2),
-        zd AS (
-            SELECT o_custkey,
-                   CAST(FLOOR(epoch(o_orderdate) / 86400) AS BIGINT) AS day
-            FROM orders),
-        zmm AS (
-            SELECT MIN(o_custkey) AS lo_a, MAX(o_custkey) AS hi_a,
-                   MIN(day) AS lo_b, MAX(day) AS hi_b
-            FROM zd),
-        z_rows AS (
-            SELECT 'z' AS kind, CAST({_ZSQL.replace('d.o_custkey', 'd.o_custkey').replace('mm.', 'zmm.').replace('d.day', 'd.day')} >> 12 AS VARCHAR) AS k,
-                   COUNT(*) AS n,
-                   CAST(MAX(o_custkey) - MIN(o_custkey) + MAX(day) - MIN(day) AS DOUBLE) AS val
-            FROM zd d, zmm
-            GROUP BY 2)
-        SELECT kind, k, n, val FROM cdc_rows
-        UNION ALL SELECT kind, k, n, val FROM priv_rows
-        UNION ALL SELECT kind, k, n, val FROM rate_rows
-        UNION ALL SELECT kind, k, n, val FROM z_rows
-        ORDER BY kind, k
-    """,
-    tags=("B10", "data-mgmt", "pack"),
-    doc="Round-4 data-management pack — one driver slot covering four §2 "
-    "rows: CDC diff per-change-type counts + key checksums, the "
-    "k-anonymity generalization ladder, sliding rate-limit throttle "
-    "counts, and Z-order coarse-bucket rectangle spans. Any semantic "
-    "drift in the underlying operators changes the hash.",
-)
-def r4_mgmt_pack(spark, sf_dir):
-    from aws_saas_factory_multi_tenant_data_pipeline_spark.operators.privacy import (
-        generalized_release,
-    )
-
-    o = t(spark, sf_dir, "orders")
-    # cdc branch
-    old = o.where(F.col("o_orderkey") % 11 != 0).select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    new = o.where(F.col("o_orderkey") % 7 != 0).select(
-        "o_orderkey",
-        F.when(F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + 10.0)
-        .otherwise(F.col("o_totalprice"))
-        .alias("o_totalprice"),
-        F.when(F.col("o_orderkey") % 13 == 0, F.lit("X"))
-        .otherwise(F.col("o_orderstatus"))
-        .alias("o_orderstatus"),
-    )
-    cdc_rows = (
-        cdc_diff(old, new, ["o_orderkey"], ["o_totalprice", "o_orderstatus"])
-        .groupBy(F.col("change_type").alias("k"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_orderkey") % 100003).cast("double").alias("val"),
-        )
-        .select(F.lit("cdc").alias("kind"), "k", "n", "val")
-    )
-    # privacy ladder branch
-    c = t(spark, sf_dir, "customer")
-    nat = t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    priv_rows = (
-        generalized_release(
-            c.join(F.broadcast(nat), c.c_nationkey == nat.n_nationkey),
-            [["c_nationkey", "c_mktsegment"], ["n_regionkey", "c_mktsegment"]],
-            k=13,
-        )
-        .select(
-            F.lit("priv").alias("kind"),
-            F.concat_ws("/", F.col("level").cast("string"), F.col("qi")).alias("k"),
-            F.col("group_n").alias("n"),
-            F.lit(0.0).alias("val"),
-        )
-    )
-    # rate-limit branch
-    e = t(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy(F.unix_timestamp("ts"))
-        .rangeBetween(-3599, W.currentRow)
-    )
-    rate_rows = (
-        e.select(F.count(F.lit(1)).over(w).alias("n_1h"))
-        .groupBy(
-            F.concat(F.lit("throttled_"), (F.col("n_1h") > 4).cast("string")).alias("k")
-        )
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_1h").cast("double").alias("val"))
-        .select(F.lit("rate").alias("kind"), "k", "n", "val")
-    )
-    # z-order branch
-    zd = o.select(
-        "o_custkey",
-        F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long").alias("day"),
-    )
-    zmm = zd.agg(
-        F.min("o_custkey").alias("lo_a"),
-        F.max("o_custkey").alias("hi_a"),
-        F.min("day").alias("lo_b"),
-        F.max("day").alias("hi_b"),
-    )
-    zk = zorder_key(
-        F.col("o_custkey"), F.col("lo_a"), F.col("hi_a"),
-        F.col("day"), F.col("lo_b"), F.col("hi_b"), _ZBITS,
-    )
-    z_rows = (
-        zd.crossJoin(F.broadcast(zmm))
-        .groupBy(F.shiftright(zk, 12).cast("string").alias("k"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (
-                F.max("o_custkey") - F.min("o_custkey") + F.max("day") - F.min("day")
-            ).cast("double").alias("val"),
-        )
-        .select(F.lit("z").alias("kind"), "k", "n", "val")
-    )
-    return (
-        cdc_rows.unionByName(priv_rows)
-        .unionByName(rate_rows)
-        .unionByName(z_rows)
-        .orderBy("kind", "k")
-    )
-
-
-@register(
     "scan_schema_evolution",
     oracle=f"""
         SELECT (o_orderkey % 2 = 1) AS has_price,

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import REGISTRY, register
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.ext_llm import _DUCK_NORM
 from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import dsum, sql_dsum
@@ -224,96 +224,6 @@ def text_index_search(spark, sf_dir):
     root = _os.path.join(_SCRATCH, "text_index")
     build_text_index(docs, root)
     return search_text_index(spark, root, list(_BM25_TERMS), k=20).orderBy("rank")
-
-
-def _r5_pack2_oracle() -> str:
-    from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.wave_r5 import (
-        _pagerank_oracle,
-        _textnorm_oracle,
-    )
-
-    attr = REGISTRY["attribution_last_touch"].oracle
-    rfm = REGISTRY["customer_rfm_segment"].oracle
-    return f"""
-        SELECT 'bm25' AS kind, CAST(doc_id AS VARCHAR) AS k,
-               CAST(rank AS BIGINT) AS n, score AS val
-        FROM ({_bm25_oracle(20)})
-        UNION ALL
-        SELECT 'attr', channel, n_purchases, revenue FROM ({attr})
-        UNION ALL
-        SELECT 'rfm', segment, COUNT(*),
-               CAST(SUM(CAST(monetary AS DECIMAL(38,6))) AS DOUBLE)
-        FROM ({rfm}) GROUP BY segment
-        UNION ALL
-        SELECT 'norm', 'lens', COUNT(*),
-               CAST(SUM(CAST(clean_len AS DECIMAL(38,6))) AS DOUBLE)
-        FROM ({_textnorm_oracle()})
-        UNION ALL
-        SELECT 'norm', 'distinct', COUNT(DISTINCT clean_md5), 0.0
-        FROM ({_textnorm_oracle()})
-        UNION ALL
-        SELECT 'pr', CAST(node_id AS VARCHAR), rank_units, rank
-        FROM (SELECT * FROM ({_pagerank_oracle()})
-              ORDER BY rank_units DESC, node_id LIMIT 20)
-    """
-
-
-@register(
-    "r5_pack2",
-    oracle=_r5_pack2_oracle(),
-    tags=("B10", "B5", "saas", "pack"),
-    doc="Round-5 pack 2 — one driver slot covering five more §2 rows: "
-    "BM25 top-20 (doc, rank, score), last-touch attribution channel "
-    "totals, RFM segment rollup, unicode-normalization corpus checksums, "
-    "and the top-20 PageRank nodes (exact fixed-point units). Any drift "
-    "in the underlying operators changes the hash.",
-)
-def r5_pack2(spark, sf_dir):
-    from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.wave_r5 import (
-        graph_pagerank,
-        text_normalize_unicode,
-    )
-
-    bm25 = text_bm25_rank(spark, sf_dir).select(
-        F.lit("bm25").alias("kind"),
-        F.col("doc_id").cast("string").alias("k"),
-        F.col("rank").cast("long").alias("n"),
-        F.col("score").alias("val"),
-    )
-    attr = attribution_last_touch(spark, sf_dir).select(
-        F.lit("attr").alias("kind"),
-        F.col("channel").alias("k"),
-        F.col("n_purchases").alias("n"),
-        F.col("revenue").alias("val"),
-    )
-    rfm = (
-        customer_rfm_segment(spark, sf_dir)
-        .groupBy(F.col("segment").alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"), dsum("monetary").alias("val"))
-        .select(F.lit("rfm").alias("kind"), "k", "n", "val")
-    )
-    norm = text_normalize_unicode(spark, sf_dir)
-    norm_lens = norm.agg(
-        F.count(F.lit(1)).alias("n"), dsum("clean_len").alias("val")
-    ).select(F.lit("norm").alias("kind"), F.lit("lens").alias("k"), "n", "val")
-    norm_distinct = norm.agg(
-        F.count_distinct("clean_md5").alias("n")
-    ).select(F.lit("norm").alias("kind"), F.lit("distinct").alias("k"), "n", F.lit(0.0).alias("val"))
-    pr = (
-        graph_pagerank(spark, sf_dir)
-        .orderBy(F.col("rank_units").desc(), F.col("node_id").asc())
-        .limit(20)
-        .select(
-            F.lit("pr").alias("kind"),
-            F.col("node_id").cast("string").alias("k"),
-            F.col("rank_units").alias("n"),
-            F.col("rank").alias("val"),
-        )
-    )
-    out = bm25
-    for part in (attr, rfm, norm_lens, norm_distinct, pr):
-        out = out.unionByName(part)
-    return out.orderBy("kind", "k")
 
 
 @register(

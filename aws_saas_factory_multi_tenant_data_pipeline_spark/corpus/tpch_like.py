@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
-from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import davg, dsum, sql_davg, sql_dsum
+from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import dsum, sql_dsum
 
 
 @register(
@@ -689,49 +689,6 @@ def tpch_q21_waiting_suppliers(spark, sf_dir):
         ORDER BY numwait DESC, s_name
         LIMIT 20
         """
-    )
-
-
-@register(
-    "tpch_q1_pricing_summary",
-    oracle=f"""
-        SELECT l_returnflag, l_linestatus,
-               {sql_dsum('l_quantity')} AS sum_qty,
-               {sql_dsum('l_extendedprice')} AS sum_base_price,
-               {sql_dsum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-               {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
-               {sql_davg('l_quantity')} AS avg_qty,
-               {sql_davg('l_extendedprice')} AS avg_price,
-               {sql_davg('l_discount')} AS avg_disc,
-               COUNT(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus
-    """,
-    tags=("B4",),
-    doc="Canonical TPC-H Q1: pricing summary report. Pure map-side-partial "
-    "aggregate over the fact table — the shape that must stay a single "
-    "scan+hash-agg (no join, no subquery) at 100 TB.",
-)
-def tpch_q1_pricing_summary(spark, sf_dir):
-    li = t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity").alias("sum_qty"),
-            dsum("l_extendedprice").alias("sum_base_price"),
-            dsum(disc_price).alias("sum_disc_price"),
-            dsum(charge).alias("sum_charge"),
-            davg("l_quantity").alias("avg_qty"),
-            davg("l_extendedprice").alias("avg_price"),
-            davg("l_discount").alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 

@@ -236,120 +236,6 @@ def embedding_hard_negatives(spark, sf_dir):
     )
 
 
-@register(
-    "r5_pack",
-    oracle=f"""
-        WITH dim AS (
-            SELECT user_id, {sql_dsum('value')} AS user_total
-            FROM events GROUP BY user_id),
-        skew_rows AS (
-            SELECT 'skew' AS kind, e.event_type AS k,
-                   COUNT(*) AS n, {sql_dsum('d.user_total')} AS val
-            FROM events e JOIN dim d ON e.user_id = d.user_id
-            GROUP BY e.event_type),
-        cells AS (
-            SELECT c_nationkey, c_mktsegment, COUNT(*) AS cn
-            FROM customer GROUP BY 1, 2),
-        dp_rows AS (
-            SELECT 'dp' AS kind,
-                   CAST(c_nationkey AS VARCHAR) || '|' || c_mktsegment AS k,
-                   CAST(0 AS BIGINT) AS n,
-                   ROUND(cn + (-2.0) * (CASE WHEN u - 0.5 < 0 THEN -1.0 ELSE 1.0 END)
-                             * ln(1.0 - 2.0 * abs(u - 0.5)), 6) AS val
-            FROM (SELECT c_nationkey, c_mktsegment, cn,
-                         (CAST(('0x' || substr(md5('dp-r5|c_nationkey=' || CAST(c_nationkey AS VARCHAR)
-                                                     || '|c_mktsegment=' || c_mktsegment), 1, 13)) AS BIGINT)
-                          + 0.5) / 4503599627370496.0 AS u
-                  FROM cells)),
-        pn_rows AS (
-            SELECT 'pn' AS kind,
-                   'pn_' || substr(md5('r5-key:c_mktsegment:' || c_mktsegment), 1, 16) AS k,
-                   COUNT(*) AS n, 0.0 AS val
-            FROM customer GROUP BY c_mktsegment),
-        hist_rows AS (
-            SELECT 'hist' AS kind,
-                   CAST(LEAST(CAST(floor(o_totalprice / 50000.0) AS BIGINT), 11) AS VARCHAR) AS k,
-                   COUNT(*) AS n, {sql_dsum('o_totalprice')} AS val
-            FROM orders GROUP BY 2),
-        anchors AS (
-            SELECT vec_id AS anchor_id, label AS alabel, embedding AS av
-            FROM embeddings WHERE vec_id < 8),
-        hn_scored AS (
-            SELECT anchor_id, vec_id AS neg_id,
-                   ROUND(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(av AS DOUBLE[]))
-                         / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))
-                            * sqrt(list_dot_product(CAST(av AS DOUBLE[]), CAST(av AS DOUBLE[])))), 6) AS cosine
-            FROM embeddings CROSS JOIN anchors
-            WHERE label <> alabel),
-        hn_ranked AS (
-            SELECT anchor_id, cosine,
-                   ROW_NUMBER() OVER (PARTITION BY anchor_id ORDER BY cosine DESC, neg_id) AS rank
-            FROM hn_scored),
-        hn_rows AS (
-            SELECT 'hn' AS kind, CAST(anchor_id AS VARCHAR) AS k,
-                   COUNT(*) AS n, {sql_dsum('cosine')} AS val
-            FROM hn_ranked WHERE rank <= 5 GROUP BY anchor_id)
-        SELECT kind, k, n, val FROM skew_rows
-        UNION ALL SELECT kind, k, n, val FROM dp_rows
-        UNION ALL SELECT kind, k, n, val FROM pn_rows
-        UNION ALL SELECT kind, k, n, val FROM hist_rows
-        UNION ALL SELECT kind, k, n, val FROM hn_rows
-        ORDER BY kind, k
-    """,
-    tags=("B3", "B4", "B10", "privacy", "scale", "pack"),
-    doc="Round-5 pack — one driver slot covering five §2 rows: skew-salted "
-    "join aggregates (row-identical to the plain join), ε-DP noisy counts "
-    "(every noisy value re-derived), keyed pseudonymization tokens "
-    "byte-for-byte, the equi-width histogram, and hard-negative top-5 "
-    "per-anchor cosine checksums. Any drift in the underlying operators "
-    "changes the hash.",
-)
-def r5_pack(spark, sf_dir):
-    ev = t(spark, sf_dir, "events")
-    cust = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders")
-    emb = t(spark, sf_dir, "embeddings")
-
-    dim = ev.groupBy("user_id").agg(dsum("value").alias("user_total"))
-    skew_rows = (
-        salted_join(ev, dim, "user_id", salt=8, how="inner", hot_min_count=50)
-        .groupBy(F.col("event_type").alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"), dsum("user_total").alias("val"))
-        .select(F.lit("skew").alias("kind"), "k", "n", "val")
-    )
-    dp_rows = (
-        dp_noisy_counts(cust, ["c_nationkey", "c_mktsegment"], epsilon=0.5, seed="dp-r5")
-        .select(
-            F.lit("dp").alias("kind"),
-            F.concat_ws("|", F.col("c_nationkey").cast("string"), "c_mktsegment").alias("k"),
-            F.lit(0).cast("long").alias("n"),
-            F.col("noisy_n").alias("val"),
-        )
-    )
-    pn_rows = (
-        pseudonymize(cust, ["c_mktsegment"], secret="r5-key")
-        .groupBy(F.col("c_mktsegment").alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("pn").alias("kind"), "k", "n", F.lit(0.0).alias("val"))
-    )
-    bucket = F.least(F.floor(F.col("o_totalprice") / F.lit(50000.0)).cast("long"), F.lit(11))
-    hist_rows = (
-        o.groupBy(bucket.cast("string").alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"), dsum("o_totalprice").alias("val"))
-        .select(F.lit("hist").alias("kind"), "k", "n", "val")
-    )
-    hn_rows = (
-        hard_negatives(emb, k=5, anchor_filter=F.col("vec_id") < 8)
-        .groupBy(F.col("anchor_id").cast("string").alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"), dsum("cosine").alias("val"))
-        .select(F.lit("hn").alias("kind"), "k", "n", "val")
-    )
-    out = skew_rows
-    for part in (dp_rows, pn_rows, hist_rows, hn_rows):
-        out = out.unionByName(part)
-    return out.orderBy("kind", "k")
-
-
 # --- unicode normalization (operators/textnorm.py) -------------------------
 
 _DIRTY_PRE = "Caf\u00e9 \u201c"

@@ -30,33 +30,30 @@ TESTDATA_TABLES = (
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table (parquet scan — pushdown + pruning enabled).
 
-    ``events.parquet`` stores TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects; read it as long nanos (legacy conf) and convert to a
-    microsecond TimestampType column in-plan.
+    The schema comes from the parquet footer, read on the driver, so the
+    read launches no inference job and sets no session conf. Untagged
+    ``timestamp[us]`` (isAdjustedToUTC=false) reads as TIMESTAMP, not
+    TIMESTAMP_NTZ: under the UTC session pin DuckDB's naive TIMESTAMP
+    agrees value-for-value, and instant functions (unix_micros,
+    unix_timestamp) reject NTZ. ``timestamp[ns]``, which Spark's reader
+    rejects as a timestamp, reads as long nanos; ``events.ts`` is then
+    converted to a microsecond TimestampType column in-plan.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    schema = pq.read_schema(path)
-    if any(getattr(t, "unit", None) == "ns" for t in schema.types):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Untagged timestamp[us] (isAdjustedToUTC=false) must come back as
-    # TIMESTAMP under the UTC session pin, not TIMESTAMP_NTZ — instant
-    # functions (unix_micros, unix_timestamp) reject NTZ and DuckDB's naive
-    # TIMESTAMP agrees value-for-value with UTC instants. Pin the inference
-    # conf (works on any session, incl. the driver's) and cast defensively
-    # in case the scan was planned before the pin.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(path)
-    for f in df.schema.fields:
-        if f.name == "ts" and isinstance(f.dataType, T.LongType):
-            from pyspark.sql import functions as F
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    footer = pq.read_schema(path)
+    nanos = [f.name for f in footer if pa.types.is_timestamp(f.type) and f.type.unit == "ns"]
+    schema = from_arrow_schema(
+        pa.schema([f.with_type(pa.int64()) if f.name in nanos else f for f in footer])
+    )
+    df = spark.read.schema(schema).parquet(path)
+    if "ts" in nanos:
+        from pyspark.sql import functions as F
 
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(f.dataType, T.TimestampNTZType):
-            from pyspark.sql import functions as F
-
-            df = df.withColumn(f.name, F.col(f.name).cast(T.TimestampType()))
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
 

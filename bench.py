@@ -36,47 +36,33 @@ HEADLINE = [
     "dedup_minhash_lsh",       # B10 MinHash-LSH
     "similarity_topk_cosine",  # B10 ANN baseline
     "text_tfidf_top_terms",    # B10 text analytics
-    # round-4/5 flagships: regressions in the newest operator families
-    # should show up in BENCH_r{N}, not just pytest
+    # newer operator families: a regression in them should show up in
+    # the bench, not just in pytest
     "text_bm25_rank",          # B10 ranking (BM25 over inverted stats)
     "graph_pagerank",          # B10 iterative fixed-point (int64 arithmetic)
     "lake_zorder_layout",      # B10 Z-order clustering + skip-effectiveness
     "dedup_semantic",          # B10 SemDeDup (portable k-means + pair join)
-    # round-6 flagships: the rewritten data-bound operators
     "llm_budget_select",       # B10 token-budget selection (quantized bins)
     "sketch_kmv_sample",       # B4/B10 KMV sketch (TakeOrdered, exact merge)
-    # round-7 flagships: lake lifecycle + MJPEG media chain
     "lake_branch_wap_roundtrip",  # B1/B10 branches + write-audit-publish
     "multimodal_mjpeg_frames",    # B10 MP4(MJPEG) -> JPEG decode -> aHash
-    # round-8 flagship: margin-based bitext mining (kNN margin scoring)
     "similarity_bitext_margin",   # B10 cross-lingual pair mining
-    # round-9 flagship: real H.264 keyframe decode through the container
     "multimodal_h264_keyframes",  # B10 MP4(avc1) -> intra decode -> aHash
-    # round-9 second wave: PQ ANN (train + encode + ADC search, integer-exact)
     "similarity_pq_adc",          # B10 product quantization end-to-end
-    # round-10 flagships: WebP VP8L decode through the codec registry +
-    # exact duplicated-span dedup (Lee et al. gaps-and-islands)
     "multimodal_webp_decode",     # B10 RIFF/VP8L -> decode -> aHash
     "dedup_duplicated_spans",     # B10 exact-substring span dedup
-    # round-11 flagships: lossy VP8 key-frame decode (bit-exact vs
-    # libwebp on the real python.webp) + H.264 CABAC I-slice twins
     "multimodal_vp8_decode",      # B10 RIFF/VP8 lossy -> decode -> aHash
     "multimodal_h264_cabac",      # B10 CAVLC/CABAC twin decode match
-    "multimodal_hevc_decode",     # B10 [r12] HEVC intra encode -> decode -> aHash
-    "multimodal_pdf_ccitt",       # B10 [r12] PDF G4 fax extract -> aHash
-    # round-13 flagships: the closed HEIC quarantine, 10-bit HEVC, the
-    # RFC 7932 brotli chain, and the candidate-fed bitext scale path
-    "multimodal_heic_decode",     # B10 [r13] HEIF items -> HEVC intra -> aHash
-    "video_hevc_main10",          # B10 [r13] Main10 encode -> decode -> aHash
-    "text_brotli_decode",         # B10 [r13] HTTP br/gzip -> decode chain
-    "similarity_bitext_candidates",  # B10 [r13] candidate-fed margin mining
-    # round-14 flagships: the zstd ingest chain (graded slot) and the
-    # 5-codec compressed-shard exploder
-    "text_zstd_decode",           # B10 [r14] HTTP zstd + tar.zst roundtrips
-    "ingest_jsonl_shards",        # B10 [r14] .jsonl.{zst,xz,gz,bz2,lz4} explode
-    # round-15 flagships: the office-document slice and the 7z walk
-    "text_office_extract",        # B10 [r15] docx/xlsx/pptx/odt -> text
-    "archive_7z_extract",         # B10 [r15] 5-coder .7z member census
+    "multimodal_hevc_decode",     # B10 HEVC intra encode -> decode -> aHash
+    "multimodal_pdf_ccitt",       # B10 PDF G4 fax extract -> aHash
+    "multimodal_heic_decode",     # B10 HEIF items -> HEVC intra -> aHash
+    "video_hevc_main10",          # B10 Main10 encode -> decode -> aHash
+    "text_brotli_decode",         # B10 HTTP br/gzip -> decode chain
+    "similarity_bitext_candidates",  # B10 candidate-fed margin mining
+    "text_zstd_decode",           # B10 HTTP zstd + tar.zst roundtrips
+    "ingest_jsonl_shards",        # B10 .jsonl.{zst,xz,gz,bz2,lz4} explode
+    "text_office_extract",        # B10 docx/xlsx/pptx/odt -> text
+    "archive_7z_extract",         # B10 5-coder .7z member census
 ]
 
 
@@ -102,12 +88,10 @@ def _bench_ingest_transform(spark, n_rows: int = 500_000) -> float:
     partition-derive a raw JSON event stream (A8/A2/A4). CPU-bound and
     stable; the reference's Flink path runs parallelism=2 with a 60 s sink
     buffer (kinesis-stack.ts:194-205), i.e. a floor of minutes for the same
-    records. Round 3: the strict type gate (schema_of_variant token-type
-    checks, API-contract parity) binds its variant parse to a lambda
-    variable so the pushed-down filter parses each record's JSON exactly
-    once — warm it now benches FASTER than the loose gate (1 parse vs 4;
-    round 2's inlined-parse shape was a 6× regression, since fixed;
-    pinned by tests/test_plans.py::test_strict_ingest_parses_json_once)."""
+    records. The strict type gate (schema_of_variant token-type checks,
+    API-contract parity) binds its variant parse to a lambda variable so
+    the pushed-down filter parses each record's JSON once, not four times
+    (pinned by tests/test_plans.py::test_strict_ingest_parses_json_once)."""
     from aws_saas_factory_multi_tenant_data_pipeline_spark.ingest import ingest_batch
 
     t0 = time.time()

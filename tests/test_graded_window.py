@@ -51,3 +51,14 @@ def test_pack_parts_are_registered_leaves():
         for part in slot.parts:
             assert part.leaf in reg, f"{slot.name}: unregistered leaf {part.leaf}"
             assert part.leaf not in packs, f"{slot.name} nests pack {part.leaf}"
+
+
+def test_every_pack_is_a_table_slot():
+    """A query tagged "pack" is a `PACKS` slot: its parts read registered
+    leaves, so no pack re-implements a leaf in its own Spark and SQL."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.packs import PACKS
+
+    reg = load_all()
+    slots = {s.name for s in PACKS}
+    hand_built = sorted(n for n, spec in reg.items() if "pack" in spec.tags and n not in slots)
+    assert hand_built == []

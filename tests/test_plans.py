@@ -189,11 +189,69 @@ def test_tpch_q1_is_single_scan_partial_agg(spark, sf_smoke):
     that scales linearly to 100 TB."""
     from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import load_all
 
-    q = load_all()["tpch_q1_pricing_summary"].spark_fn(spark, sf_smoke)
+    q = load_all()["agg_pricing_summary"].spark_fn(spark, sf_smoke)
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert plan.count("HashAggregate") >= 2  # partial + final
     assert_pushed_filter(q, "l_shipdate")
+
+
+def _read_table_effects(spark, sf_dir, name):
+    """``read_table`` under its own job group: (frame, jobs it launched,
+    session conf keys it changed)."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.sources import read_table
+
+    sc = spark.sparkContext
+    before = dict(spark.conf.getAll)
+    group = f"read_table {sf_dir} {name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = read_table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    after = dict(spark.conf.getAll)
+    changed = sorted(k for k in before.keys() | after.keys() if before.get(k) != after.get(k))
+    return df, list(sc.statusTracker().getJobIdsForGroup(group)), changed
+
+
+def test_read_table_takes_footer_schema(spark, sf_smoke):
+    """A table read plans from the parquet footer: no schema-inference job,
+    no session conf written (one session serves every tenant), and
+    untagged timestamp[us] still reads as TIMESTAMP, also in a session
+    that keeps Spark's default inferTimestampNTZ."""
+    from pyspark.sql import types as T
+
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.sources import (
+        TESTDATA_TABLES,
+        read_table,
+    )
+
+    for name in TESTDATA_TABLES:
+        _, jobs, changed = _read_table_effects(spark, sf_smoke, name)
+        assert (jobs, changed) == ([], []), name
+    fresh = spark.newSession()
+    fresh.conf.unset("spark.sql.parquet.inferTimestampNTZ.enabled")
+    li = read_table(fresh, sf_smoke, "lineitem")
+    assert isinstance(li.schema["l_shipdate"].dataType, T.TimestampType)
+
+
+def test_read_table_nanos_ts_reads_as_micros(spark, tmp_path):
+    """A timestamp[ns] ``ts`` comes back as a microsecond TIMESTAMP without
+    the legacy nanosAsLong conf and without a job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    ns = [1_704_067_200_123_456_789, 1_704_153_600_000_001_999]
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+    )
+    df, jobs, changed = _read_table_effects(spark, str(tmp_path), "events")
+    assert (jobs, changed) == ([], [])
+    assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+    got = [r.us for r in df.orderBy("event_id").select(F.unix_micros("ts").alias("us")).collect()]
+    assert got == [v // 1000 for v in ns]
 
 
 def test_tpch_q5_broadcasts_all_dims(spark, sf_smoke):

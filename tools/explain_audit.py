@@ -62,9 +62,11 @@ EXPECTED_FLAGS: dict[str, dict[str, int]] = {
     "text_tfidf_top_terms": {"BroadcastNestedLoopJoin": 1},
     # 1-row broadcast of the global (N, avgdl) BM25 constants
     "text_bm25_rank": {"BroadcastNestedLoopJoin": 1},
-    # pack queries inherit their components' 1-row aggregate broadcasts:
-    # r4_mgmt/r5: the z-order global (min,max) frame; r5_pack2: PageRank's
-    # node count; r6_pack: the Bloom dense-bit row + the HLL totals row
+    # pack queries inherit their leaves' bounded broadcasts: r4_mgmt_pack
+    # lake_zorder_layout's 1-row (min,max) frame; r5_pack
+    # embedding_hard_negatives' 8-row anchor set; r5_pack2 text_bm25_rank's
+    # (N, avgdl) row + customer_rfm_segment's max-date row; r6_pack: the
+    # Bloom dense-bit row + the HLL totals row
     "r4_mgmt_pack": {"BroadcastNestedLoopJoin": 1},
     "r5_pack": {"BroadcastNestedLoopJoin": 1},
     "r5_pack2": {"BroadcastNestedLoopJoin": 2},
