@@ -48,11 +48,21 @@ def _ingest_time_col(ingest_ts: int | None) -> Column:
     return F.unix_timestamp(F.current_timestamp())
 
 
-def validate_raw(raw: DataFrame, json_col: str = "raw", strict_types: bool = True) -> DataFrame:
+def validate_raw(
+    raw: DataFrame,
+    json_col: str = "raw",
+    strict_types: bool = True,
+    observation: Observation | None = None,
+) -> DataFrame:
     """Parse+validate the request envelope; adds ``Data`` struct and ``_valid``.
 
     Keeps invalid rows (null/missing fields) so the caller can split them to
     quarantine — mirrors Firehose's ``error/`` routing (kinesis-stack.ts:139).
+
+    ``observation`` (batch frames only) counts the invalid rows as
+    ``n_quarantined`` while the first action over the result runs, so a
+    caller that writes the valid rows first learns whether the quarantine
+    is empty without scanning it.
 
     ``strict_types`` enforces the reference's API-Gateway model contract
     (apigateway-stack.ts:130-136, ``type: string``): ``from_json`` alone
@@ -104,7 +114,10 @@ def validate_raw(raw: DataFrame, json_col: str = "raw", strict_types: bool = Tru
         cond = checks[0]
         for c in checks[1:]:
             cond = cond & c
-    return parsed.withColumn("_valid", cond)
+    checked = parsed.withColumn("_valid", cond)
+    if observation is not None:
+        checked = checked.observe(observation, F.count_if(~F.col("_valid")).alias("n_quarantined"))
+    return checked
 
 
 def enrich(valid: DataFrame, tenant: TenantContext | None, ingest_ts: int | None = None) -> DataFrame:
@@ -153,15 +166,21 @@ def ingest_batch(
     """Full batch ingest: validate (A8) → split (A5) → enrich (A2) → partition cols (A4).
 
     Works on a batch or streaming DataFrame of raw JSON strings.
-
-    ``observation`` (batch frames only) counts the rows routed to
-    quarantine as ``n_quarantined`` while the first action on either
-    output runs, so a caller that writes ``valid`` first learns whether
-    the quarantine is empty without scanning it.
+    ``observation`` is ``validate_raw``'s quarantine count.
     """
-    checked = validate_raw(raw, json_col=json_col, strict_types=strict_types)
-    if observation is not None:
-        checked = checked.observe(observation, F.count_if(~F.col("_valid")).alias("n_quarantined"))
+    checked = validate_raw(raw, json_col=json_col, strict_types=strict_types, observation=observation)
+    return split_validated(checked, tenant, json_col=json_col, ingest_ts=ingest_ts)
+
+
+def split_validated(
+    checked: DataFrame,
+    tenant: TenantContext | None = None,
+    json_col: str = "raw",
+    ingest_ts: int | None = None,
+) -> IngestResult:
+    """Split ``validate_raw``'s output (A5) and enrich the valid rows (A2,
+    A4). Both outputs read ``checked``, so a caller that persists it
+    parses each record once for both writes."""
     # carry the (server-side) tenant identity into quarantine when present:
     # without it dead-lettered records can never be re-attributed on a
     # reprocess (lake.reprocess_quarantine) — the reference's error/ dir

@@ -20,10 +20,11 @@ Scale notes (100 TB):
   columns the storage layout uses.
 - The shuffle is sized at one writer task per core
   (``defaultParallelism``). A write costs per file, not per byte (a PUT on
-  S3; forked ``chmod``s per directory, file and ``.crc`` on the local
-  Hadoop FS), and a micro-batch is small enough that AQE would coalesce
-  an unnumbered shuffle onto one task, which then creates every partition
-  file in turn while the other cores idle.
+  S3; on local disk a file create plus about 6.5 ms of parquet writer CPU
+  per file; ``get_spark``'s file system sets each mode in-process rather
+  than forking a ``chmod``), and a micro-batch is small enough that AQE
+  would coalesce an unnumbered shuffle onto one task, which then creates
+  every partition file in turn while the other cores idle.
 - ``compact_partitions`` is the periodic OPTIMIZE-style rewrite the
   reference lacks (Firehose's known small-file weakness): rewrite a
   partition subtree to one file per partition.

@@ -10,14 +10,61 @@ rely on AQE + explicit repartition-by-tenant before partitioned writes).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
-from pyspark import StorageLevel
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 #: number of local cores the harness uses (driver contract: SPARK_GRAFT_CPUS)
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+
+#: Hadoop ``LocalFileSystem`` that sets permissions in-process instead of
+#: forking a ``chmod`` per directory, file and ``.crc`` (source next to the
+#: jar; rebuild with ``tools/build_jvm.py``)
+FS_SHIM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "mtdp-fs.jar")
+FS_SHIM_CLASS = "mtdp.fs.InProcessPermsLocalFileSystem"
+
+
+def fs_shim_conf(
+    jar: str, extra_conf: Mapping[str, str], context_active: bool, class_loadable: bool = True
+) -> dict[str, str]:
+    """Conf keys that make ``file:`` paths use the in-process-permission
+    file system, or none when it cannot be used safely.
+
+    The jar must be on the JVM's classpath at launch, so nothing is set
+    when the jar is missing, when a SparkContext is already active (its
+    conf is fixed and a ``fs.file.impl`` naming an unloadable class would
+    fail every write), when an already-running JVM cannot load the class,
+    or when the caller picked its own ``fs.file.impl``. A caller's
+    ``spark.driver.extraClassPath`` is kept after the jar. ``local[N]``
+    executors share the driver's JVM, so the driver classpath suffices.
+    """
+    if (
+        context_active
+        or not class_loadable
+        or not os.path.isfile(jar)
+        or "spark.hadoop.fs.file.impl" in extra_conf
+    ):
+        return {}
+    cp = extra_conf.get("spark.driver.extraClassPath")
+    return {
+        "spark.driver.extraClassPath": jar + os.pathsep + cp if cp else jar,
+        "spark.hadoop.fs.file.impl": FS_SHIM_CLASS,
+    }
+
+
+def _jvm_loads(name: str) -> bool:
+    """Whether the running JVM, if any, can load class ``name``."""
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return True  # not launched yet: it starts with the classpath we set
+    try:
+        jvm.java.lang.Class.forName(name)
+    except Py4JJavaError:
+        return False
+    return True
 
 
 def get_spark(
@@ -35,6 +82,8 @@ def get_spark(
       pinned by tests/test_plans.py::test_operator_sets_no_aqe_conf
     - shuffle partitions sized to cores for local mode, not the 200 default
     - Arrow enabled for Pandas-UDF / toPandas paths
+    - ``file:`` paths through ``FS_SHIM_CLASS`` when ``fs_shim_conf`` allows
+      it, so local lake writes fork no ``chmod`` per file and directory
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
@@ -62,7 +111,14 @@ def get_spark(
         # more than 32 landing files would otherwise pay it every trigger.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    shim = fs_shim_conf(
+        FS_SHIM_JAR,
+        extra_conf,
+        context_active=SparkContext._active_spark_context is not None,
+        class_loadable=_jvm_loads(FS_SHIM_CLASS),
+    )
+    for k, v in {**extra_conf, **shim}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

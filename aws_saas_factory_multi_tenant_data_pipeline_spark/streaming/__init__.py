@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from aws_saas_factory_multi_tenant_data_pipeline_spark.ingest import ingest_batch
+from aws_saas_factory_multi_tenant_data_pipeline_spark.ingest import split_validated, validate_raw
 from aws_saas_factory_multi_tenant_data_pipeline_spark.lake import (
     write_lake,
     write_lake_overwrite_partitions,
@@ -27,6 +27,7 @@ from aws_saas_factory_multi_tenant_data_pipeline_spark.lake import (
 )
 from aws_saas_factory_multi_tenant_data_pipeline_spark.model import PARTITION_COLS
 from aws_saas_factory_multi_tenant_data_pipeline_spark.observability import observed_count
+from aws_saas_factory_multi_tenant_data_pipeline_spark.session import persisted
 from aws_saas_factory_multi_tenant_data_pipeline_spark.tenancy import TenantContext
 
 #: hidden partition column carrying the micro-batch epoch in exactly-once
@@ -85,19 +86,22 @@ def start_ingest_stream(
         # partition layout) for deterministic replays / the corpus
         # stream_sink_roundtrip oracle; None = wall clock (production)
         quarantined = Observation()
-        res = ingest_batch(batch_df, tenant, ingest_ts=ingest_ts, observation=quarantined)
-        if exactly_once:
-            epoch_idempotent_write(res.valid, lake_root, epoch_id, fmt=fmt)
-        else:
-            write_lake(res.valid, lake_root, fmt=fmt)
-        # counted on the lake write's own pass, so a clean batch creates no
-        # error/ directory without a probe job; an empty or all-malformed
-        # batch reports no metrics and is probed instead
-        n_quarantined = observed_count(quarantined, "n_quarantined")
-        if n_quarantined is None:
-            n_quarantined = res.quarantine.limit(1).count()
-        if n_quarantined > 0:
-            write_quarantine(res.quarantine, lake_root, "validation-failed")
+        # held across both writes, so the quarantine write reads the
+        # validated rows the lake write cached instead of the source again
+        with persisted(validate_raw(batch_df, observation=quarantined)) as checked:
+            res = split_validated(checked, tenant, ingest_ts=ingest_ts)
+            if exactly_once:
+                epoch_idempotent_write(res.valid, lake_root, epoch_id, fmt=fmt)
+            else:
+                write_lake(res.valid, lake_root, fmt=fmt)
+            # counted on the lake write's own pass, so a clean batch creates
+            # no error/ directory without a probe job; an empty or
+            # all-malformed batch reports no metrics and is probed instead
+            n_quarantined = observed_count(quarantined, "n_quarantined")
+            if n_quarantined is None:
+                n_quarantined = res.quarantine.limit(1).count()
+            if n_quarantined > 0:
+                write_quarantine(res.quarantine, lake_root, "validation-failed")
 
     writer = raw_stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint)
     if available_now:

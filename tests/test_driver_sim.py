@@ -57,3 +57,14 @@ def test_query_selected_when_its_module_imports_the_changed_module():
     touched = touched_queries(REGISTRY, {os.path.normpath(
         "aws_saas_factory_multi_tenant_data_pipeline_spark/operators/clustering.py")})
     assert "dedup_semantic" in touched
+
+
+def test_package_init_change_selects_every_query_reading_through_util():
+    # corpus/_util.py's t() reads every table through sources.read_table,
+    # which lives in sources/__init__.py
+    pkg = "aws_saas_factory_multi_tenant_data_pipeline_spark"
+    through_util = touched_queries(REGISTRY, {os.path.normpath(f"{pkg}/corpus/_util.py")})
+    assert "agg_pricing_summary" in through_util
+    assert through_util <= touched_queries(
+        REGISTRY, {os.path.normpath(f"{pkg}/sources/__init__.py")}
+    )

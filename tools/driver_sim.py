@@ -26,7 +26,8 @@ Usage:  python tools/driver_sim.py [sf_dir] [query ...]
         python tools/driver_sim.py --changed-since REF [sf_dir]
             # only queries touched since git REF: a query is selected if
             # its defining corpus module changed, if that module imports a
-            # changed module at top level, if its function source
+            # changed module at top level (directly or through other repo
+            # modules; a package is its __init__.py), if its function source
             # references a changed package module, or (transitively) if
             # it wraps a touched component query (a leaf in
             # corpus/packs.py's table, or a quoted name in a pack's source) —
@@ -116,23 +117,45 @@ def changed_queries(registry, ref: str) -> set:
     return touched_queries(registry, {os.path.normpath(pth) for pth in out})
 
 
-def top_level_import_stems(path: str) -> set:
-    """Last component of every module ``path`` imports at top level, plus
-    every name it imports from one (``from ..operators import clustering``
-    names the ``clustering`` module)."""
+def module_name(path: str) -> str:
+    """Dotted module name of the repo-relative ``path``; a package's
+    ``__init__.py`` names the package."""
+    parts = os.path.splitext(os.path.normpath(path))[0].split(os.sep)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def module_file(name: str) -> str | None:
+    """Repo-relative source file of dotted module ``name``; None outside
+    the repo."""
+    base = name.replace(".", os.sep)
+    for f in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(os.path.join(REPO, f)):
+            return f
+    return None
+
+
+def top_level_imports(path: str) -> set:
+    """Dotted names of every module the repo-relative ``path`` imports at
+    top level. ``from m import n`` gives ``m`` and ``m.n`` (``n`` may be a
+    submodule); relative imports resolve against ``path``'s package."""
     import ast
 
-    with open(path) as fh:
+    with open(os.path.join(REPO, path)) as fh:
         tree = ast.parse(fh.read())
-    stems = set()
+    package = module_name(path).split(".")
+    if not path.endswith("__init__.py"):
+        package = package[:-1]
+    names = set()
     for node in tree.body:
         if isinstance(node, ast.Import):
-            stems |= {a.name.rsplit(".", 1)[-1] for a in node.names}
+            names |= {a.name for a in node.names}
         elif isinstance(node, ast.ImportFrom):
-            if node.module:
-                stems.add(node.module.rsplit(".", 1)[-1])
-            stems |= {a.name for a in node.names}
-    return stems
+            base = node.module or ""
+            if node.level:
+                base = ".".join(package[: len(package) - node.level + 1] + ([base] if base else []))
+            names.add(base)
+            names |= {f"{base}.{a.name}" for a in node.names}
+    return names
 
 
 def touched_queries(registry, changed_paths: set) -> set:
@@ -142,10 +165,25 @@ def touched_queries(registry, changed_paths: set) -> set:
 
     from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus.packs import PACKS
 
-    stems = {os.path.splitext(os.path.basename(pth))[0] for pth in changed_paths}
+    changed = {module_name(pth) for pth in changed_paths}
+    stems = {m.rsplit(".", 1)[-1] for m in changed}
+    imports_of = functools.cache(top_level_imports)
+
+    @functools.cache
+    def reaches_change(mod_file: str) -> bool:
+        # the repo modules mod_file imports, directly or through each other
+        seen, todo = set(), [module_name(mod_file)]
+        while todo:
+            m = todo.pop()
+            f = module_file(m)
+            if f is None or m in seen:
+                continue
+            seen.add(m)
+            todo.extend(imports_of(f))
+        return bool(seen & changed)
+
     touched = set()
     sources = {}
-    imports_of = functools.cache(lambda f: top_level_import_stems(os.path.join(REPO, f)))
     for name, spec in registry.items():
         try:
             mod_file = os.path.normpath(os.path.relpath(
@@ -154,7 +192,7 @@ def touched_queries(registry, changed_paths: set) -> set:
         except (TypeError, OSError):
             touched.add(name)  # can't inspect → be safe, re-run
             continue
-        if mod_file in changed_paths or stems & imports_of(mod_file):
+        if reaches_change(mod_file):
             touched.add(name)
             continue
         src = sources[name]
