@@ -7,7 +7,9 @@ sf0.01 and hash-compares; tests/tools run the same comparison locally.
 
 Determinism contract (FIXTURES.md §3): total ORDER BY with a unique key
 suffix, decimal-exact double aggregates (functions.dsum/davg), array_sort
-around collected arrays, ties broken by id, session timezone UTC.
+around collected arrays, ties broken by id, session timezone UTC — pinned
+where a session is made (session.get_spark) or handed over (once per call
+of __spark_entry__.entry() and of each queries() callable), never by a query.
 """
 
 from __future__ import annotations

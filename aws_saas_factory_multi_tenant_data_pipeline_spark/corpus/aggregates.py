@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
-from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t, table_sql
 from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import davg, dsum, sql_davg, sql_dsum
 
 
@@ -209,17 +209,14 @@ def cube_counts(spark, sf_dir):
     doc="Explicit GROUPING SETS via SQL.",
 )
 def grouping_sets_mixed(spark, sf_dir):
-    t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
+    return table_sql(spark, sf_dir, """
         SELECT o_orderstatus, o_orderpriority,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total,
                COUNT(*) AS n
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST
-        """
-    )
+    """)
 
 
 @register(

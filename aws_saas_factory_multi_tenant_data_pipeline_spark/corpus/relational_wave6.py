@@ -16,37 +16,29 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
-from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import duck_sql, t, table_sql
+
+
+_VALUES_INLINE = """
+    WITH region_labels(r_key, label) AS (
+        VALUES (0, 'africa-zone'), (1, 'americas-zone'), (2, 'asia-zone'),
+               (3, 'europe-zone'), (4, 'mideast-zone')
+    )
+    SELECT n_nationkey, n_name, label
+    FROM {nation} JOIN region_labels ON n_regionkey = r_key
+    ORDER BY n_nationkey
+"""
 
 
 @register(
     "fn_values_inline",
-    oracle="""
-        WITH region_labels(r_key, label) AS (
-            VALUES (0, 'africa-zone'), (1, 'americas-zone'), (2, 'asia-zone'),
-                   (3, 'europe-zone'), (4, 'mideast-zone')
-        )
-        SELECT n_nationkey, n_name, label
-        FROM nation JOIN region_labels ON n_regionkey = r_key
-        ORDER BY n_nationkey
-    """,
+    oracle=duck_sql(_VALUES_INLINE),
     tags=("B2", "B6"),
     doc="Inline VALUES table (constant dim decode) joined to a real table "
     "— Athena/Presto VALUES parity; the literal relation broadcasts.",
 )
 def fn_values_inline(spark, sf_dir):
-    t(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    return spark.sql(
-        """
-        WITH region_labels(r_key, label) AS (
-            VALUES (0, 'africa-zone'), (1, 'americas-zone'), (2, 'asia-zone'),
-                   (3, 'europe-zone'), (4, 'mideast-zone')
-        )
-        SELECT n_nationkey, n_name, label
-        FROM nation JOIN region_labels ON n_regionkey = r_key
-        ORDER BY n_nationkey
-        """
-    )
+    return table_sql(spark, sf_dir, _VALUES_INLINE)
 
 
 @register(
@@ -93,14 +85,11 @@ def agg_map_agg(spark, sf_dir):
     "(Athena TABLESAMPLE BERNOULLI); scan-time filter, no materialization.",
 )
 def sample_tablesample(spark, sf_dir):
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
+    return table_sql(spark, sf_dir, """
         SELECT l_orderkey, l_linenumber, l_quantity
-        FROM lineitem TABLESAMPLE (10 PERCENT) REPEATABLE (42)
+        FROM {lineitem} TABLESAMPLE (10 PERCENT) REPEATABLE (42)
         ORDER BY l_orderkey, l_linenumber
-        """
-    )
+    """)
 
 
 @register(

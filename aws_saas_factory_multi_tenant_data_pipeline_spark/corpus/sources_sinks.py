@@ -10,11 +10,12 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
-from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t, table_sql
 from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import dsum, sql_dsum
 from aws_saas_factory_multi_tenant_data_pipeline_spark.sources import read_csv, read_json_lines
 
@@ -109,20 +110,17 @@ def scan_partitioned_roundtrip(spark, sf_dir):
         ORDER BY c_mktsegment
     """,
     tags=("B1", "A6"),
-    doc="Catalog-table query path: register in the session catalog, query "
-    "via spark.sql (A6/A7 shape on the testdata).",
+    doc="Catalog-table query path: spark.sql over the table bound into the "
+    "session catalog for this call (A6/A7 shape on the testdata).",
 )
 def catalog_table_sql(spark, sf_dir):
-    t(spark, sf_dir, "customer").createOrReplaceTempView("customer_cat")
-    return spark.sql(
-        """
+    return table_sql(spark, sf_dir, """
         SELECT c_mktsegment, COUNT(*) AS n,
                CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS bal
-        FROM customer_cat
+        FROM {customer}
         GROUP BY c_mktsegment
         ORDER BY c_mktsegment
-        """
-    )
+    """)
 
 
 @register(
@@ -225,30 +223,28 @@ def scan_text_roundtrip(spark, sf_dir):
     "after read so reruns are idempotent.",
 )
 def catalog_view_ctas(spark, sf_dir):
-    t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v_src")
-    spark.sql(
-        """
-        CREATE OR REPLACE TEMP VIEW orders_prio_v AS
+    # per-call names, so a concurrent run neither replaces nor drops them;
+    # a SQL-defined view would re-resolve {orders} after its binding is gone
+    suffix = uuid.uuid4().hex
+    view, table = f"orders_prio_v_{suffix}", f"orders_prio_ctas_{suffix}"
+    table_sql(spark, sf_dir, """
         SELECT o_orderpriority, COUNT(*) AS n,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
-        FROM orders_v_src
+        FROM {orders}
         GROUP BY o_orderpriority
-        """
-    )
-    spark.sql("DROP TABLE IF EXISTS orders_prio_ctas")
-    spark.sql(
-        "CREATE TABLE orders_prio_ctas USING parquet AS SELECT * FROM orders_prio_v"
-    )
-    out = spark.sql(
-        """
-        SELECT o_orderpriority, n, total, ROUND(total / n, 6) AS avg_price
-        FROM orders_prio_ctas
-        ORDER BY o_orderpriority
-        """
-    )
-    # materialize before dropping the backing table (driver collects later)
-    rows = out.collect()
-    spark.sql("DROP TABLE IF EXISTS orders_prio_ctas")
+    """).createTempView(view)
+    try:
+        spark.sql(f"CREATE TABLE {table} USING parquet AS SELECT * FROM {view}")
+        out = spark.sql(f"""
+            SELECT o_orderpriority, n, total, ROUND(total / n, 6) AS avg_price
+            FROM {table}
+            ORDER BY o_orderpriority
+        """)
+        # materialize before dropping the backing table (driver collects later)
+        rows = out.collect()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        spark.catalog.dropTempView(view)
     return spark.createDataFrame(rows, out.schema).orderBy("o_orderpriority")
 
 

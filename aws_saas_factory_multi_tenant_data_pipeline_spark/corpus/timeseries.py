@@ -21,7 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
-from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t, table_sql
 from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import dsum, sql_dsum
 
 
@@ -147,9 +147,7 @@ def timeseries_locf(spark, sf_dir):
     "sequence()+explode is the fact-data path (see module docstring).",
 )
 def recursive_cte_month_spine(spark, sf_dir):
-    t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
+    return table_sql(spark, sf_dir, """
         WITH RECURSIVE months(m) AS (
             SELECT TIMESTAMP '1995-01-01'
             UNION ALL
@@ -158,13 +156,12 @@ def recursive_cte_month_spine(spark, sf_dir):
         ),
         monthly AS (
             SELECT date_trunc('month', o_orderdate) AS mo, COUNT(*) AS cnt
-            FROM orders WHERE year(o_orderdate) = 1995 GROUP BY 1
+            FROM {orders} WHERE year(o_orderdate) = 1995 GROUP BY 1
         )
         SELECT m, COALESCE(cnt, 0) AS order_cnt
         FROM months LEFT JOIN monthly ON mo = m
         ORDER BY m
-        """
-    )
+    """)
 
 
 @register(

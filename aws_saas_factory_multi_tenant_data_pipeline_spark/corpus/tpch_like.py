@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
-from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import duck_sql, t, table_sql
 from aws_saas_factory_multi_tenant_data_pipeline_spark.functions import dsum, sql_dsum
 
 
@@ -280,100 +280,70 @@ def tpch_q18_top_spenders(spark, sf_dir):
     )
 
 
+_Q2 = """
+    SELECT s_suppkey, s_name, n_name, CAST(s_acctbal AS DOUBLE) AS s_acctbal
+    FROM {supplier} AS supplier JOIN {nation} ON s_nationkey = n_nationkey
+    WHERE s_acctbal = (SELECT MIN(s2.s_acctbal) FROM {supplier} s2
+                       WHERE s2.s_nationkey = supplier.s_nationkey)
+    ORDER BY s_suppkey
+"""
+
+
 @register(
     "tpch_q2_min_per_group",
-    oracle="""
-        SELECT s_suppkey, s_name, n_name, CAST(s_acctbal AS DOUBLE) AS s_acctbal
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        WHERE s_acctbal = (SELECT MIN(s2.s_acctbal) FROM supplier s2
-                           WHERE s2.s_nationkey = supplier.s_nationkey)
-        ORDER BY s_suppkey
-    """,
+    oracle=duck_sql(_Q2),
     tags=("B2", "B3"),
     doc="Q2 shape: min-value row per group via correlated scalar subquery.",
 )
 def tpch_q2_min_per_group(spark, sf_dir):
-    _views = lambda *names: [t(spark, sf_dir, n).createOrReplaceTempView(n) for n in names]
-    _views("supplier", "nation")
-    return spark.sql(
-        """
-        SELECT s_suppkey, s_name, n_name, CAST(s_acctbal AS DOUBLE) AS s_acctbal
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        WHERE s_acctbal = (SELECT MIN(s2.s_acctbal) FROM supplier s2
-                           WHERE s2.s_nationkey = supplier.s_nationkey)
-        ORDER BY s_suppkey
-        """
-    )
+    return table_sql(spark, sf_dir, _Q2)
+
+
+_Q15 = """
+    WITH revenue AS (
+        SELECT l_suppkey AS supplier_no,
+               CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS total_revenue
+        FROM {lineitem}
+        WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
+        GROUP BY l_suppkey)
+    SELECT s_suppkey, s_name, total_revenue
+    FROM {supplier} JOIN revenue ON s_suppkey = supplier_no
+    WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
+    ORDER BY s_suppkey
+"""
 
 
 @register(
     "tpch_q15_top_supplier",
-    oracle="""
-        WITH revenue AS (
-            SELECT l_suppkey AS supplier_no,
-                   CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS total_revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-            GROUP BY l_suppkey)
-        SELECT s_suppkey, s_name, total_revenue
-        FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-        ORDER BY s_suppkey
-    """,
+    oracle=duck_sql(_Q15),
     tags=("B2", "B3", "B4"),
     doc="Q15 shape: top supplier by windowed revenue (CTE + scalar subquery max).",
 )
 def tpch_q15_top_supplier(spark, sf_dir):
-    for n in ("supplier", "lineitem"):
-        t(spark, sf_dir, n).createOrReplaceTempView(n)
-    return spark.sql(
-        """
-        WITH revenue AS (
-            SELECT l_suppkey AS supplier_no,
-                   CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS total_revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-            GROUP BY l_suppkey)
-        SELECT s_suppkey, s_name, total_revenue
-        FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-        ORDER BY s_suppkey
-        """
-    )
+    return table_sql(spark, sf_dir, _Q15)
+
+
+_Q20 = """
+    SELECT s_suppkey, s_name
+    FROM {supplier} JOIN {nation} ON s_nationkey = n_nationkey
+    WHERE n_regionkey <= 2
+      AND s_suppkey IN (
+          SELECT l_suppkey FROM {lineitem}
+          WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+          GROUP BY l_suppkey
+          HAVING SUM(l_quantity) > 400)
+    ORDER BY s_suppkey
+"""
 
 
 @register(
     "tpch_q20_nested_in",
-    oracle="""
-        SELECT s_suppkey, s_name
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        WHERE n_regionkey <= 2
-          AND s_suppkey IN (
-              SELECT l_suppkey FROM lineitem
-              WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-              GROUP BY l_suppkey
-              HAVING SUM(l_quantity) > 400)
-        ORDER BY s_suppkey
-    """,
+    oracle=duck_sql(_Q20),
     tags=("B2", "B3", "B4"),
     doc="Q20 shape: nested IN over an aggregated subquery.",
 )
 def tpch_q20_nested_in(spark, sf_dir):
-    for n in ("supplier", "nation", "lineitem"):
-        t(spark, sf_dir, n).createOrReplaceTempView(n)
-    return spark.sql(
-        """
-        SELECT s_suppkey, s_name
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        WHERE n_regionkey <= 2
-          AND s_suppkey IN (
-              SELECT l_suppkey FROM lineitem
-              WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-              GROUP BY l_suppkey
-              HAVING SUM(l_quantity) > 400)
-        ORDER BY s_suppkey
-        """
-    )
+    return table_sql(spark, sf_dir, _Q20)
 
 
 @register(
@@ -481,47 +451,32 @@ def tpch_q13_order_distribution(spark, sf_dir):
     )
 
 
+_Q22 = """
+    WITH avg_bal AS (
+        SELECT AVG(c_acctbal) AS ab FROM {customer} WHERE c_acctbal > 0),
+    eligible AS (
+        SELECT c_custkey, c_nationkey % 7 AS cntrycode, c_acctbal
+        FROM {customer}, avg_bal
+        WHERE c_acctbal > ab
+          AND NOT EXISTS (SELECT 1 FROM {orders}
+                          WHERE o_custkey = c_custkey AND o_totalprice > 350000))
+    SELECT cntrycode, COUNT(*) AS numcust,
+           CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS totacctbal
+    FROM eligible
+    GROUP BY cntrycode
+    ORDER BY cntrycode
+"""
+
+
 @register(
     "tpch_q22_global_sales",
-    oracle="""
-        WITH avg_bal AS (
-            SELECT AVG(c_acctbal) AS ab FROM customer WHERE c_acctbal > 0),
-        eligible AS (
-            SELECT c_custkey, c_nationkey % 7 AS cntrycode, c_acctbal
-            FROM customer, avg_bal
-            WHERE c_acctbal > ab
-              AND NOT EXISTS (SELECT 1 FROM orders
-                              WHERE o_custkey = c_custkey AND o_totalprice > 350000))
-        SELECT cntrycode, COUNT(*) AS numcust,
-               CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS totacctbal
-        FROM eligible
-        GROUP BY cntrycode
-        ORDER BY cntrycode
-    """,
+    oracle=duck_sql(_Q22),
     tags=("B2", "B3", "B4"),
     doc="Q22 shape: wealthy inactive customers by country code (scalar "
     "subquery threshold + NOT EXISTS anti-join).",
 )
 def tpch_q22_global_sales(spark, sf_dir):
-    for n in ("customer", "orders"):
-        t(spark, sf_dir, n).createOrReplaceTempView(n)
-    return spark.sql(
-        """
-        WITH avg_bal AS (
-            SELECT AVG(c_acctbal) AS ab FROM customer WHERE c_acctbal > 0),
-        eligible AS (
-            SELECT c_custkey, c_nationkey % 7 AS cntrycode, c_acctbal
-            FROM customer, avg_bal
-            WHERE c_acctbal > ab
-              AND NOT EXISTS (SELECT 1 FROM orders
-                              WHERE o_custkey = c_custkey AND o_totalprice > 350000))
-        SELECT cntrycode, COUNT(*) AS numcust,
-               CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS totacctbal
-        FROM eligible
-        GROUP BY cntrycode
-        ORDER BY cntrycode
-        """
-    )
+    return table_sql(spark, sf_dir, _Q22)
 
 
 @register(
@@ -618,78 +573,54 @@ def tpch_q9_product_profit(spark, sf_dir):
     )
 
 
+_Q16 = """
+    SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
+    FROM {part} JOIN {lineitem} ON p_partkey = l_partkey
+    WHERE p_brand <> 'Brand#1'
+      AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
+      AND l_suppkey NOT IN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
+    GROUP BY p_brand, p_type, p_size
+    ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+"""
+
+
 @register(
     "tpch_q16_supplier_counts",
-    oracle="""
-        SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        FROM part JOIN lineitem ON p_partkey = l_partkey
-        WHERE p_brand <> 'Brand#1'
-          AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
-          AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        GROUP BY p_brand, p_type, p_size
-        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-    """,
+    oracle=duck_sql(_Q16),
     tags=("B3", "B4"),
     doc="Q16 shape: distinct supplier counts by part attributes with NOT IN "
     "exclusion.",
 )
 def tpch_q16_supplier_counts(spark, sf_dir):
-    for nm in ("part", "lineitem", "supplier"):
-        t(spark, sf_dir, nm).createOrReplaceTempView(nm)
-    return spark.sql(
-        """
-        SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        FROM part JOIN lineitem ON p_partkey = l_partkey
-        WHERE p_brand <> 'Brand#1'
-          AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
-          AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        GROUP BY p_brand, p_type, p_size
-        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-        """
-    )
+    return table_sql(spark, sf_dir, _Q16)
+
+
+_Q21 = """
+    SELECT s_name, COUNT(*) AS numwait
+    FROM {supplier}
+    JOIN {lineitem} l1 ON s_suppkey = l1.l_suppkey
+    JOIN {orders} ON o_orderkey = l1.l_orderkey
+    JOIN {nation} ON s_nationkey = n_nationkey
+    WHERE o_orderstatus = 'F'
+      AND l1.l_shipdate > o_orderdate
+      AND EXISTS (SELECT 1 FROM {lineitem} l2
+                  WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
+      AND n_regionkey <= 2
+    GROUP BY s_name
+    ORDER BY numwait DESC, s_name
+    LIMIT 20
+"""
 
 
 @register(
     "tpch_q21_waiting_suppliers",
-    oracle="""
-        SELECT s_name, COUNT(*) AS numwait
-        FROM supplier
-        JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        JOIN orders ON o_orderkey = l1.l_orderkey
-        JOIN nation ON s_nationkey = n_nationkey
-        WHERE o_orderstatus = 'F'
-          AND l1.l_shipdate > o_orderdate
-          AND EXISTS (SELECT 1 FROM lineitem l2
-                      WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-          AND n_regionkey <= 2
-        GROUP BY s_name
-        ORDER BY numwait DESC, s_name
-        LIMIT 20
-    """,
+    oracle=duck_sql(_Q21),
     tags=("B3", "B4"),
     doc="Q21 shape: suppliers who kept multi-supplier orders waiting "
     "(EXISTS over sibling lineitems).",
 )
 def tpch_q21_waiting_suppliers(spark, sf_dir):
-    for nm in ("supplier", "lineitem", "orders", "nation"):
-        t(spark, sf_dir, nm).createOrReplaceTempView(nm)
-    return spark.sql(
-        """
-        SELECT s_name, COUNT(*) AS numwait
-        FROM supplier
-        JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        JOIN orders ON o_orderkey = l1.l_orderkey
-        JOIN nation ON s_nationkey = n_nationkey
-        WHERE o_orderstatus = 'F'
-          AND l1.l_shipdate > o_orderdate
-          AND EXISTS (SELECT 1 FROM lineitem l2
-                      WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-          AND n_regionkey <= 2
-        GROUP BY s_name
-        ORDER BY numwait DESC, s_name
-        LIMIT 20
-        """
-    )
+    return table_sql(spark, sf_dir, _Q21)
 
 
 @register(

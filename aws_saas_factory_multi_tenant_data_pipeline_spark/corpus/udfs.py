@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus import register
-from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
+from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t, table_sql
 
 
 @register(
@@ -191,15 +191,12 @@ def udf_python_udtf(spark, sf_dir):
                 yield i, p
 
     spark.udtf.register("split_parts", SplitParts)
-    t(spark, sf_dir, "orders").createOrReplaceTempView("__udtf_orders")
-    return spark.sql(
-        """
+    return table_sql(spark, sf_dir, """
         SELECT o.o_orderkey, s.pos, s.part
-        FROM __udtf_orders o, LATERAL split_parts(o.o_orderpriority) s
+        FROM {orders} o, LATERAL split_parts(o.o_orderpriority) s
         WHERE o.o_orderkey <= 2000
         ORDER BY o.o_orderkey, s.pos
-        """
-    )
+    """)
 
 
 @register(

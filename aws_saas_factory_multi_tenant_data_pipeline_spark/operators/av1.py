@@ -425,17 +425,6 @@ def _obu(typ: int, payload: bytes) -> bytes:
     return bytes([(typ << 3) | 0b010]) + _leb128_enc(len(payload)) + payload
 
 
-def build_av1_fixture_stream(width: int, height: int, profile: int = 0,
-                             bit_depth: int = 8,
-                             monochrome: bool = False) -> bytes:
-    """Length-delimited OBU stream: temporal delimiter + sequence
-    header + an opaque frame OBU (the probe never decodes pixels)."""
-    seq = build_sequence_header(width, height, profile, bit_depth,
-                                monochrome)
-    frame = bytes([0x10, 0x00]) + b"\x5a" * 16  # opaque coded payload
-    return _obu(2, b"") + _obu(1, seq) + _obu(6, frame)
-
-
 def build_avif(width: int, height: int, profile: int = 0,
                bit_depth: int = 8, monochrome: bool = False,
                rotation: int = 0) -> bytes:

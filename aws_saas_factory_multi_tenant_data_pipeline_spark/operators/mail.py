@@ -159,10 +159,6 @@ def decode_rfc2047(value: str) -> str:
     return "".join(out)
 
 
-def _split_lines_keepends(data: bytes) -> list[bytes]:
-    return data.splitlines(keepends=True)
-
-
 def parse_headers(data: bytes) -> tuple[list[tuple[str, str]], bytes]:
     """Unfold and split the header block; returns (headers, body).
 

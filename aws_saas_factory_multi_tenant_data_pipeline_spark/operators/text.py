@@ -37,10 +37,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(r"(\p{L}+|\p{N}+|[^\p{L}\p{N}\s])"), 1))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation ratio / stopword ratio / mean word length —
     the standard cheap quality-filter features for LLM corpora.

@@ -14,10 +14,6 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def assert_partition_pruned(df: DataFrame, col: str, value: str) -> None:
     """Physical plan must show a partition filter on (col = value)."""
     plan = formatted_plan(df)

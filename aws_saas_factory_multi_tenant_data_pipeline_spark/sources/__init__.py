@@ -57,12 +57,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_testdata_views(spark: SparkSession, sf_dir: str, tables=TESTDATA_TABLES) -> None:
-    """Register all testdata tables as temp views for spark.sql() queries."""
-    for t in tables:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def read_json_lines(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
     """JSON-lines scan (lake parity with the reference's Firehose output).
 

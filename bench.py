@@ -102,11 +102,10 @@ def _bench_ingest_transform(spark, n_rows: int = 500_000) -> float:
 
 def _bench_calibration(spark) -> float:
     """Fixed constant-work CPU-bound query with NO I/O: 200M xxhash64
-    hashes reduced to one sum. Identical work every round, so its timing
-    is a pure host-contention probe — readers can normalize BENCH_r{N}
-    numbers across rounds by the calibration ratio (see COVERAGE.md).
-    The r6 official number was ~20% host noise on identical plans; this
-    row makes that legible instead of prose."""
+    hashes reduced to one sum. Identical work every run, so its timing
+    is a pure host-contention probe: divide a cross-run query ratio by
+    the calibration ratio to remove host noise (see COVERAGE.md), which
+    can reach ~20% on identical plans."""
     from pyspark.sql import functions as F
 
     t0 = time.time()
@@ -120,12 +119,11 @@ def _bench_calibration(spark) -> float:
 
 def _bench_scaling_probe(spark) -> float:
     """Fixed constant-work CPU-BOUND probe for the driver's core-scaling
-    comparison (r15 verdict #2): 20M rows of chained sha2-256, reduced to
+    comparison: 20M rows of chained sha2-256, reduced to
     one sum — per-row work heavy enough that wall time tracks available
-    CPU, unlike the xxhash calibration row (measured r16: 200M xxhash64
-    reads 0.23 s at BOTH local[8] and local[32] — it is memory/task-
-    overhead-bound, which is exactly why `suspect_cpus_ignored` fired on
-    ratios near 1). This row's 8-vs-32 ratio measures the HARDWARE's
+    CPU, unlike the xxhash calibration row (200M xxhash64 reads 0.23 s at
+    both local[8] and local[32]: it is memory/task-overhead-bound, so its
+    8-vs-32 ratio sits near 1). This row's 8-vs-32 ratio measures the HARDWARE's
     parallel ceiling: on this host it reads ~2.1x (0.71 s @32 vs 1.47 s
     @8) because the 32 vCPUs are 16 physical cores with SMT (20M rows
     cost ~23 cpu-s at 32 threads vs ~12 cpu-s at 8 — the same silicon,
@@ -146,13 +144,12 @@ def gate_is_quiet(attempts: list[float], steals: list[float], best_known: float)
     """Quiet-host decision for the calibration gate (pure; unit-tested).
 
     Quiet iff the LAST probe ran at historical speed (≤ 1.2× best_known
-    — the HARD cap, ~0.133 s on this host's 0.111 s reference). r14
-    (r13 verdict #4): the old stable-probes-with-low-steal escape is
-    GONE — it blessed the r13 official window at calibration 0.164
-    (~1.3× inflation on every query), making round-over-round reads
+    — a hard cap, ~0.133 s on this host's 0.111 s reference). Stable
+    probes do not count as quiet: a stable but slow window (calibration
+    0.164, ~1.3× inflation on every query) would make cross-run reads
     misleading. Genuinely different silicon is declared explicitly via
     SPARK_GRAFT_BEST_CAL, not inferred from stability; a persistently
-    noisy host now fails the gate and the run records host_quiet=false
+    noisy host fails the gate and the run records host_quiet=false
     (the explicit waiver the reader can see)."""
     if not attempts:
         return False
@@ -238,21 +235,18 @@ def main() -> None:
 
     loadavg_before = [round(x, 2) for x in os.getloadavg()]
     # calibration pass 1 (best-of-3, post-warmup): constant-work CPU probe.
-    # Quiet-host gate (r7 verdict #2): if the probe reads >1.2× the best
+    # Quiet-host gate (gate_is_quiet): if the probe reads >1.2× the best
     # known quiet-host value, the host is under co-tenant load — wait and
-    # re-probe (up to 3 retries) so recorded numbers don't need forensic
-    # normalization. The reference value is per-host (this repo's history
-    # was measured on one box: 0.111 s); override via
-    # SPARK_GRAFT_BEST_CAL on different hardware. A STABLE probe (two
-    # consecutive attempts within 5%) also counts as quiet — steady-state
-    # on slower silicon is not contention. If neither holds, proceed but
-    # mark the run.
+    # re-probe so recorded numbers don't need forensic normalization. The
+    # reference value is per-host (0.111 s on the box this repo's numbers
+    # were measured on); override via SPARK_GRAFT_BEST_CAL on different
+    # hardware. If no probe passes, proceed but mark the run.
     best_known = float(os.environ.get("SPARK_GRAFT_BEST_CAL", "0.111"))
 
     def _steal_jiffies() -> tuple[int, int]:
         # (steal, total) jiffies: co-tenant CPU theft is INVISIBLE to
         # loadavg — a 10% steal reading once turned a 0.111 s probe into
-        # 0.5 s on a loadavg-0.4 "idle" box (r8 session)
+        # 0.5 s on a loadavg-0.4 "idle" box
         try:
             f = open("/proc/stat").readline().split()
             return int(f[8]), sum(int(x) for x in f[1:])
@@ -262,10 +256,9 @@ def main() -> None:
     gate_attempts: list[float] = []
     steal_pcts: list[float] = []
     host_quiet = False
-    # r9: the r8 recorded run's gate expired while the host was still
-    # settling from the driver's own prior work (loadavg decaying from
-    # ~2.9; in-run calibrations later passed) — so the budget now
-    # escalates: up to 7 probes over ~5 minutes instead of 4 over ~1.
+    # the budget escalates (up to 7 probes over ~5 minutes): a host still
+    # settling from prior work (loadavg decaying from ~2.9) can take
+    # minutes to pass, and a shorter budget expires before it does
     backoffs = [20, 20, 30, 45, 60, 90]
     max_attempts = int(os.environ.get("SPARK_GRAFT_GATE_ATTEMPTS", "7"))
     for attempt in range(max_attempts):
@@ -305,9 +298,9 @@ def main() -> None:
     # span every pass to poison a timing; pass 1 also absorbs the one-time
     # codegen compile of the heavier plans (the 64-aggregate MinHash plan
     # compiles for ~10 s on first execution, then runs in ~3 s)
-    # r16 (r15 verdict #2): CPU-bound core-scaling anchor, recorded as a
-    # queries row so the driver's 8-vs-32 comparison has a row whose ratio
-    # is the HARDWARE's parallel ceiling (see _bench_scaling_probe).
+    # CPU-bound core-scaling anchor, recorded as a queries row so the
+    # driver's 8-vs-32 comparison has a row whose ratio is the HARDWARE's
+    # parallel ceiling (see _bench_scaling_probe).
     # Measured BEFORE the headline passes: after 42 queries the
     # accumulated JVM state inflates the same constant work ~4x (0.71 s
     # fresh vs ~3.0 s at the tail of the sequence in two separate runs),
@@ -336,16 +329,13 @@ def main() -> None:
     calib.append(round(min(_bench_calibration(spark) for _ in range(3)), 3))
     loadavg_after = [round(x, 2) for x in os.getloadavg()]
 
-    # r10 (r9 verdict #7): isolated minimums for the slowest headliners.
-    # In-sequence numbers after 80+ prior stages carry ~1.5x JVM/GC and
-    # broadcast-accumulation inflation (r9: pagerank 6.28 s in-sequence
-    # vs 4.15 s judge-isolated). A fresh session — caches, broadcasts,
-    # and shuffle state dropped — approximates the isolated re-run
-    # without a new process; both numbers are recorded so round-over-
-    # round comparisons stop paying the in-sequence tax.
-    # r11 (r10 verdict #6): top-5, so dedup_semantic and
-    # lake_branch_wap_roundtrip round-over-round reads also stop paying
-    # the in-sequence tax.
+    # isolated minimums for the five slowest headliners. In-sequence
+    # numbers after 80+ prior stages carry ~1.5x JVM/GC and
+    # broadcast-accumulation inflation (pagerank once read 6.28 s
+    # in-sequence vs 4.15 s isolated). A fresh session — caches,
+    # broadcasts, and shuffle state dropped — approximates the isolated
+    # re-run without a new process; both numbers are recorded so
+    # cross-run comparisons stop paying the in-sequence tax.
     top5 = sorted(
         (n for n in HEADLINE if n in timings), key=lambda n: timings[n], reverse=True
     )[:5]
@@ -358,15 +348,15 @@ def main() -> None:
         best = float("inf")
         for _ in range(3):
             # same cache hygiene as the headline passes: each isolated
-            # repetition recomputes from parquet (r15 verdict #3)
+            # repetition recomputes from parquet
             spark.catalog.clearCache()
             t0 = time.time()
             fn(spark, sf_dir).count()
             best = min(best, time.time() - t0)
         isolated[name] = round(best, 3)
-    # r16 (r15 verdict #6): lake_write has drifted ±50% in-sequence twice
-    # in a row (cold-JVM write-path noise); a pinned fresh-session
-    # isolated minimum adjudicates the next drift by artifact.
+    # the in-sequence lake_write has drifted ±50% between runs (cold-JVM
+    # write-path noise); a pinned fresh-session isolated minimum
+    # adjudicates such a drift by artifact.
     isolated_lake_write = round(min(_bench_lake_write(spark) for _ in range(3)), 3)
 
     out = {
@@ -377,35 +367,33 @@ def main() -> None:
         "sf": sf,
         "cpus": cpus,
         # host-noise normalization (constant work, no I/O): divide any
-        # cross-round query ratio by the calibration ratio to remove host
+        # cross-run query ratio by the calibration ratio to remove host
         # contention; loadavg shows EXTERNAL load (this process pegs ~cpus)
         "calibration": min(calib),
         "calibration_passes": calib,
-        # quiet-host gate (r14 hardening): host_quiet is true ONLY when
-        # a probe reached <=1.2x the best-known quiet value (default
-        # 0.111 s; per-host override SPARK_GRAFT_BEST_CAL) — the old
-        # stable-probes escape is gone (it blessed a 0.164 window in
-        # r13). host_quiet=false marks the run as taken under
-        # contention (see gate_steal_pct); prefer the calibration_passes
-        # spread to judge whether the headline passes themselves ran
-        # quiet (the gate only samples the run's START)
+        # quiet-host gate: host_quiet is true ONLY when a probe reached
+        # <=1.2x the best-known quiet value (default 0.111 s; per-host
+        # override SPARK_GRAFT_BEST_CAL; see gate_is_quiet).
+        # host_quiet=false marks the run as taken under contention (see
+        # gate_steal_pct); prefer the calibration_passes spread to judge
+        # whether the headline passes themselves ran quiet (the gate
+        # only samples the run's START)
         "calibration_gate_attempts": gate_attempts,
         "gate_steal_pct": steal_pcts,
         "host_quiet": host_quiet,
         # the gate samples the run's START; this derives the same 1.2x
         # judgment from the in-run calibration passes that bracket the
-        # headline measurements themselves (r14: a run that starts
-        # contended but settles — 0.147 -> 0.103 — records false/true)
+        # headline measurements themselves (a run that starts contended
+        # but settles — 0.147 -> 0.103 — records false/true)
         "in_run_quiet": min(calib) <= best_known * 1.2,
         # fresh-session min-of-3 for the five slowest headliners (the
         # in-sequence numbers in "queries" carry accumulated JVM state;
         # these are the steady-state engine speeds — compare LIKE WITH
-        # LIKE across rounds). Key kept from r10 ("top3") so readers
-        # diffing BENCH_r10 → r11 see one series; the set is top-5 now.
+        # LIKE across runs)
         "isolated_top5": isolated,
-        # fresh-session min-of-3 for the partitioned write path (r15
-        # verdict #6): the in-sequence lake_write number rides cold-JVM
-        # disk-latency noise; this series is the one to diff across rounds
+        # fresh-session min-of-3 for the partitioned write path: the
+        # in-sequence lake_write number rides cold-JVM disk-latency noise;
+        # this series is the one to diff across runs
         "isolated_lake_write": isolated_lake_write,
         "loadavg_before": loadavg_before,
         "loadavg_after": loadavg_after,

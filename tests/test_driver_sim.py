@@ -68,3 +68,29 @@ def test_package_init_change_selects_every_query_reading_through_util():
     assert through_util <= touched_queries(
         REGISTRY, {os.path.normpath(f"{pkg}/sources/__init__.py")}
     )
+
+
+def test_checked_run_fails_a_query_that_writes_the_session(spark, sf_smoke):
+    """The gate fails a query that sets session conf or leaves a temp view
+    while it runs, and removes the view so the next query is judged on
+    its own."""
+    from aws_saas_factory_multi_tenant_data_pipeline_spark.corpus._util import t
+    from tools.driver_sim import checked_run, temp_views
+
+    def clean(spark, sf):
+        return t(spark, sf, "nation")
+
+    def sets_conf(spark, sf):
+        tz = "spark.sql.session.timeZone"
+        spark.conf.set(tz, spark.conf.get(tz))
+        return clean(spark, sf)
+
+    def leaves_view(spark, sf):
+        clean(spark, sf).createOrReplaceTempView("nation_leak")
+        return spark.table("nation_leak")
+
+    sdf, wrote = checked_run(spark, clean, sf_smoke)
+    assert wrote is None and len(sdf) == 25
+    assert checked_run(spark, sets_conf, sf_smoke)[1] == "set session conf ['spark.sql.session.timeZone']"
+    assert checked_run(spark, leaves_view, sf_smoke)[1] == "left temp views ['nation_leak']"
+    assert "nation_leak" not in temp_views(spark)

@@ -13,9 +13,11 @@ driver runs:
   VALUE  — sorted values differ
   PASS   — byte-identical after canonicalization
 
-A query that leaves a relation in the session's CacheManager fails before
-any comparison: one long-lived session serves every tenant, so nothing a
-query persists may outlive it.
+A query that writes the shared session fails before any comparison: one
+long-lived session serves every tenant, so nothing a query persists or
+names may outlive it, and no query may set session conf while it runs
+(``checked_run``: a cached relation, a temp view, a ``RuntimeConfig``
+``set``/``unset`` call).
 
 Normalization mirrors what r01 results imply the driver does: integer
 widths → Int64, float widths → float64, datetimes → us. It does NOT
@@ -104,6 +106,46 @@ def strict_compare(sdf: pd.DataFrame, ddf: pd.DataFrame) -> str | None:
             i = int(np.argmax(neq.values))
             return f"VALUE: col {c!r} row {i}: spark={av.iloc[i]!r} duck={bv.iloc[i]!r} ({int(neq.sum())} diffs)"
     return None
+
+
+def temp_views(spark) -> set:
+    return {tb.name for tb in spark.catalog.listTables() if tb.isTemporary}
+
+
+def checked_run(spark, fn, sf_dir: str) -> tuple[pd.DataFrame, str | None]:
+    """Run query ``fn`` to pandas; return the frame and what the run wrote
+    into the shared session (None if nothing). Cached relations and temp
+    views it left are removed, so the next query is judged on its own."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    views = temp_views(spark)
+    keys: list[str] = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def spy(real):
+        def record(self, key, *value):
+            keys.append(key)
+            return real(self, key, *value)
+
+        return record
+
+    RuntimeConfig.set, RuntimeConfig.unset = spy(real_set), spy(real_unset)
+    try:
+        sdf = fn(spark, sf_dir).toPandas()
+    finally:
+        RuntimeConfig.set, RuntimeConfig.unset = real_set, real_unset
+    wrote = []
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        wrote.append("left a cached relation")
+        spark.catalog.clearCache()
+    left = sorted(temp_views(spark) - views)
+    if left:
+        wrote.append(f"left temp views {left}")
+        for v in left:
+            spark.catalog.dropTempView(v)
+    if keys:
+        wrote.append(f"set session conf {sorted(set(keys))}")
+    return sdf, "; ".join(wrote) or None
 
 
 def changed_queries(registry, ref: str) -> set:
@@ -259,22 +301,18 @@ def main() -> int:
     con = duck_connect(sf_dir)
     n_pass = n_fail = n_noracle = 0
     failures: list[str] = []
-    cache = spark._jsparkSession.sharedState().cacheManager()
     for name in names:
         spec = registry[name]
         t0 = time.time()
         try:
-            sdf = spec.spark_fn(spark, sf_dir).toPandas()
+            sdf, wrote = checked_run(spark, spec.spark_fn, sf_dir)
         except Exception:
             print(f"FAIL {name}: spark error\n{traceback.format_exc()}")
             failures.append(name)
             n_fail += 1
             continue
-        if not cache.isEmpty():
-            # an operator must leave the shared session's cache as it
-            # found it; clear so the next query is judged on its own
-            print(f"FAIL {name}: left a cached relation")
-            spark.catalog.clearCache()
+        if wrote:
+            print(f"FAIL {name}: {wrote}")
             failures.append(name)
             n_fail += 1
             continue
